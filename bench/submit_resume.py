@@ -79,9 +79,8 @@ def main() -> None:
         tag_a, tag_b = sys.argv[3], sys.argv[4]
         a = spark.read.parquet(os.path.join(workdir, f"out_{tag_a}"))
         b = spark.read.parquet(os.path.join(workdir, f"out_{tag_b}"))
-        rank_a, rank_b = a.columns[-1], b.columns[-1]
-        joined = a.select("vid", F.col(rank_a).alias("ra")).join(
-            b.select("vid", F.col(rank_b).alias("rb")), "vid", "full_outer"
+        joined = a.select("vid", F.col("rank").alias("ra")).join(
+            b.select("vid", F.col("rank").alias("rb")), "vid", "full_outer"
         )
         row = joined.agg(
             F.count("*").alias("n"),
@@ -93,8 +92,11 @@ def main() -> None:
             "mode": "compare", "a": tag_a, "b": tag_b, "rows": row["n"],
             "unmatched": row["unmatched"],
             "max_abs_diff": row["max_abs_diff"],
+            # no joined pair at all (max_abs_diff None) is not a match
             "fixed_point_match": bool(
-                row["unmatched"] == 0 and row["max_abs_diff"] < 1e-6
+                row["unmatched"] == 0
+                and row["max_abs_diff"] is not None
+                and row["max_abs_diff"] < 1e-6
             ),
         }))
     else:

@@ -10,15 +10,16 @@ Layout (one chain per algorithm run):
         metrics.jsonl            # one JSON line per superstep (op 6)
 
 Manifest: {algo, superstep, parent, input_fingerprint, P, n_vertices,
-           per_partition: [{part_id, rows, checksum}], metrics, schema}
-(the default write path records ONE aggregate entry with part_id=-1 —
-rows/checksum over the whole state, computed by an Observation riding the
-parquet-write job; consumers only ever read the row-count sum)
+           per_partition: [{part_id: -1, rows, checksum}], metrics, schema}
+(lineage is ONE aggregate entry — row count + order-insensitive checksum
+over the whole state, computed by an Observation riding the parquet-write
+job; the ``per_partition`` key and its single part_id=-1 entry are kept so
+existing chains still resume)
 
 Atomicity (SURVEY.md §7 trap 7): state parquet + manifest are written into
 ``step_NNNNNN._tmp`` and the directory is renamed into place; the manifest is
 written last inside the tmp dir, so a crash can never leave a complete-looking
-step.  ``latest_complete`` additionally revalidates per-partition row counts
+step.  ``latest_complete`` additionally revalidates the stored row count
 against the parquet it reads back, so a torn write is never resumed from.
 
 This module is the durability surface: ``DataFrame.checkpoint()`` is NOT used
@@ -36,7 +37,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -50,22 +51,6 @@ def input_fingerprint(edges: DataFrame) -> str:
 
 
 _WRITE_OBS_IDS = itertools.count()
-
-
-def _partition_stats(state: DataFrame, state_cols: list[str]) -> list[dict[str, Any]]:
-    """Per-partition row counts + order-insensitive checksums (lineage)."""
-    rows = (
-        state.groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.crc32(F.concat_ws(",", *state_cols))).alias("checksum"),
-        )
-        .collect()
-    )
-    return sorted(
-        ({"part_id": r["part_id"], "rows": r["rows"], "checksum": int(r["checksum"] or 0)} for r in rows),
-        key=lambda d: d["part_id"],
-    )
 
 
 @dataclass
@@ -85,22 +70,14 @@ class CheckpointManager:
     def _step_dir(self, t: int) -> str:
         return os.path.join(self.algo_dir, f"step_{t:06d}")
 
-    def write(
-        self,
-        t: int,
-        state: DataFrame,
-        metrics: dict[str, Any],
-        per_partition: list[dict] | None = None,
-    ) -> list[dict]:
+    def write(self, t: int, state: DataFrame, metrics: dict[str, Any]) -> list[dict]:
         """Durably persist superstep t's state; returns lineage stats.
 
-        ``per_partition`` lets the runner supply stats it already computed in
-        its combined convergence job.  When it is None the row count and
-        order-insensitive checksum ride the parquet-write job itself as an
-        ``Observation`` (one aggregate record, ``part_id=-1``) instead of a
-        separate ``_partition_stats`` job — the durable write costs exactly
-        ONE Spark action per superstep (guide §1.5: every consumer of the
-        manifest only ever reads the row-count SUM)."""
+        The row count and order-insensitive checksum ride the parquet-write
+        job itself as an ``Observation`` (one aggregate record,
+        ``part_id=-1``) — the durable write costs exactly ONE Spark action
+        per superstep (every consumer of the manifest only ever reads the
+        row-count SUM)."""
         os.makedirs(self.algo_dir, exist_ok=True)
         tmp = self._step_dir(t) + "._tmp"
         final = self._step_dir(t)
@@ -108,29 +85,20 @@ class CheckpointManager:
             import shutil
 
             shutil.rmtree(tmp)
-        out = state.select(*self.state_cols)
-        obs = None
-        if per_partition is None:
-            from pyspark.sql import Observation
-
-            obs = Observation(f"ckpt-{self.algo}-{t}-{next(_WRITE_OBS_IDS)}")
-            out = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.crc32(F.concat_ws(",", *self.state_cols))).alias("checksum"),
-            )
-        out.write.mode("overwrite").parquet(os.path.join(tmp, "state"))
-        if obs is not None:
-            row = obs.get
-            stats = [
-                {
-                    "part_id": -1,
-                    "rows": int(row["rows"] or 0),
-                    "checksum": int(row["checksum"] or 0),
-                }
-            ]
-        else:
-            stats = per_partition
+        obs = Observation(f"ckpt-{self.algo}-{t}-{next(_WRITE_OBS_IDS)}")
+        state.select(*self.state_cols).observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.crc32(F.concat_ws(",", *self.state_cols))).alias("checksum"),
+        ).write.mode("overwrite").parquet(os.path.join(tmp, "state"))
+        row = obs.get
+        stats = [
+            {
+                "part_id": -1,
+                "rows": int(row["rows"] or 0),
+                "checksum": int(row["checksum"] or 0),
+            }
+        ]
         manifest = {
             "algo": self.algo,
             "superstep": t,
@@ -172,8 +140,8 @@ class CheckpointManager:
         """Newest superstep whose manifest chain validates (resume point).
 
         A step counts as complete iff: manifest exists, fingerprint matches,
-        parquet _SUCCESS marker exists, and stored per-partition row counts
-        sum to the parquet row count.  Walks downward so a torn newest step
+        parquet _SUCCESS marker exists, and the stored lineage row count
+        equals the parquet row count.  Walks downward so a torn newest step
         falls back to its parent (= lineage chain).  ``max_t`` caps the
         resume point (fixed-iteration runs must not resume past step k)."""
         if not os.path.isdir(self.algo_dir):

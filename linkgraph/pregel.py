@@ -10,11 +10,26 @@ Arrow-batched cogrouped pandas UDFs — zero per-row Python):
               partition, then cogroup(msgs, state) on part_id finalizes the
               aggregation AND the state update in a single numpy pass
               (dense residue-class indexing, no join)
-    stats   : per-partition agg collected to one driver row (convergence /
-              change count + checkpoint lineage, same job)
+    stats   : global aggregates observed on the state-materialization job
+              (convergence / change count; no extra job)
     persist : checkpoint write + read-back (durable, truncates lineage) or
               localCheckpoint (ephemeral) — either way the plan for t+1 is
               one superstep deep (op 54)
+
+One skeleton, ``VertexProgram.superstep``, runs that shape for every program
+(the two cogroups, empty partitions, dense state reads, output assembly and
+the hub-split messages).  A program declares ``state_cols``/``init_state``,
+``apply_schema`` (state + one stat column), ``msg_types``, ``uses_undirected``
+and two numpy kernels, both staticmethods closing over plain scalars only:
+
+    scatter(blk, st) -> (udst, {payload: array}) | None
+        blk(name): CSR block column; st(col): source state, dense by (vid-p)//P
+    apply(st, nloc, loc, m, **step_params) -> {column: array}
+        loc/m[payload]: flat incoming messages (typed empties if none)
+
+Hub edges (op 47) are messaged by ``hub_payload()`` Column expressions:
+off the static pack for dense programs, or, when ``hub_frontier()``
+returns a predicate, through a broadcast join of the active hub senders.
 
 Per superstep the ONLY full-width exchange is the message shuffle; the old
 form's groupBy(dst) exchange + state equi-join (two more shuffles of |V|..
@@ -28,21 +43,37 @@ by the naive (non-CSR) paths.
 
 from __future__ import annotations
 
+import contextlib
 import decimal
+import functools
 import itertools
+import threading
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointManager, input_fingerprint
 from .csr import build_csr_blocks, symmetrize
 from .derive import GraphTables
 from .skew import split_hub_edges
+
+
+@contextlib.contextmanager
+def aqe_off(spark: SparkSession):
+    """Disable adaptive query execution for the block, then restore the
+    session's previous value (also when the block raises)."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 @dataclass
@@ -122,19 +153,7 @@ class GraphContext:
         execute the graph derivation and fill the persist caches) keeps AQE
         ON: measured ~20-30%% faster with adaptive coalescing/broadcasts,
         and nothing it materializes is consumed by the superstep loop."""
-        return GraphContext._build_inner(
-            graph, P, hub_theta, hub_floor, graph.edges.sparkSession
-        )
-
-    @staticmethod
-    def _build_inner(
-        graph: GraphTables,
-        P: int,
-        hub_theta: int | None,
-        hub_floor: int,
-        spark: SparkSession,
-    ) -> "GraphContext":
-        import threading
+        spark = graph.edges.sparkSession
         # cache the derivation once: vertices/edges plans are embedded in
         # every downstream table (degrees, blocks, fingerprint).  persist()
         # is lazy — the caches FILL as a side effect of the two jobs below
@@ -382,15 +401,11 @@ class GraphContext:
         # captured LogicalRDD leaves keep hashpartitioning(part_id, P) — see
         # the build() docstring.  (Session conf is driver-global; the build
         # owns the session for this window, exactly like run_program's loop.)
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with aqe_off(spark):
             for th in threads:
                 th.start()
             for th in threads:
                 th.join()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
         if errs:
             raise errs[0]
 
@@ -426,14 +441,22 @@ def _block_np(left: "pa.Table", name: str) -> np.ndarray:
     return np.asarray(left[name].combine_chunks().values)
 
 
-def _dense_state(state: "pa.Table", col: str, p: int, P: int) -> tuple[np.ndarray, int]:
-    """State column in residue-class-dense order + class size."""
-    nloc = state.num_rows
+def _dense_state(state: "pa.Table", col: str, p: int, P: int) -> np.ndarray:
+    """State column in residue-class-dense order (index (vid - p) // P)."""
     loc = (_pa_np(state["vid"]) - p) // P
     vals = _pa_np(state[col])
-    arr = np.zeros(nloc, dtype=vals.dtype)
+    arr = np.zeros(state.num_rows, dtype=vals.dtype)
     arr[loc] = vals
-    return arr, nloc
+    return arr
+
+
+# Spark DDL type name -> Arrow type, for the schemas vertex programs declare
+_ARROW = {"long": pa.int64(), "int": pa.int32(), "double": pa.float64(), "boolean": pa.bool_()}
+
+
+def _ddl_fields(schema: str) -> list[tuple[str, str]]:
+    """``"vid long, rank double"`` -> ``[("vid", "long"), ("rank", "double")]``."""
+    return [tuple(f.split()) for f in schema.split(",")]
 
 
 def _packed_msgs(P: int, udst: np.ndarray, payloads: dict[str, np.ndarray]) -> "pa.Table":
@@ -453,41 +476,14 @@ def _packed_msgs(P: int, udst: np.ndarray, payloads: dict[str, np.ndarray]) -> "
     return pa.table(cols)
 
 
-def _empty_packed(payloads: dict[str, "pa.DataType"]) -> "pa.Table":
+def _empty_packed(msg_types: dict[str, str]) -> "pa.Table":
     cols = {
         "part_id": pa.array([], pa.int32()),
         "dst": pa.array([], pa.list_(pa.int64())),
     }
-    for name, typ in payloads.items():
-        cols[name] = pa.array([], pa.list_(typ))
+    for name, typ in msg_types.items():
+        cols[name] = pa.array([], pa.list_(_ARROW[typ]))
     return pa.table(cols)
-
-
-def _make_hub_packer(payload_names: tuple[str, ...]):
-    """groupBy(part_id).applyInArrow packer factory: per-edge hub message
-    rows of one destination partition -> one packed array row (same wire
-    format as _packed_msgs, so hub messages union with block messages).
-    Works for any payload column set (msum / mmin / label+cnt)."""
-
-    def pack(key: tuple, tbl: pa.Table) -> pa.Table:
-        # NOTE: the (key, table) type hints are load-bearing — PySpark
-        # 4.1.2's GroupedData.applyInArrow raises UnboundLocalError if hint
-        # inference fails (group_ops.py:936).
-        p = key[0].as_py()
-        dst = _pa_np(tbl["dst"])
-        offs = pa.array(np.array([0, len(dst)], dtype=np.int32))
-        cols: dict[str, object] = {
-            "part_id": pa.array(np.array([p], dtype=np.int32)),
-            "dst": pa.ListArray.from_arrays(offs, pa.array(dst)),
-        }
-        for name in payload_names:
-            cols[name] = pa.ListArray.from_arrays(offs, pa.array(_pa_np(tbl[name])))
-        return pa.table(cols)
-
-    return pack
-
-
-_pack_hub_rows = _make_hub_packer(("msum",))
 
 
 def _prepack_hub(hub_edges: DataFrame, P: int, payload: tuple[str, ...]) -> DataFrame:
@@ -535,12 +531,9 @@ def _hub_state_map(state: DataFrame, hub_vids: DataFrame, col: str) -> DataFrame
 def _pack_hub_jvm(hub_rows, payload: tuple[str, ...]):
     """JVM-side hub message packer: per destination partition, one packed
     array row in the same wire format as ``_packed_msgs`` — collect_list of
-    (dst, payload...) structs, unzipped with ``transform``.  Replaces the
-    ``applyInArrow`` packer in every superstep hub path: same single
-    shuffle on part_id, but no Python worker round trip, which is the bulk
-    of the hub split's fixed per-superstep overhead at small scale (the
-    Arrow packer remains for reference in _make_hub_packer, still used by
-    nothing on the hot path)."""
+    (dst, payload...) structs, unzipped with ``transform``.  Packing in the
+    JVM spares the hub path a Python worker round trip, which would be the
+    bulk of the hub split's fixed per-superstep overhead at small scale."""
     z = F.collect_list(F.struct(F.col("dst"), *[F.col(c) for c in payload]))
 
     def _field(name):
@@ -560,16 +553,182 @@ def _pack_hub_jvm(hub_rows, payload: tuple[str, ...]):
 
 
 # --------------------------------------------------------------------------
+# the shared superstep
+# --------------------------------------------------------------------------
+
+def _scatter_udf(kernel, P: int, msg_types: dict[str, str]):
+    """Source-side cogroup UDF around a program's ``scatter`` kernel: one CSR
+    block + its co-partitioned state in, packed partial messages out."""
+
+    def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
+        # NOTE: the (key, table...) type hints are load-bearing — PySpark
+        # 4.1.2's applyInArrow raises UnboundLocalError if hint inference
+        # fails (group_ops.py:936).
+        if left.num_rows and right.num_rows:
+            p = left["part_id"][0].as_py()
+            out = kernel(
+                lambda name: _block_np(left, name),
+                lambda col: _dense_state(right, col, p, P),
+            )
+            if out is not None:
+                return _packed_msgs(P, *out)
+        return _empty_packed(msg_types)
+
+    return scatter
+
+
+def _apply_udf(kernel, P: int, schema: str, msg_types: dict[str, str]):
+    """Destination-side cogroup UDF around a program's ``apply`` kernel: the
+    packed messages of one partition + its state in, new state out (dense
+    residue-class indexing, no join).  A partition without messages hands
+    the kernel typed empty arrays, so kernels have no empty branch."""
+    fields = _ddl_fields(schema)
+    no_msgs = {n: np.empty(0, _ARROW[t].to_pandas_dtype()) for n, t in msg_types.items()}
+
+    def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
+        p, nloc = key[0].as_py(), state.num_rows
+        if nloc == 0:
+            return pa.table({n: pa.array([], _ARROW[t]) for n, t in fields})
+        loc, m = np.empty(0, np.int64), no_msgs
+        if msgs.num_rows:
+            loc = (_pa_flat(msgs, "dst") - p) // P
+            m = {n: _pa_flat(msgs, n) for n in msg_types}
+        out = kernel(lambda col: _dense_state(state, col, p, P), nloc, loc, m)
+        out["vid"] = p + np.arange(nloc, dtype=np.int64) * P
+        out["part_id"] = np.full(nloc, p, np.int32)
+        return pa.table({n: pa.array(out[n]) for n, _ in fields})
+
+    return apply
+
+
+class VertexProgram:
+    """One vertex-centric superstep shared by every program (see the module
+    docstring for the kernel contract).  Subclasses declare ``name``,
+    ``state_cols``, ``apply_schema`` (state_cols + one stat column, Spark
+    DDL), ``msg_types`` (payload column -> DDL type), ``uses_undirected``,
+    ``hub_col`` and the ``scatter``/``apply`` staticmethod kernels."""
+
+    uses_undirected = False
+    hub_col: str | None = None
+
+    def step_params(self, ctx: GraphContext, state: DataFrame, carry: dict | None) -> dict:
+        """Plain scalars bound into the apply kernel for this superstep."""
+        return {}
+
+    def hub_payload(self) -> dict:
+        """Per-edge hub message columns.  Pack mode: evaluated on the static
+        pack (``src``/``coeff``/``w`` arrays, ``_m`` the vid->``hub_col``
+        map).  Frontier mode: evaluated per hub edge row joined with the
+        sender's ``hub_col``."""
+        raise NotImplementedError
+
+    def hub_frontier(self):
+        """None: dense program, hub messages come from the static pack.
+        Otherwise the Column predicate selecting the hub senders that
+        message out (broadcast-join path)."""
+        return None
+
+    def stat_exprs(self):
+        return [F.sum("_changed").alias("changes")]
+
+    def done(self, stats: dict) -> bool:
+        return stats["changes"] == 0
+
+    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
+        apply = functools.partial(self.apply, **self.step_params(ctx, state, carry))
+        if self.uses_undirected:
+            blocks, hub_edges, hub_vids, hub_pack = (
+                ctx.ublocks, ctx.uhub_edges, ctx.uhub_vids, ctx.uhub_pack,
+            )
+        else:
+            blocks, hub_edges, hub_vids, hub_pack = (
+                ctx.blocks, ctx.hub_edges, ctx.hub_vids, ctx.hub_pack,
+            )
+        packed_schema = ", ".join(
+            ["part_id int", "dst array<long>"]
+            + [f"{n} array<{t}>" for n, t in self.msg_types.items()]
+        )
+        msgs = (
+            blocks.groupby("part_id")
+            .cogroup(state.groupby("part_id"))
+            .applyInArrow(_scatter_udf(self.scatter, ctx.P, self.msg_types), packed_schema)
+        )
+        if hub_edges is not None:
+            # op 47: hub adjacency lives outside the CSR blocks; its messages
+            # join the block messages in the same packed wire format.
+            payload = [col.alias(n) for n, col in self.hub_payload().items()]
+            frontier = self.hub_frontier()
+            if frontier is None:
+                # dense: static pack per destination partition (built once)
+                # + a broadcast vid->state map over the tiny hub set — the hub
+                # edge set never re-shuffles in the loop.
+                m = _hub_state_map(state, hub_vids, self.hub_col)
+                hub_msgs = hub_pack.crossJoin(F.broadcast(m)).select(
+                    "part_id", "dst", *payload
+                )
+            else:
+                # frontier-sparse: only active hub senders are broadcast-
+                # joined onto their edges, then packed JVM-side.
+                hub_state = (
+                    state.where(frontier)
+                    .join(F.broadcast(hub_vids), "vid")
+                    .select(F.col("vid").alias("src"), *filter(None, [self.hub_col]))
+                )
+                hub_rows = hub_edges.join(F.broadcast(hub_state), "src").select(
+                    F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
+                    "dst",
+                    *payload,
+                )
+                hub_msgs = _pack_hub_jvm(hub_rows, tuple(self.msg_types))
+            msgs = msgs.unionByName(hub_msgs)
+        # ONE shuffle: packed message rows to their destination partition;
+        # the cogroup finalizes the combine + state update in numpy (no
+        # groupBy(dst), no join, no per-row shuffle records).
+        return (
+            msgs.groupby("part_id")
+            .cogroup(state.groupby("part_id"))
+            .applyInArrow(
+                _apply_udf(apply, ctx.P, self.apply_schema, self.msg_types),
+                self.apply_schema,
+            )
+        )
+
+
+def _monotone_apply(col: str, msg: str, ufunc, identity):
+    """Apply kernel of an idempotent semiring combine (min / max / or): fold
+    the messages with ``ufunc`` from ``identity``, then into the old value."""
+
+    def apply(st, nloc, loc, m):
+        old = st(col)
+        acc = np.full(nloc, identity)
+        ufunc.at(acc, loc, m[msg])
+        new = ufunc(old, acc)
+        return {col: new, "_changed": (new != old).astype(np.int64)}
+
+    return apply
+
+
+# --------------------------------------------------------------------------
 # vertex programs
 # --------------------------------------------------------------------------
 
-class PageRankProgram:
+def _weighted_sum_scatter(blk, st, wcol: str):
+    """rank(u) * weight(u, v), summed per block-local destination."""
+    udst = blk("udst")
+    contrib = np.repeat(st("rank"), np.diff(blk("indptr"))) * blk(wcol)
+    return udst, {"msum": np.bincount(blk("e2u"), weights=contrib, minlength=len(udst))}
+
+
+class PageRankProgram(VertexProgram):
     """Weighted PageRank w/ uniform dangling redistribution (op 48)."""
 
     name = "pagerank"
     state_cols = ["vid", "part_id", "dangling", "rank"]
     apply_schema = "vid long, part_id int, dangling boolean, rank double, _delta double"
-    uses_undirected = False
+    msg_types = {"msum": "double"}
+    hub_col = "rank"
+    scatter = staticmethod(functools.partial(_weighted_sum_scatter, wcol="coeff"))
+    hub_weight = "coeff"  # hub pack column matching the block's coeff
 
     def __init__(self, d: float = 0.85, tol: float = 1e-6):
         self.d, self.tol = d, tol
@@ -577,59 +736,12 @@ class PageRankProgram:
     def init_state(self, ctx: GraphContext) -> DataFrame:
         return ctx.vertex_base.withColumn("rank", F.lit(1.0 / ctx.n_vertices))
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            if left.num_rows == 0 or right.num_rows == 0:
-                return _empty_packed({"msum": pa.float64()})
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            coeff = _block_np(left, "coeff")
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            rank, _ = _dense_state(right, "rank", p, P)
-            contrib = np.repeat(rank, np.diff(indptr)) * coeff
-            partial = np.bincount(e2u, weights=contrib, minlength=len(udst))
-            return _packed_msgs(P, udst, {"msum": partial})
+    def hub_payload(self) -> dict:
+        return {
+            "msum": F.zip_with("src", self.hub_weight, lambda s, c: F.col("_m")[s] * c)
+        }
 
-        return scatter
-
-    def make_apply(self, P: int, n: int, dmass: float):
-        d = self.d
-
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "dangling": pa.array([], pa.bool_()),
-                        "rank": pa.array([], pa.float64()),
-                        "_delta": pa.array([], pa.float64()),
-                    }
-                )
-            rank_old, _ = _dense_state(state, "rank", p, P)
-            dang, _ = _dense_state(state, "dangling", p, P)
-            msum = np.zeros(nloc)
-            if msgs.num_rows:
-                dstf = _pa_flat(msgs, "dst")
-                msumf = _pa_flat(msgs, "msum")
-                msum = np.bincount((dstf - p) // P, weights=msumf, minlength=nloc)
-            rank_new = (1.0 - d) / n + d * (msum + dmass / n)
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "dangling": pa.array(dang),
-                    "rank": pa.array(rank_new),
-                    "_delta": pa.array(np.abs(rank_new - rank_old)),
-                }
-            )
-
-        return apply
-
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        d, n = self.d, ctx.n_vertices
+    def _dangling_mass(self, state: DataFrame, carry: dict | None) -> float:
         # dangling mass of state_{t-1}: carried from the previous superstep's
         # stats row (saves one job per superstep); computed directly only on
         # the first superstep after init/resume.
@@ -641,71 +753,36 @@ class PageRankProgram:
         # Decimal addition is exact, hence order-independent; float() of
         # the exact total is one deterministic rounding.
         if carry is not None and "dangling_mass" in carry:
-            dmass = float(carry["dangling_mass"] or 0.0)
-        else:
-            dmass = float(
-                state.where("dangling")
-                .agg(F.sum(F.col("rank").cast("decimal(38,25)")))
-                .collect()[0][0]
-                or 0.0
-            )
-        packed_schema = "part_id int, dst array<long>, msum array<double>"
-        msgs = (
-            ctx.blocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
+            return float(carry["dangling_mass"] or 0.0)
+        return float(
+            state.where("dangling")
+            .agg(F.sum(F.col("rank").cast("decimal(38,25)")))
+            .collect()[0][0]
+            or 0.0
         )
-        if ctx.hub_pack is not None:
-            # op 47: hub adjacency pre-packed per destination partition at
-            # build time (guide §2.3/§2.4) — per superstep only a vid->rank
-            # map over the tiny hub set is broadcast; the per-edge products
-            # are a JVM zip_with over the static pack, already in the packed
-            # wire format, so the hub edge set never re-shuffles in the loop.
-            m = _hub_state_map(state, ctx.hub_vids, "rank")
-            hub_msgs = ctx.hub_pack.crossJoin(F.broadcast(m)).select(
-                "part_id",
-                "dst",
-                F.zip_with(
-                    "src", "coeff", lambda s, c: F.col("_m")[s] * c
-                ).alias("msum"),
-            )
-            msgs = msgs.unionByName(hub_msgs)
-        elif ctx.hub_edges is not None:
-            # fallback for contexts built without a pack: hub adjacency
-            # scattered by broadcast-join + per-superstep JVM packer.
-            hub_state = state.join(F.broadcast(ctx.hub_vids), "vid").select(
-                F.col("vid").alias("src"), "rank"
-            )
-            hub_rows = ctx.hub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                (F.col("rank") * F.col("coeff")).alias("msum"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("msum",))
-            msgs = msgs.unionByName(hub_msgs)
-        # ONE shuffle: packed message rows to their destination partition;
-        # the cogroup finalizes sum + rank update in numpy (no groupBy(dst),
-        # no join, no per-row shuffle records).
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_apply(ctx.P, n, dmass), self.apply_schema)
-        )
+
+    def step_params(self, ctx, state, carry) -> dict:
+        return {"d": self.d, "n": ctx.n_vertices, "dmass": self._dangling_mass(state, carry)}
+
+    @staticmethod
+    def apply(st, nloc, loc, m, d, n, dmass):
+        rank_old = st("rank")
+        msum = np.bincount(loc, weights=m["msum"], minlength=nloc)
+        rank_new = (1.0 - d) / n + d * (msum + dmass / n)
+        return {"dangling": st("dangling"), "rank": rank_new, "_delta": np.abs(rank_new - rank_old)}
 
     def stat_exprs(self):
         return [
             F.max("_delta").alias("delta"),
             F.sum("rank").alias("rank_sum"),
-            # decimal: exact, order-independent — see the dmass comment in
-            # superstep(); this value is consumed as next step's dmass.
+            # decimal: exact, order-independent — see _dangling_mass(); this
+            # value is consumed as next step's dmass.
             F.sum(
                 F.when(F.col("dangling"), F.col("rank"))
                 .otherwise(F.lit(0.0))
                 .cast("decimal(38,25)")
             ).alias("dangling_mass"),
         ]
-
-    stat_reducers = {"delta": max, "rank_sum": sum, "dangling_mass": sum}
 
     def done(self, stats: dict) -> bool:
         return stats["delta"] < self.tol
@@ -754,146 +831,44 @@ class PersonalizedPageRankProgram(PageRankProgram):
             .select(*self.state_cols)
         )
 
-    def make_apply(self, P: int, n: int, dmass: float):
-        d = self.d
+    def step_params(self, ctx, state, carry) -> dict:
+        return {"d": self.d, "dmass": self._dangling_mass(state, carry)}
 
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "dangling": pa.array([], pa.bool_()),
-                        "rank": pa.array([], pa.float64()),
-                        "sw": pa.array([], pa.float64()),
-                        "_delta": pa.array([], pa.float64()),
-                    }
-                )
-            rank_old, _ = _dense_state(state, "rank", p, P)
-            dang, _ = _dense_state(state, "dangling", p, P)
-            sw, _ = _dense_state(state, "sw", p, P)
-            msum = np.zeros(nloc)
-            if msgs.num_rows:
-                dstf = _pa_flat(msgs, "dst")
-                msumf = _pa_flat(msgs, "msum")
-                msum = np.bincount((dstf - p) // P, weights=msumf, minlength=nloc)
-            rank_new = (1.0 - d) * sw + d * (msum + dmass * sw)
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "dangling": pa.array(dang),
-                    "rank": pa.array(rank_new),
-                    "sw": pa.array(sw),
-                    "_delta": pa.array(np.abs(rank_new - rank_old)),
-                }
-            )
-
-        return apply
+    @staticmethod
+    def apply(st, nloc, loc, m, d, dmass):
+        rank_old, sw = st("rank"), st("sw")
+        msum = np.bincount(loc, weights=m["msum"], minlength=nloc)
+        rank_new = (1.0 - d) * sw + d * (msum + dmass * sw)
+        return {
+            "dangling": st("dangling"), "rank": rank_new, "sw": sw,
+            "_delta": np.abs(rank_new - rank_old),
+        }
 
 
-class ComponentsProgram:
+class ComponentsProgram(VertexProgram):
     """Connected components via hash-min label propagation (op 49)."""
 
     name = "components"
     state_cols = ["vid", "part_id", "comp"]
+    apply_schema = "vid long, part_id int, comp long, _changed long"
+    msg_types = {"mmin": "long"}
     uses_undirected = True
+    hub_col = "comp"
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
         return ctx.vertex_base.select("vid", "part_id", F.col("vid").alias("comp"))
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            if left.num_rows == 0 or right.num_rows == 0:
-                return _empty_packed({"mmin": pa.int64()})
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            comp, _ = _dense_state(right, "comp", p, P)
-            comp_rep = np.repeat(comp, np.diff(indptr))
-            partial = np.full(len(udst), np.iinfo(np.int64).max, dtype=np.int64)
-            np.minimum.at(partial, e2u, comp_rep)
-            return _packed_msgs(P, udst, {"mmin": partial})
-
-        return scatter
-
     @staticmethod
-    def make_apply(P: int):
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "comp": pa.array([], pa.int64()),
-                        "_changed": pa.array([], pa.int64()),
-                    }
-                )
-            comp_old, _ = _dense_state(state, "comp", p, P)
-            mmin = np.full(nloc, np.iinfo(np.int64).max, np.int64)
-            if msgs.num_rows:
-                mloc = (_pa_flat(msgs, "dst") - p) // P
-                np.minimum.at(mmin, mloc, _pa_flat(msgs, "mmin"))
-            comp_new = np.minimum(comp_old, mmin)
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "comp": pa.array(comp_new),
-                    "_changed": pa.array((comp_new < comp_old).astype(np.int64)),
-                }
-            )
+    def scatter(blk, st):
+        udst = blk("udst")
+        partial = np.full(len(udst), np.iinfo(np.int64).max, dtype=np.int64)
+        np.minimum.at(partial, blk("e2u"), np.repeat(st("comp"), np.diff(blk("indptr"))))
+        return udst, {"mmin": partial}
 
-        return apply
+    apply = staticmethod(_monotone_apply("comp", "mmin", np.minimum, np.iinfo(np.int64).max))
 
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        packed_schema = "part_id int, dst array<long>, mmin array<long>"
-        msgs = (
-            ctx.ublocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
-        )
-        if ctx.uhub_pack is not None:
-            # op 47 on the undirected side: static pre-packed hub adjacency +
-            # broadcast vid->comp map (see PageRankProgram.superstep).
-            m = _hub_state_map(state, ctx.uhub_vids, "comp")
-            hub_msgs = ctx.uhub_pack.crossJoin(F.broadcast(m)).select(
-                "part_id",
-                "dst",
-                F.transform("src", lambda s: F.col("_m")[s]).alias("mmin"),
-            )
-            msgs = msgs.unionByName(hub_msgs)
-        elif ctx.uhub_edges is not None:
-            # fallback: broadcast-join scatter + per-superstep JVM packer.
-            hub_state = state.join(F.broadcast(ctx.uhub_vids), "vid").select(
-                F.col("vid").alias("src"), "comp"
-            )
-            hub_rows = ctx.uhub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                F.col("comp").alias("mmin"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("mmin",))
-            msgs = msgs.unionByName(hub_msgs)
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(
-                self.make_apply(ctx.P),
-                "vid long, part_id int, comp long, _changed long",
-            )
-        )
-
-    def stat_exprs(self):
-        return [F.sum("_changed").alias("changes")]
-
-    stat_reducers = {"changes": sum}
-
-    def done(self, stats: dict) -> bool:
-        return stats["changes"] == 0
+    def hub_payload(self) -> dict:
+        return {"mmin": F.transform("src", lambda s: F.col("_m")[s])}
 
 
 BFS_INF = np.int64(1) << 62  # "unreached"; +1 cannot overflow int64
@@ -913,104 +888,27 @@ class KatzProgram(PageRankProgram):
     double summation-order noise at gate scale)."""
 
     name = "katz"
+    # RAW w, not coeff, on both the blocks and the hub pack
+    scatter = staticmethod(functools.partial(_weighted_sum_scatter, wcol="weights"))
+    hub_weight = "w"
 
     def __init__(self, alpha: float = 0.01, beta: float = 1.0, tol: float = 1e-6):
         self.alpha, self.beta, self.tol = alpha, beta, tol
-        self.d = alpha  # unused by the overrides; kept for base-attr parity
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
         return ctx.vertex_base.withColumn("rank", F.lit(self.beta))
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            if left.num_rows == 0 or right.num_rows == 0:
-                return _empty_packed({"msum": pa.float64()})
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            weights = _block_np(left, "weights")  # RAW w, not coeff
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            rank, _ = _dense_state(right, "rank", p, P)
-            contrib = np.repeat(rank, np.diff(indptr)) * weights
-            partial = np.bincount(e2u, weights=contrib, minlength=len(udst))
-            return _packed_msgs(P, udst, {"msum": partial})
+    def step_params(self, ctx, state, carry) -> dict:
+        return {"alpha": self.alpha, "beta": self.beta}
 
-        return scatter
-
-    def make_apply(self, P: int, n: int, dmass: float):
-        alpha, beta = self.alpha, self.beta
-
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "dangling": pa.array([], pa.bool_()),
-                        "rank": pa.array([], pa.float64()),
-                        "_delta": pa.array([], pa.float64()),
-                    }
-                )
-            rank_old, _ = _dense_state(state, "rank", p, P)
-            dang, _ = _dense_state(state, "dangling", p, P)
-            msum = np.zeros(nloc)
-            if msgs.num_rows:
-                dstf = _pa_flat(msgs, "dst")
-                msumf = _pa_flat(msgs, "msum")
-                msum = np.bincount((dstf - p) // P, weights=msumf, minlength=nloc)
-            rank_new = beta + alpha * msum
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "dangling": pa.array(dang),
-                    "rank": pa.array(rank_new),
-                    "_delta": pa.array(np.abs(rank_new - rank_old)),
-                }
-            )
-
-        return apply
-
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        packed_schema = "part_id int, dst array<long>, msum array<double>"
-        msgs = (
-            ctx.blocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
-        )
-        if ctx.hub_pack is not None:
-            # hub scatter on the RAW weight off the static pack (the pack
-            # carries both coeff and w — skew.split_hub_edges)
-            m = _hub_state_map(state, ctx.hub_vids, "rank")
-            hub_msgs = ctx.hub_pack.crossJoin(F.broadcast(m)).select(
-                "part_id",
-                "dst",
-                F.zip_with("src", "w", lambda s, w: F.col("_m")[s] * w).alias("msum"),
-            )
-            msgs = msgs.unionByName(hub_msgs)
-        elif ctx.hub_edges is not None:
-            # fallback: broadcast-join scatter + per-superstep JVM packer.
-            hub_state = state.join(F.broadcast(ctx.hub_vids), "vid").select(
-                F.col("vid").alias("src"), "rank"
-            )
-            hub_rows = ctx.hub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                (F.col("rank") * F.col("w")).alias("msum"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("msum",))
-            msgs = msgs.unionByName(hub_msgs)
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_apply(ctx.P, ctx.n_vertices, 0.0), self.apply_schema)
-        )
+    @staticmethod
+    def apply(st, nloc, loc, m, alpha, beta):
+        rank_old = st("rank")
+        rank_new = beta + alpha * np.bincount(loc, weights=m["msum"], minlength=nloc)
+        return {"dangling": st("dangling"), "rank": rank_new, "_delta": np.abs(rank_new - rank_old)}
 
     def stat_exprs(self):
         return [F.max("_delta").alias("delta"), F.sum("rank").alias("rank_sum")]
-
-    stat_reducers = {"delta": max, "rank_sum": sum}
 
 
 class EigenvectorProgram(KatzProgram):
@@ -1034,7 +932,7 @@ class EigenvectorProgram(KatzProgram):
         return ctx.vertex_base.withColumn("rank", F.lit(1.0))
 
 
-class BFSProgram:
+class BFSProgram(VertexProgram):
     """Multi-source BFS hop distance over the undirected simple graph.
 
     Min-plus propagation on the same CSR blocks as ComponentsProgram:
@@ -1047,7 +945,10 @@ class BFSProgram:
 
     name = "bfs"
     state_cols = ["vid", "part_id", "dist"]
+    apply_schema = "vid long, part_id int, dist long, _changed long"
+    msg_types = {"mmin": "long"}
     uses_undirected = True
+    hub_col = "dist"
 
     def __init__(self, source_vids: DataFrame):
         """``source_vids``: one-column (vid) DataFrame of BFS sources."""
@@ -1067,87 +968,24 @@ class BFSProgram:
             )
         )
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            empty = _empty_packed({"mmin": pa.int64()})
-            if left.num_rows == 0 or right.num_rows == 0:
-                return empty
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            dist, _ = _dense_state(right, "dist", p, P)
-            dist_rep = np.repeat(dist, np.diff(indptr))
-            partial = np.full(len(udst), BFS_INF, dtype=np.int64)
-            np.minimum.at(partial, e2u, dist_rep)
-            frontier = partial < BFS_INF  # only reached sources message out
-            if not frontier.any():
-                return empty
-            return _packed_msgs(P, udst[frontier], {"mmin": partial[frontier] + 1})
-
-        return scatter
-
     @staticmethod
-    def make_apply(P: int):
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "dist": pa.array([], pa.int64()),
-                        "_changed": pa.array([], pa.int64()),
-                    }
-                )
-            dist_old, _ = _dense_state(state, "dist", p, P)
-            mmin = np.full(nloc, BFS_INF, np.int64)
-            if msgs.num_rows:
-                mloc = (_pa_flat(msgs, "dst") - p) // P
-                np.minimum.at(mmin, mloc, _pa_flat(msgs, "mmin"))
-            dist_new = np.minimum(dist_old, mmin)
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "dist": pa.array(dist_new),
-                    "_changed": pa.array((dist_new < dist_old).astype(np.int64)),
-                }
-            )
+    def scatter(blk, st):
+        udst = blk("udst")
+        partial = np.full(len(udst), BFS_INF, dtype=np.int64)
+        np.minimum.at(partial, blk("e2u"), np.repeat(st("dist"), np.diff(blk("indptr"))))
+        frontier = partial < BFS_INF  # only reached sources message out
+        if not frontier.any():
+            return None
+        return udst[frontier], {"mmin": partial[frontier] + 1}
 
-        return apply
+    apply = staticmethod(_monotone_apply("dist", "mmin", np.minimum, BFS_INF))
 
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        packed_schema = "part_id int, dst array<long>, mmin array<long>"
-        msgs = (
-            ctx.ublocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
-        )
-        if ctx.uhub_edges is not None:
-            # op 47 on the undirected side, frontier-filtered: only reached
-            # hub vertices message out (dist + 1 rides the same packed wire
-            # format as the block messages).
-            hub_state = (
-                state.where(F.col("dist") < F.lit(int(BFS_INF)))
-                .join(F.broadcast(ctx.uhub_vids), "vid")
-                .select(F.col("vid").alias("src"), "dist")
-            )
-            hub_rows = ctx.uhub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                (F.col("dist") + 1).alias("mmin"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("mmin",))
-            msgs = msgs.unionByName(hub_msgs)
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(
-                self.make_apply(ctx.P),
-                "vid long, part_id int, dist long, _changed long",
-            )
-        )
+    def hub_frontier(self):
+        # only reached hub vertices message out
+        return F.col("dist") < F.lit(int(BFS_INF))
+
+    def hub_payload(self) -> dict:
+        return {"mmin": F.col("dist") + 1}
 
     def stat_exprs(self):
         return [
@@ -1155,13 +993,8 @@ class BFSProgram:
             F.sum((F.col("dist") < F.lit(int(BFS_INF))).cast("long")).alias("reached"),
         ]
 
-    stat_reducers = {"changes": sum, "reached": sum}
 
-    def done(self, stats: dict) -> bool:
-        return stats["changes"] == 0
-
-
-class BipartiteProgram:
+class BipartiteProgram(VertexProgram):
     """Two-colorability (odd-cycle) check over the undirected simple graph.
 
     Propagates a 2-bit parity-reachability mask from each component root
@@ -1180,7 +1013,10 @@ class BipartiteProgram:
 
     name = "bipartite"
     state_cols = ["vid", "part_id", "mask"]
+    apply_schema = "vid long, part_id int, mask long, _changed long"
+    msg_types = {"mor": "long"}
     uses_undirected = True
+    hub_col = "mask"
 
     def __init__(self, root_vids: DataFrame):
         """``root_vids``: one-column (vid) DataFrame of component roots
@@ -1201,91 +1037,30 @@ class BipartiteProgram:
             )
         )
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            empty = _empty_packed({"mor": pa.int64()})
-            if left.num_rows == 0 or right.num_rows == 0:
-                return empty
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            mask, _ = _dense_state(right, "mask", p, P)
-            flip = ((mask & 1) << 1) | ((mask >> 1) & 1)
-            flip_rep = np.repeat(flip, np.diff(indptr))
-            partial = np.zeros(len(udst), dtype=np.int64)
-            np.bitwise_or.at(partial, e2u, flip_rep)
-            frontier = partial > 0  # only reached senders contribute
-            if not frontier.any():
-                return empty
-            return _packed_msgs(P, udst[frontier], {"mor": partial[frontier]})
-
-        return scatter
-
     @staticmethod
-    def make_apply(P: int):
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "mask": pa.array([], pa.int64()),
-                        "_changed": pa.array([], pa.int64()),
-                    }
-                )
-            mask_old, _ = _dense_state(state, "mask", p, P)
-            mor = np.zeros(nloc, np.int64)
-            if msgs.num_rows:
-                mloc = (_pa_flat(msgs, "dst") - p) // P
-                np.bitwise_or.at(mor, mloc, _pa_flat(msgs, "mor"))
-            mask_new = mask_old | mor
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "mask": pa.array(mask_new),
-                    "_changed": pa.array((mask_new != mask_old).astype(np.int64)),
-                }
-            )
+    def scatter(blk, st):
+        mask = st("mask")
+        flip = ((mask & 1) << 1) | ((mask >> 1) & 1)
+        udst = blk("udst")
+        partial = np.zeros(len(udst), dtype=np.int64)
+        np.bitwise_or.at(partial, blk("e2u"), np.repeat(flip, np.diff(blk("indptr"))))
+        frontier = partial > 0  # only reached senders contribute
+        if not frontier.any():
+            return None
+        return udst[frontier], {"mor": partial[frontier]}
 
-        return apply
+    apply = staticmethod(_monotone_apply("mask", "mor", np.bitwise_or, 0))
 
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        packed_schema = "part_id int, dst array<long>, mor array<long>"
-        msgs = (
-            ctx.ublocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
+    def hub_frontier(self):
+        return F.col("mask") > 0
+
+    def hub_payload(self) -> dict:
+        # a hub vertex's message is its bit-swapped mask; OR-aggregation in
+        # apply absorbs the extra rows
+        swapped = F.shiftleft(F.col("mask").bitwiseAND(F.lit(1)), 1).bitwiseOR(
+            F.shiftright(F.col("mask"), 1).bitwiseAND(F.lit(1))
         )
-        if ctx.uhub_edges is not None:
-            # op 47 on the undirected side, frontier-filtered like BFS: a
-            # hub vertex's message is its bit-swapped mask; OR-aggregation
-            # in apply absorbs the extra rows.
-            hub_state = (
-                state.where(F.col("mask") > 0)
-                .join(F.broadcast(ctx.uhub_vids), "vid")
-                .select(F.col("vid").alias("src"), "mask")
-            )
-            swapped = F.shiftleft(F.col("mask").bitwiseAND(F.lit(1)), 1).bitwiseOR(
-                F.shiftright(F.col("mask"), 1).bitwiseAND(F.lit(1))
-            )
-            hub_rows = ctx.uhub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                swapped.cast("long").alias("mor"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("mor",))
-            msgs = msgs.unionByName(hub_msgs)
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(
-                self.make_apply(ctx.P),
-                "vid long, part_id int, mask long, _changed long",
-            )
-        )
+        return {"mor": swapped.cast("long")}
 
     def stat_exprs(self):
         return [
@@ -1293,13 +1068,8 @@ class BipartiteProgram:
             F.sum((F.col("mask") == 3).cast("long")).alias("conflicts"),
         ]
 
-    stat_reducers = {"changes": sum, "conflicts": sum}
 
-    def done(self, stats: dict) -> bool:
-        return stats["changes"] == 0
-
-
-class SSSPProgram:
+class SSSPProgram(VertexProgram):
     """Single-source shortest paths over the DIRECTED weighted graph —
     Bellman-Ford relaxation as gather-scatter supersteps.
 
@@ -1315,7 +1085,9 @@ class SSSPProgram:
 
     name = "sssp"
     state_cols = ["vid", "part_id", "dist"]
-    uses_undirected = False
+    apply_schema = "vid long, part_id int, dist double, _changed long"
+    msg_types = {"mmin": "double"}
+    hub_col = "dist"
 
     def __init__(self, source_vids: DataFrame):
         self.source_vids = source_vids
@@ -1333,87 +1105,25 @@ class SSSPProgram:
             )
         )
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            empty = _empty_packed({"mmin": pa.float64()})
-            if left.num_rows == 0 or right.num_rows == 0:
-                return empty
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            w = _block_np(left, "weights")
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            dist, _ = _dense_state(right, "dist", p, P)
-            relax = np.repeat(dist, np.diff(indptr)) + w
-            partial = np.full(len(udst), np.inf)
-            np.minimum.at(partial, e2u, relax)
-            frontier = np.isfinite(partial)
-            if not frontier.any():
-                return empty
-            return _packed_msgs(P, udst[frontier], {"mmin": partial[frontier]})
-
-        return scatter
-
     @staticmethod
-    def make_apply(P: int):
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "dist": pa.array([], pa.float64()),
-                        "_changed": pa.array([], pa.int64()),
-                    }
-                )
-            dist_old, _ = _dense_state(state, "dist", p, P)
-            mmin = np.full(nloc, np.inf)
-            if msgs.num_rows:
-                mloc = (_pa_flat(msgs, "dst") - p) // P
-                np.minimum.at(mmin, mloc, _pa_flat(msgs, "mmin"))
-            dist_new = np.minimum(dist_old, mmin)
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "dist": pa.array(dist_new),
-                    "_changed": pa.array((dist_new < dist_old).astype(np.int64)),
-                }
-            )
+    def scatter(blk, st):
+        udst = blk("udst")
+        relax = np.repeat(st("dist"), np.diff(blk("indptr"))) + blk("weights")
+        partial = np.full(len(udst), np.inf)
+        np.minimum.at(partial, blk("e2u"), relax)
+        frontier = np.isfinite(partial)
+        if not frontier.any():
+            return None
+        return udst[frontier], {"mmin": partial[frontier]}
 
-        return apply
+    apply = staticmethod(_monotone_apply("dist", "mmin", np.minimum, np.inf))
 
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        packed_schema = "part_id int, dst array<long>, mmin array<double>"
-        msgs = (
-            ctx.blocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
-        )
-        if ctx.hub_edges is not None:
-            # op 47 directed side, frontier-filtered; relax on the raw w
-            # column the hub split carries alongside coeff.
-            hub_state = (
-                state.where(F.col("dist") != F.lit(float("inf")))
-                .join(F.broadcast(ctx.hub_vids), "vid")
-                .select(F.col("vid").alias("src"), "dist")
-            )
-            hub_rows = ctx.hub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                (F.col("dist") + F.col("w")).alias("mmin"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("mmin",))
-            msgs = msgs.unionByName(hub_msgs)
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(
-                self.make_apply(ctx.P),
-                "vid long, part_id int, dist double, _changed long",
-            )
-        )
+    def hub_frontier(self):
+        return F.col("dist") != F.lit(float("inf"))
+
+    def hub_payload(self) -> dict:
+        # relax on the raw w column the hub split carries alongside coeff
+        return {"mmin": F.col("dist") + F.col("w")}
 
     def stat_exprs(self):
         return [
@@ -1421,13 +1131,8 @@ class SSSPProgram:
             F.sum((F.col("dist") != F.lit(float("inf"))).cast("long")).alias("reached"),
         ]
 
-    stat_reducers = {"changes": sum, "reached": sum}
 
-    def done(self, stats: dict) -> bool:
-        return stats["changes"] == 0
-
-
-class WidestPathProgram:
+class WidestPathProgram(VertexProgram):
     """Single-source widest paths (max-bottleneck capacity) over the
     DIRECTED weighted graph — the max-min semiring sibling of SSSPProgram
     (min-plus): cap_t(v) = max(cap_{t-1}(v), max_{u->v} min(cap_{t-1}(u),
@@ -1443,7 +1148,9 @@ class WidestPathProgram:
 
     name = "widest"
     state_cols = ["vid", "part_id", "cap"]
-    uses_undirected = False
+    apply_schema = "vid long, part_id int, cap double, _changed long"
+    msg_types = {"mmax": "double"}
+    hub_col = "cap"
 
     def __init__(self, source_vids: DataFrame):
         self.source_vids = source_vids
@@ -1461,87 +1168,25 @@ class WidestPathProgram:
             )
         )
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            empty = _empty_packed({"mmax": pa.float64()})
-            if left.num_rows == 0 or right.num_rows == 0:
-                return empty
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            w = _block_np(left, "weights")
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            cap, _ = _dense_state(right, "cap", p, P)
-            relax = np.minimum(np.repeat(cap, np.diff(indptr)), w)
-            partial = np.full(len(udst), -np.inf)
-            np.maximum.at(partial, e2u, relax)
-            frontier = partial > -np.inf
-            if not frontier.any():
-                return empty
-            return _packed_msgs(P, udst[frontier], {"mmax": partial[frontier]})
-
-        return scatter
-
     @staticmethod
-    def make_apply(P: int):
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "cap": pa.array([], pa.float64()),
-                        "_changed": pa.array([], pa.int64()),
-                    }
-                )
-            cap_old, _ = _dense_state(state, "cap", p, P)
-            mmax = np.full(nloc, -np.inf)
-            if msgs.num_rows:
-                mloc = (_pa_flat(msgs, "dst") - p) // P
-                np.maximum.at(mmax, mloc, _pa_flat(msgs, "mmax"))
-            cap_new = np.maximum(cap_old, mmax)
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "cap": pa.array(cap_new),
-                    "_changed": pa.array((cap_new > cap_old).astype(np.int64)),
-                }
-            )
+    def scatter(blk, st):
+        udst = blk("udst")
+        relax = np.minimum(np.repeat(st("cap"), np.diff(blk("indptr"))), blk("weights"))
+        partial = np.full(len(udst), -np.inf)
+        np.maximum.at(partial, blk("e2u"), relax)
+        frontier = partial > -np.inf
+        if not frontier.any():
+            return None
+        return udst[frontier], {"mmax": partial[frontier]}
 
-        return apply
+    apply = staticmethod(_monotone_apply("cap", "mmax", np.maximum, -np.inf))
 
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        packed_schema = "part_id int, dst array<long>, mmax array<double>"
-        msgs = (
-            ctx.blocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
-        )
-        if ctx.hub_edges is not None:
-            # op 47 directed side: broadcast hub rows relax min(cap, w) on
-            # the raw w column the hub split carries alongside coeff.
-            hub_state = (
-                state.where(F.col("cap") != F.lit(float("-inf")))
-                .join(F.broadcast(ctx.hub_vids), "vid")
-                .select(F.col("vid").alias("src"), "cap")
-            )
-            hub_rows = ctx.hub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                F.least(F.col("cap"), F.col("w")).alias("mmax"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("mmax",))
-            msgs = msgs.unionByName(hub_msgs)
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(
-                self.make_apply(ctx.P),
-                "vid long, part_id int, cap double, _changed long",
-            )
-        )
+    def hub_frontier(self):
+        return F.col("cap") != F.lit(float("-inf"))
+
+    def hub_payload(self) -> dict:
+        # relax min(cap, w) on the raw w column the hub split carries
+        return {"mmax": F.least(F.col("cap"), F.col("w"))}
 
     def stat_exprs(self):
         return [
@@ -1549,16 +1194,11 @@ class WidestPathProgram:
             F.sum((F.col("cap") != F.lit(float("-inf"))).cast("long")).alias("reached"),
         ]
 
-    stat_reducers = {"changes": sum, "reached": sum}
-
-    def done(self, stats: dict) -> bool:
-        return stats["changes"] == 0
-
 
 LT_NEVER = np.int64(1) << 62  # threshold sentinel: vertex can never activate
 
 
-class LTCascadeProgram:
+class LTCascadeProgram(VertexProgram):
     """Deterministic linear-threshold influence cascade over the UNDIRECTED
     simple graph (Kempe-Kleinberg-Tardos LT model with fixed integer
     thresholds instead of random ones).
@@ -1581,6 +1221,10 @@ class LTCascadeProgram:
 
     name = "ltcascade"
     state_cols = ["vid", "part_id", "rnd", "infl", "step", "theta"]
+    apply_schema = (
+        "vid long, part_id int, rnd long, infl long, step long, theta long, _changed long"
+    )
+    msg_types = {"msum": "long"}
     uses_undirected = True
 
     def __init__(self, seed_vids: DataFrame, thresholds: DataFrame):
@@ -1610,107 +1254,41 @@ class LTCascadeProgram:
             )
         )
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            empty = _empty_packed({"msum": pa.int64()})
-            if left.num_rows == 0 or right.num_rows == 0:
-                return empty
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            rnd, _ = _dense_state(right, "rnd", p, P)
-            step, _ = _dense_state(right, "step", p, P)
-            # frontier = activated exactly last superstep; their edges fire
-            # once and never again
-            fresh = rnd == step
-            src_fresh = np.repeat(fresh, np.diff(indptr))
-            if not src_fresh.any():
-                return empty
-            # unit weights on the undirected simple view: the partial is a
-            # fresh-neighbor count per destination
-            partial = np.zeros(len(udst), dtype=np.int64)
-            np.add.at(partial, e2u[src_fresh], np.int64(1))
-            touched = partial > 0
-            return _packed_msgs(P, udst[touched], {"msum": partial[touched]})
-
-        return scatter
+    @staticmethod
+    def scatter(blk, st):
+        # frontier = activated exactly last superstep; their edges fire
+        # once and never again
+        src_fresh = np.repeat(st("rnd") == st("step"), np.diff(blk("indptr")))
+        if not src_fresh.any():
+            return None
+        # unit weights on the undirected simple view: the partial is a
+        # fresh-neighbor count per destination
+        udst = blk("udst")
+        partial = np.zeros(len(udst), dtype=np.int64)
+        np.add.at(partial, blk("e2u")[src_fresh], np.int64(1))
+        touched = partial > 0
+        return udst[touched], {"msum": partial[touched]}
 
     @staticmethod
-    def make_apply(P: int):
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "rnd": pa.array([], pa.int64()),
-                        "infl": pa.array([], pa.int64()),
-                        "step": pa.array([], pa.int64()),
-                        "theta": pa.array([], pa.int64()),
-                        "_changed": pa.array([], pa.int64()),
-                    }
-                )
-            rnd_old, _ = _dense_state(state, "rnd", p, P)
-            infl_old, _ = _dense_state(state, "infl", p, P)
-            step_old, _ = _dense_state(state, "step", p, P)
-            theta, _ = _dense_state(state, "theta", p, P)
-            msum = np.zeros(nloc, dtype=np.int64)
-            if msgs.num_rows:
-                mloc = (_pa_flat(msgs, "dst") - p) // P
-                np.add.at(msum, mloc, _pa_flat(msgs, "msum"))
-            step_new = step_old + 1
-            infl_new = infl_old + msum
-            newly = (rnd_old == BFS_INF) & (infl_new >= theta)
-            rnd_new = np.where(newly, step_new, rnd_old)
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "rnd": pa.array(rnd_new),
-                    "infl": pa.array(infl_new),
-                    "step": pa.array(step_new),
-                    "theta": pa.array(theta),
-                    "_changed": pa.array(newly.astype(np.int64)),
-                }
-            )
+    def apply(st, nloc, loc, m):
+        rnd_old, theta = st("rnd"), st("theta")
+        msum = np.zeros(nloc, dtype=np.int64)
+        np.add.at(msum, loc, m["msum"])
+        step_new = st("step") + 1
+        infl_new = st("infl") + msum
+        newly = (rnd_old == BFS_INF) & (infl_new >= theta)
+        return {
+            "rnd": np.where(newly, step_new, rnd_old), "infl": infl_new,
+            "step": step_new, "theta": theta, "_changed": newly.astype(np.int64),
+        }
 
-        return apply
+    def hub_frontier(self):
+        # freshly-activated hubs only (same at-most-once-per-edge guarantee
+        # as the block path); np.add.at in apply combines duplicates
+        return F.col("rnd") == F.col("step")
 
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        packed_schema = "part_id int, dst array<long>, msum array<long>"
-        msgs = (
-            ctx.ublocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
-        )
-        if ctx.uhub_edges is not None:
-            # op 47 undirected side, frontier-filtered to freshly-activated
-            # hubs only (same at-most-once-per-edge guarantee as the block
-            # path); unit counts ride the packed wire format and np.add.at
-            # on the apply side combines duplicates.
-            hub_state = (
-                state.where(F.col("rnd") == F.col("step"))
-                .join(F.broadcast(ctx.uhub_vids), "vid")
-                .select(F.col("vid").alias("src"))
-            )
-            hub_rows = ctx.uhub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                F.lit(1).cast("long").alias("msum"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("msum",))
-            msgs = msgs.unionByName(hub_msgs)
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(
-                self.make_apply(ctx.P),
-                "vid long, part_id int, rnd long, infl long, step long, "
-                "theta long, _changed long",
-            )
-        )
+    def hub_payload(self) -> dict:
+        return {"msum": F.lit(1).cast("long")}
 
     def stat_exprs(self):
         return [
@@ -1718,13 +1296,8 @@ class LTCascadeProgram:
             F.sum((F.col("rnd") < F.lit(int(BFS_INF))).cast("long")).alias("active"),
         ]
 
-    stat_reducers = {"changes": sum, "active": sum}
 
-    def done(self, stats: dict) -> bool:
-        return stats["changes"] == 0
-
-
-class LabelPropProgram:
+class LabelPropProgram(VertexProgram):
     """Synchronous community label propagation, min-label tiebreak (op 50).
 
     Matches ref_single_node.lpa_ref exactly: new label = most frequent
@@ -1733,135 +1306,62 @@ class LabelPropProgram:
 
     name = "labelprop"
     state_cols = ["vid", "part_id", "label"]
+    apply_schema = "vid long, part_id int, label long, _changed long"
+    msg_types = {"label": "long", "cnt": "long"}
     uses_undirected = True
+    hub_col = "label"
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
         return ctx.vertex_base.select("vid", "part_id", F.col("vid").alias("label"))
 
-    def make_scatter(self, P: int):
-        def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
-            empty = _empty_packed({"label": pa.int64(), "cnt": pa.int64()})
-            if left.num_rows == 0 or right.num_rows == 0:
-                return empty
-            p = left["part_id"][0].as_py()
-            indptr = _block_np(left, "indptr")
-            udst = _block_np(left, "udst")
-            e2u = _block_np(left, "e2u")
-            label, _ = _dense_state(right, "label", p, P)
-            lab_rep = np.repeat(label, np.diff(indptr))
-            # run-length count of (udst_idx, label) pairs
-            order = np.lexsort((lab_rep, e2u))
-            ui, ll = e2u[order], lab_rep[order]
-            if len(ui) == 0:
-                return empty
-            boundary = np.ones(len(ui), dtype=bool)
-            boundary[1:] = (ui[1:] != ui[:-1]) | (ll[1:] != ll[:-1])
-            idx = np.flatnonzero(boundary)
-            cnt = np.diff(np.append(idx, len(ui)))
-            # message key is (dst, label); _packed_msgs splits on dst % P,
-            # which groups by destination partition exactly as required
-            return _packed_msgs(
-                P, udst[ui[boundary]], {"label": ll[boundary], "cnt": cnt}
-            )
-
-        return scatter
+    @staticmethod
+    def scatter(blk, st):
+        e2u = blk("e2u")
+        lab_rep = np.repeat(st("label"), np.diff(blk("indptr")))
+        # run-length count of (udst_idx, label) pairs
+        order = np.lexsort((lab_rep, e2u))
+        ui, ll = e2u[order], lab_rep[order]
+        if len(ui) == 0:
+            return None
+        boundary = np.ones(len(ui), dtype=bool)
+        boundary[1:] = (ui[1:] != ui[:-1]) | (ll[1:] != ll[:-1])
+        idx = np.flatnonzero(boundary)
+        cnt = np.diff(np.append(idx, len(ui)))
+        # message key is (dst, label); _packed_msgs splits on dst % P,
+        # which groups by destination partition exactly as required
+        return blk("udst")[ui[boundary]], {"label": ll[boundary], "cnt": cnt}
 
     @staticmethod
-    def make_apply(P: int):
-        def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-            p, nloc = key[0].as_py(), state.num_rows
-            if nloc == 0:
-                return pa.table(
-                    {
-                        "vid": pa.array([], pa.int64()),
-                        "part_id": pa.array([], pa.int32()),
-                        "label": pa.array([], pa.int64()),
-                        "_changed": pa.array([], pa.int64()),
-                    }
-                )
-            label_old, _ = _dense_state(state, "label", p, P)
-            label_new = label_old.copy()
-            if msgs.num_rows:
-                mloc = (_pa_flat(msgs, "dst") - p) // P
-                lab = _pa_flat(msgs, "label")
-                cnt = _pa_flat(msgs, "cnt")
-                # 1) sum partial counts per (vertex, label) — partials arrive
-                #    from multiple source blocks
-                order = np.lexsort((lab, mloc))
-                ml, ll, cc = mloc[order], lab[order], cnt[order]
-                boundary = np.ones(len(ml), dtype=bool)
-                boundary[1:] = (ml[1:] != ml[:-1]) | (ll[1:] != ll[:-1])
-                gidx = np.cumsum(boundary) - 1
-                sums = np.bincount(gidx, weights=cc)
-                gml, gll = ml[boundary], ll[boundary]
-                # 2) argmax per vertex: most frequent label, ties -> min
-                #    label (groups are label-sorted per vertex, so a stable
-                #    sort on -count keeps min-label first among ties)
-                order2 = np.lexsort((gll, -sums, gml))
-                gm2 = gml[order2]
-                first = np.ones(len(gm2), dtype=bool)
-                first[1:] = gm2[1:] != gm2[:-1]
-                label_new[gm2[first]] = gll[order2][first]
-            return pa.table(
-                {
-                    "vid": pa.array(p + np.arange(nloc, dtype=np.int64) * P),
-                    "part_id": pa.array(np.full(nloc, p, np.int32)),
-                    "label": pa.array(label_new),
-                    "_changed": pa.array((label_new != label_old).astype(np.int64)),
-                }
-            )
+    def apply(st, nloc, loc, m):
+        label_old = st("label")
+        label_new = label_old.copy()
+        # 1) sum partial counts per (vertex, label) — partials arrive from
+        #    multiple source blocks
+        order = np.lexsort((m["label"], loc))
+        ml, ll, cc = loc[order], m["label"][order], m["cnt"][order]
+        boundary = np.ones(len(ml), dtype=bool)
+        boundary[1:] = (ml[1:] != ml[:-1]) | (ll[1:] != ll[:-1])
+        gidx = np.cumsum(boundary) - 1
+        sums = np.bincount(gidx, weights=cc)
+        gml, gll = ml[boundary], ll[boundary]
+        # 2) argmax per vertex: most frequent label, ties -> min label
+        #    (groups are label-sorted per vertex, so a stable sort on -count
+        #    keeps min-label first among ties)
+        order2 = np.lexsort((gll, -sums, gml))
+        gm2 = gml[order2]
+        first = np.ones(len(gm2), dtype=bool)
+        first[1:] = gm2[1:] != gm2[:-1]
+        label_new[gm2[first]] = gll[order2][first]
+        return {"label": label_new, "_changed": (label_new != label_old).astype(np.int64)}
 
-        return apply
-
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        packed_schema = "part_id int, dst array<long>, label array<long>, cnt array<long>"
-        msgs = (
-            ctx.ublocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(self.make_scatter(ctx.P), packed_schema)
-        )
-        if ctx.uhub_pack is not None:
-            # hub neighbours each contribute (label, cnt=1) evaluated off
-            # the static pack; the apply's per-(vertex, label) count-sum
-            # folds them with the block partials, so per-edge entries are
-            # exact.
-            m = _hub_state_map(state, ctx.uhub_vids, "label")
-            hub_msgs = ctx.uhub_pack.crossJoin(F.broadcast(m)).select(
-                "part_id",
-                "dst",
-                F.transform("src", lambda s: F.col("_m")[s]).alias("label"),
-                F.array_repeat(F.lit(1).cast("long"), F.size("src")).alias("cnt"),
-            )
-            msgs = msgs.unionByName(hub_msgs)
-        elif ctx.uhub_edges is not None:
-            # fallback: broadcast-join scatter + per-superstep JVM packer.
-            hub_state = state.join(F.broadcast(ctx.uhub_vids), "vid").select(
-                F.col("vid").alias("src"), "label"
-            )
-            hub_rows = ctx.uhub_edges.join(F.broadcast(hub_state), "src").select(
-                F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                "dst",
-                "label",
-                F.lit(1).cast("long").alias("cnt"),
-            )
-            hub_msgs = _pack_hub_jvm(hub_rows, ("label", "cnt"))
-            msgs = msgs.unionByName(hub_msgs)
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(
-                self.make_apply(ctx.P),
-                "vid long, part_id int, label long, _changed long",
-            )
-        )
-
-    def stat_exprs(self):
-        return [F.sum("_changed").alias("changes")]
-
-    stat_reducers = {"changes": sum}
-
-    def done(self, stats: dict) -> bool:
-        return stats["changes"] == 0
+    def hub_payload(self) -> dict:
+        # hub neighbours each contribute (label, cnt=1) off the static pack;
+        # the apply's per-(vertex, label) count-sum folds them with the
+        # block partials, so per-edge entries are exact
+        return {
+            "label": F.transform("src", lambda s: F.col("_m")[s]),
+            "cnt": F.array_repeat(F.lit(1).cast("long"), F.size("src")),
+        }
 
 
 # --------------------------------------------------------------------------
@@ -1921,6 +1421,44 @@ def _strip_origin_stats(df: DataFrame) -> None:
         fld.set(jplan, none)
 
 
+class _CkptWriter:
+    """One durable write in flight, overlapped with the next superstep's
+    compute — but never silent: a failed ckpt.write (disk full, parquet
+    error) is captured and re-raised at the next submit()/join(), so a
+    broken durability surface aborts the run instead of reporting
+    success with a hole in the resume chain."""
+
+    def __init__(self) -> None:
+        self._thread: threading.Thread | None = None
+        self._err: BaseException | None = None
+
+    def submit(self, fn, *args, **kwargs) -> None:
+        self.join()  # re-raises any previous write failure
+
+        def run():
+            try:
+                fn(*args, **kwargs)
+            except BaseException as e:  # noqa: BLE001 — re-raised in join
+                self._err = e
+
+        self._thread = threading.Thread(target=run, daemon=True)
+        self._thread.start()
+
+    def wait(self) -> None:
+        """Join without raising (error-path cleanup: the in-flight write
+        finishes or fails before the superstep's own exception propagates;
+        any write error is kept and surfaced by a later join())."""
+        if self._thread is not None:
+            self._thread.join()
+            self._thread = None
+
+    def join(self) -> None:
+        self.wait()
+        if self._err is not None:
+            err, self._err = self._err, None
+            raise err
+
+
 def run_program(
     ctx: GraphContext,
     program,
@@ -1949,179 +1487,117 @@ def run_program(
     and its partition coalescing can silently undo the co-partitioning
     (SURVEY.md §7 trap 4).  Restored afterwards for the relational glue.
     """
-    aqe_prev = ctx.spark.conf.get("spark.sql.adaptive.enabled", "true")
-    ctx.spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _run_program_inner(
-            ctx, program, max_iter, ckpt_root, resume, init_state, fixed_iters
-        )
-    finally:
-        ctx.spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-
-
-def _run_program_inner(
-    ctx: GraphContext,
-    program,
-    max_iter: int,
-    ckpt_root: str | None,
-    resume: bool,
-    init_state: DataFrame | None,
-    fixed_iters: int | None = None,
-) -> RunResult:
-    ckpt = None
-    if ckpt_root is not None:
-        ckpt = CheckpointManager(
-            ctx.spark, ckpt_root, program.name, ctx.fingerprint, ctx.P,
-            ctx.n_vertices, list(program.state_cols),
-        )
-
-    t0 = 0
-    state = None
-    if ckpt is not None and resume:
-        # With fixed_iters, a stale chain from a LONGER run with the same
-        # fingerprint may hold steps beyond k; resuming past k would skip the
-        # loop and return over-iterated state as the "exactly k" result, so
-        # resume points are capped at fixed_iters (t0 == k is fine: the
-        # checkpointed state IS the k-step answer).
-        latest = ckpt.latest_complete(max_t=fixed_iters)
-        if latest is not None:
-            t0 = latest[0]
-            state = ckpt.read_state(t0)
-
-    if state is None:
-        state = (
-            (init_state if init_state is not None else program.init_state(ctx))
-            .repartition(ctx.P, "part_id")
-            .localCheckpoint()
-        )
-
-    nnz = ctx.nnz_undirected if program.uses_undirected else ctx.nnz_directed + ctx.nnz_hub
-    history: list[dict[str, Any]] = []
-    converged = False
-    carry: dict | None = None
-    t = t0
-    import threading
-
-    from pyspark.sql import Observation
-    from pyspark.sql.functions import count, lit
-
-    class _CkptWriter:
-        """One durable write in flight, overlapped with the next superstep's
-        compute — but never silent: a failed ckpt.write (disk full, parquet
-        error) is captured and re-raised at the next submit()/join(), so a
-        broken durability surface aborts the run instead of reporting
-        success with a hole in the resume chain."""
-
-        def __init__(self) -> None:
-            self._thread: threading.Thread | None = None
-            self._err: BaseException | None = None
-
-        def submit(self, fn, *args, **kwargs) -> None:
-            self.join()  # re-raises any previous write failure
-
-            def run():
-                try:
-                    fn(*args, **kwargs)
-                except BaseException as e:  # noqa: BLE001 — re-raised in join
-                    self._err = e
-
-            self._thread = threading.Thread(target=run, daemon=True)
-            self._thread.start()
-
-        def wait(self) -> None:
-            """Join without raising (error-path cleanup: the in-flight write
-            finishes or fails before the superstep's own exception propagates;
-            any write error is kept and surfaced by a later join())."""
-            if self._thread is not None:
-                self._thread.join()
-                self._thread = None
-
-        def join(self) -> None:
-            self.wait()
-            if self._err is not None:
-                err, self._err = self._err, None
-                raise err
-
-    writer = _CkptWriter()
-    last_iter = fixed_iters if fixed_iters is not None else max_iter
-    try:
-        for t in range(t0 + 1, last_iter + 1):
-            tic = time.monotonic()
-            # ONE Spark job per superstep: the convergence aggregates ride the
-            # state-materialization job itself via CollectMetrics (observe),
-            # instead of a separate groupBy+collect job.  observe() computes
-            # the program's stat_exprs as global aggregates during the eager
-            # localCheckpoint, so at P=32/sf0.1 the per-superstep fixed floor
-            # is one job's scheduling overhead, not two (VERDICT r03 item 5).
-            obs = Observation(f"{program.name}-t{t}-{_next_obs_id()}")
-            ns = (
-                program.superstep(ctx, state, carry)
-                .observe(obs, count(lit(1)).alias("_obs_rows"), *program.stat_exprs())
-                .select(*program.state_cols)
-                # repartition re-pins HashPartitioning(part_id) (cogroup output
-                # partitioning is unknown to Catalyst) so the next superstep's
-                # two cogroups reuse it with no extra exchange; the eager
-                # localCheckpoint materializes in the same job and keeps the
-                # plan one superstep deep (op 54).
-                .repartition(ctx.P, "part_id")
-                .localCheckpoint(eager=True)
+    with aqe_off(ctx.spark):
+        ckpt = None
+        if ckpt_root is not None:
+            ckpt = CheckpointManager(
+                ctx.spark, ckpt_root, program.name, ctx.fingerprint, ctx.P,
+                ctx.n_vertices, list(program.state_cols),
             )
-            # LogicalRDD from localCheckpoint captures the ORIGIN plan's
-            # estimated statistics/constraints, and the cogroup stats visitor
-            # is a product over children sizeInBytes — left in place, each
-            # superstep's state inherits the product of the previous one
-            # (bit-length triples per superstep; by ~step 16 Catalyst spins on
-            # million-bit BigInteger multiplies and then throws "BigInteger
-            # would overflow supported range").  Stripping originStats resets
-            # every superstep to the constant leaf default, so within-superstep
-            # plan stats stay bounded and never compound across supersteps.
-            _strip_origin_stats(ns)
-            row = obs.get
-            # decimal aggregates (exact, order-independent — e.g. PageRank's
-            # dangling_mass) come back as Decimal: one deterministic float()
-            # here keeps carry math and metrics JSON plain-float.
-            stats: dict[str, Any] = {
-                name: float(row[name])
-                if isinstance(row[name], decimal.Decimal)
-                else row[name]
-                for name in program.stat_reducers
-            }
-            stats.update({"wall_s": None, "edges_scattered": nnz})
-            state = ns
-            if ckpt is not None:
-                # The durable write is needed only for resume (op 53), never by
-                # the next superstep (which reads the checkpointed state) — so
-                # it runs on a writer thread OVERLAPPED with superstep t+1's
-                # compute, reading the localCheckpoint's in-memory RDD.  The
-                # lineage stats (rows + checksum) ride the write job itself
-                # as an Observation (per_partition=None), so the durable
-                # surface costs ONE overlapped Spark action per superstep,
-                # not two.  One writer at a
-                # time keeps step dirs + metrics.jsonl ordered (submit() joins
-                # the previous write and re-raises its failure); a crash
-                # mid-write is already handled by the tmp-dir rename +
-                # manifest revalidation in CheckpointManager (resume falls
-                # back to the newest complete step).
-                writer.submit(
-                    ckpt.write,
-                    t,
-                    state,
-                    metrics={k: stats[k] for k in stats if k != "wall_s"},
-                    per_partition=None,
+
+        t0 = 0
+        state = None
+        if ckpt is not None and resume:
+            # With fixed_iters, a stale chain from a LONGER run with the same
+            # fingerprint may hold steps beyond k; resuming past k would skip
+            # the loop and return over-iterated state as the "exactly k"
+            # result, so resume points are capped at fixed_iters (t0 == k is
+            # fine: the checkpointed state IS the k-step answer).
+            latest = ckpt.latest_complete(max_t=fixed_iters)
+            if latest is not None:
+                t0 = latest[0]
+                state = ckpt.read_state(t0)
+
+        if state is None:
+            state = (
+                (init_state if init_state is not None else program.init_state(ctx))
+                .repartition(ctx.P, "part_id")
+                .localCheckpoint()
+            )
+
+        nnz = ctx.nnz_undirected if program.uses_undirected else ctx.nnz_directed + ctx.nnz_hub
+        history: list[dict[str, Any]] = []
+        converged = False
+        carry: dict | None = None
+        t = t0
+        writer = _CkptWriter()
+        last_iter = fixed_iters if fixed_iters is not None else max_iter
+        try:
+            for t in range(t0 + 1, last_iter + 1):
+                tic = time.monotonic()
+                # ONE Spark job per superstep: the convergence aggregates ride
+                # the state-materialization job itself via CollectMetrics
+                # (observe), instead of a separate groupBy+collect job.
+                # observe() computes the program's stat_exprs as global
+                # aggregates during the eager localCheckpoint, so at
+                # P=32/sf0.1 the per-superstep fixed floor is one job's
+                # scheduling overhead, not two (VERDICT r03 item 5).
+                obs = Observation(f"{program.name}-t{t}-{_next_obs_id()}")
+                ns = (
+                    program.superstep(ctx, state, carry)
+                    .observe(obs, *program.stat_exprs())
+                    .select(*program.state_cols)
+                    # repartition re-pins HashPartitioning(part_id) (cogroup
+                    # output partitioning is unknown to Catalyst) so the next
+                    # superstep's two cogroups reuse it with no extra
+                    # exchange; the eager localCheckpoint materializes in the
+                    # same job and keeps the plan one superstep deep (op 54).
+                    .repartition(ctx.P, "part_id")
+                    .localCheckpoint(eager=True)
                 )
-            stats["wall_s"] = time.monotonic() - tic
-            stats["superstep"] = t
-            history.append(stats)
-            carry = stats
-            if fixed_iters is None and program.done(stats):
-                converged = True
-                break
-    except BaseException:
-        # A failing superstep must not leave the write thread dangling (the
-        # old code skipped the final join on the error path, so interpreter
-        # exit could kill the daemon mid-write).  Join it — without masking
-        # the propagating superstep error — then unwind.
-        writer.wait()
-        raise
-    writer.join()  # surface any failure of the final durable write
-    return RunResult(state, t, converged, history, resumed_from=t0)
+                # LogicalRDD from localCheckpoint captures the ORIGIN plan's
+                # estimated statistics/constraints, and the cogroup stats
+                # visitor is a product over children sizeInBytes — left in
+                # place, each superstep's state inherits the product of the
+                # previous one (bit-length triples per superstep; by ~step 16
+                # Catalyst spins on million-bit BigInteger multiplies and then
+                # throws "BigInteger would overflow supported range").
+                # Stripping originStats resets every superstep to the constant
+                # leaf default, so within-superstep plan stats stay bounded
+                # and never compound across supersteps.
+                _strip_origin_stats(ns)
+                # decimal aggregates (exact, order-independent — e.g.
+                # PageRank's dangling_mass) come back as Decimal: one
+                # deterministic float() here keeps carry math and metrics JSON
+                # plain-float.
+                stats: dict[str, Any] = {
+                    name: float(v) if isinstance(v, decimal.Decimal) else v
+                    for name, v in obs.get.items()
+                }
+                stats.update({"wall_s": None, "edges_scattered": nnz})
+                state = ns
+                if ckpt is not None:
+                    # The durable write is needed only for resume (op 53),
+                    # never by the next superstep (which reads the
+                    # checkpointed state) — so it runs on a writer thread
+                    # OVERLAPPED with superstep t+1's compute, reading the
+                    # localCheckpoint's in-memory RDD.  The lineage stats
+                    # (rows + checksum) ride the write job itself as an
+                    # Observation, so the durable surface costs ONE overlapped
+                    # Spark action per superstep, not two.  One writer at a
+                    # time keeps step dirs + metrics.jsonl ordered (submit()
+                    # joins the previous write and re-raises its failure); a
+                    # crash mid-write is already handled by the tmp-dir rename
+                    # + manifest revalidation in CheckpointManager (resume
+                    # falls back to the newest complete step).
+                    writer.submit(
+                        ckpt.write,
+                        t,
+                        state,
+                        metrics={k: stats[k] for k in stats if k != "wall_s"},
+                    )
+                stats["wall_s"] = time.monotonic() - tic
+                stats["superstep"] = t
+                history.append(stats)
+                carry = stats
+                if fixed_iters is None and program.done(stats):
+                    converged = True
+                    break
+        except BaseException:
+            # A failing superstep must not leave the write thread dangling
+            # (interpreter exit could kill the daemon mid-write).  Join it —
+            # without masking the propagating superstep error — then unwind.
+            writer.wait()
+            raise
+        writer.join()  # surface any failure of the final durable write
+        return RunResult(state, t, converged, history, resumed_from=t0)

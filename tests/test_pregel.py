@@ -1,14 +1,21 @@
 """CSR-backed Pregel programs vs single-node references (ops 48-50)."""
 
+import re
+from collections import Counter
+
 import numpy as np
 import pytest
 
 from linkgraph.derive import build_graph
 from linkgraph.pregel import (
     ComponentsProgram,
+    EigenvectorProgram,
     GraphContext,
+    KatzProgram,
     LabelPropProgram,
     PageRankProgram,
+    PersonalizedPageRankProgram,
+    aqe_off,
     run_program,
 )
 from linkgraph.ref_single_node import components_ref, lpa_ref, pagerank_ref
@@ -153,11 +160,21 @@ def test_eigenvector_csr_matches_numpy_power_iteration(synth_ctx):
     np.testing.assert_allclose(got, x, rtol=1e-12, atol=1e-9)
 
 
-def test_katz_hub_split_equals_unsplit(spark):
-    """Forced hub split on the star_hub fixture: the raw-weight hub
-    broadcast path must produce identical Katz values to the unsplit plan."""
-    from linkgraph.pregel import KatzProgram
-
+@pytest.mark.parametrize(
+    "make_prog",
+    [
+        lambda spark: KatzProgram(tol=0.0),
+        lambda spark: PersonalizedPageRankProgram(
+            spark.createDataFrame([(0,), (5,)], "vid long"), tol=0.0
+        ),
+        lambda spark: EigenvectorProgram(),
+    ],
+    ids=["katz", "ppr", "eigenvector"],
+)
+def test_katz_hub_split_equals_unsplit(spark, make_prog):
+    """Forced hub split on the star_hub fixture: the hub pack path (raw
+    weights for Katz/eigenvector, coeff + seed teleport for PPR's own apply
+    kernel) must produce the same values as the unsplit plan."""
     g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
     src, dst, w, n = edges_numpy(g)
 
@@ -168,17 +185,76 @@ def test_katz_hub_split_equals_unsplit(spark):
     try:
         assert ctx_split.hub_edges is not None  # split actually engaged
         k1 = _col(
-            run_program(ctx_plain, KatzProgram(tol=0.0), fixed_iters=4).state,
+            run_program(ctx_plain, make_prog(spark), fixed_iters=4).state,
             "rank", n,
         )
         k2 = _col(
-            run_program(ctx_split, KatzProgram(tol=0.0), fixed_iters=4).state,
+            run_program(ctx_split, make_prog(spark), fixed_iters=4).state,
             "rank", n,
         )
         np.testing.assert_allclose(k1, k2, rtol=0, atol=1e-12)
     finally:
         ctx_plain.unpersist()
         ctx_split.unpersist()
+
+
+def _plan_nodes(df) -> Counter:
+    """Operator names in the executed physical plan of ``df``, one per node."""
+    tree = df._jdf.queryExecution().executedPlan().treeString()  # noqa: SLF001
+    node = re.compile(r"^[\s:+\-|]*(?:\*\(\d+\) )?(\w+)")
+    return Counter(node.match(line).group(1) for line in tree.splitlines() if line.strip())
+
+
+@pytest.mark.parametrize(
+    "split, expected",
+    [
+        (False, {"Exchange": 2, "BroadcastExchange": 0, "FlatMapCoGroupsInArrow": 2}),
+        # the hub pack adds the vid->rank map's aggregation exchange and the
+        # broadcasts of the hub vid set and of the map
+        (True, {"Exchange": 3, "BroadcastExchange": 2, "FlatMapCoGroupsInArrow": 2}),
+    ],
+    ids=["unsplit", "split"],
+)
+def test_pagerank_superstep_plan_shape(spark, split, expected):
+    """One PageRank superstep, built through the program API with AQE off
+    as run_program runs it: the message shuffle and the state re-pin are
+    the only full exchanges, scatter and apply the only Python stages."""
+    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    kw = {"hub_theta": 0, "hub_floor": 0} if split else {}
+    ctx = GraphContext.build(g, 4, **kw)
+    try:
+        assert (ctx.hub_edges is not None) == split
+        prog = PageRankProgram()
+        with aqe_off(spark):
+            state = prog.init_state(ctx).repartition(ctx.P, "part_id").localCheckpoint()
+            step = prog.superstep(ctx, state).select(*prog.state_cols)
+            nodes = _plan_nodes(step.repartition(ctx.P, "part_id"))
+        assert {k: nodes[k] for k in expected} == expected
+    finally:
+        ctx.unpersist()
+
+
+@pytest.mark.parametrize("prior", ["true", "false"])
+def test_run_program_restores_aqe(spark, synth_ctx, prior):
+    """run_program turns AQE off for its loop and hands back the caller's
+    value, both when it returns and when the program raises."""
+
+    class FailingInit(ComponentsProgram):
+        def init_state(self, ctx):
+            raise RuntimeError("init failed")
+
+    _g, ctx = synth_ctx
+    key = "spark.sql.adaptive.enabled"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, prior)
+        run_program(ctx, ComponentsProgram(), fixed_iters=1)
+        assert spark.conf.get(key) == prior
+        with pytest.raises(RuntimeError, match="init failed"):
+            run_program(ctx, FailingInit(), fixed_iters=1)
+        assert spark.conf.get(key) == prior
+    finally:
+        spark.conf.set(key, saved)
 
 
 def _graph_from_pairs(spark, pairs, n):
