@@ -1,8 +1,10 @@
 """Diagnostic probe (guide §1): superstep plan shape + job/stage counts.
 
-Builds the bench graph at a configurable sf, runs one PageRank superstep,
-prints .explain("formatted") of the superstep output and the job/stage
-counts the loop actually dispatches (with and without durable checkpoints).
+Builds the bench graph at a configurable sf, prints .explain("formatted")
+and the Exchange / Arrow node counts of one PageRank superstep twice — the
+composite ``superstep()`` on a plain state, and the fused step
+``run_program`` runs on the carried table — then the wall and job counts
+the loop actually dispatches (with and without durable checkpoints).
 NOT part of the frozen bench surface.
 """
 
@@ -11,6 +13,8 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
+import shutil
 import sys
 import tempfile
 import time
@@ -25,7 +29,7 @@ spark = get_spark(app_name="probe", master=f"local[{cpus}]", shuffle_partitions=
 spark.sparkContext.setLogLevel("ERROR")
 
 from linkgraph.derive import build_graph
-from linkgraph.pregel import GraphContext, PageRankProgram, run_program
+from linkgraph.pregel import GraphContext, PageRankProgram, _materialize, aqe_off, run_program
 from linkgraph.synth import synth_transcripts
 
 n_conv = max(50, int(280_000 * sf))
@@ -56,20 +60,48 @@ def run_steps(tag, ckpt_root, steps=3):
           f"jobs={job_count()-j0}")
 
 
-# plan of one superstep (before materialization)
+_NODE = re.compile(r"^[\s:+\-|]*([A-Za-z][\w ]*?) \((\d+)\)\s*$")
+
+
+def show_plan(tag, df):
+    """Print the formatted plan and its Exchange / Arrow node counts, each
+    numbered operator of the tree section counted once."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    print(f"== {tag} ==")
+    print(plan)
+    nodes = {}
+    for line in plan.splitlines()[1:]:
+        if not line.strip():
+            if nodes:
+                break
+            continue
+        m = _NODE.match(line)
+        if m:
+            nodes[m.group(2)] = m.group(1)
+    names = list(nodes.values())
+    print(f"[{tag}] Exchange nodes:", sum(n.endswith("Exchange") for n in names))
+    print(f"[{tag}] Arrow/python nodes:",
+          sum(n in ("FlatMapCoGroupsInArrow", "ArrowEvalPython", "BatchEvalPython", "MapInArrow")
+              for n in names))
+
+
+# plans before materialization, built with AQE off as run_program builds them
 prog = PageRankProgram(tol=0.0)
-state = prog.init_state(ctx).repartition(P, "part_id").localCheckpoint()
-ns = prog.superstep(ctx, state).select(*prog.state_cols).repartition(P, "part_id")
-buf = io.StringIO()
-with contextlib.redirect_stdout(buf):
-    ns.explain("formatted")
-plan = buf.getvalue()
-print(plan)
-print("Exchange count:", plan.count("Exchange"))
-print("Arrow/python nodes:",
-      sum(plan.count(k) for k in ("FlatMapCoGroupsInArrow", "ArrowEval", "BatchEval", "MapInArrow")))
+with aqe_off(spark):
+    state = prog.init_state(ctx).repartition(P, "part_id").localCheckpoint()
+    # the composite superstep() on a plain state (materializes its prologue)
+    show_plan("superstep()", prog.superstep(ctx, state).select(*prog.state_cols)
+              .repartition(P, "part_id"))
+    # the in-loop fused step: one cogroup of the blocks with the carried
+    # table, then the message exchange that run_program materializes
+    carried, carry = _materialize(prog, ctx, prog._prologue(ctx, state), "probe")
+    show_plan("fused step", prog._step(ctx, carried, carry).repartition(P, "part_id"))
 
 run_steps("warm", None, 2)
 run_steps("no_ckpt", None, 5)
 run_steps("ckpt", ck + "/pr", 5)
 spark.stop()
+shutil.rmtree(ck, ignore_errors=True)

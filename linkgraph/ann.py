@@ -1514,16 +1514,15 @@ SQL_EMB_POWER_ITER = _power_iter_sql(_PI_ROUNDS)
 # truth — different algorithm, identical integers.
 #
 # Exactness: components are quantized floor(1e4·x) → int64 once, then all
-# sums/squares are int64 (max ≈ 4e14 ≪ 2^63 at gate scale); no float
+# sums/squares are exact integers (max ≈ 4e14 ≪ 2^63 at gate scale); no float
 # anywhere, so the cross-engine hash cannot trip.  Overflow bound (caller
 # contract): norm_sq_sum grows as Σ_dims (n_label·1e4·|x|max)², so with
 # |x| ≤ ~2 and d = 16 dims the int64 ceiling is hit near n_label ≈ 3e5
 # vectors per label — where DuckDB raises and non-ANSI Spark would wrap;
-# a runtime guard (DECIMAL(38,0) squaring + raise_error past int64, in
-# emb_meandot_audit below) makes the Spark side fail loudly instead of
-# silently diverging.  Beyond that, production drops
-# _MEANDOT_QSCALE (1e3 buys 100× headroom) or lifts the accumulators to
-# DECIMAL(38,0); the gate fixtures stay orders of magnitude under the
+# both sums accumulate in DECIMAL(38,0) with a raise_error guard past int64
+# (emb_meandot_audit below), so the Spark side fails loudly instead of
+# silently diverging.  Beyond that, production drops _MEANDOT_QSCALE (1e3
+# buys 100× headroom); the gate fixtures stay orders of magnitude under the
 # bound.  n counts ROWS per label in both engines (vec_id plays no role
 # in the identity; the oracle's brute-force pair join additionally
 # assumes vec_id is unique, true of the fixture tables).  Scale posture:
@@ -1545,48 +1544,54 @@ def emb_meandot_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: F.floor(x.cast("double") * _MEANDOT_QSCALE).cast("long"),
         ).alias("q"),
     )
-    base = q.select(
-        "label",
-        F.aggregate(
-            "q", F.lit(0).cast("long"), lambda a, x: a + x * x
-        ).alias("sq"),
-        "q",
-    ).groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("sq").alias("sum_sq_norm")
+    # Overflow guard (ADVICE r05/r06): Spark (non-ANSI) would WRAP an int64
+    # accumulator silently where DuckDB raises — a silently wrong answer.
+    # Both sums therefore accumulate in DECIMAL(38,0) (exact) and
+    # raise_error() when the exact total exceeds int64 (or overflows
+    # decimal → NULL), so the Spark side fails LOUDLY past the documented
+    # caller bound.  norm_sq_sum (the s² sum, ≈3e5 vectors/label at d=16,
+    # |x|≤2) is usually first to hit the ceiling; sum_sq_norm gets there
+    # first for mean-zero/cancelling labels.  Under the bound the
+    # decimal→long cast is exact: identical integers, identical hash.
+    dec = "decimal(38,0)"
+
+    def _checked_long(col: str):
+        return (
+            F.when(
+                F.col(col).isNull() | (F.col(col) > F.lit(2**63 - 1).cast(dec)),
+                F.raise_error(
+                    F.format_string(
+                        f"emb_meandot_audit: {col} overflows int64 for "
+                        "label %s (exact=%s); lower _MEANDOT_QSCALE (see "
+                        "module note)",
+                        F.col("label"),
+                        F.col(col),
+                    )
+                ),
+            )
+            .otherwise(F.col(col).cast("long"))
+            .alias(col)
+        )
+
+    base = (
+        q.select(
+            "label",
+            F.aggregate(
+                "q", F.lit(0).cast(dec), lambda a, x: (a + x.cast(dec) * x.cast(dec)).cast(dec)
+            ).alias("sq"),
+        )
+        .groupBy("label")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("sq").alias("sum_sq_norm"))
+        .select("label", "n", _checked_long("sum_sq_norm"))
     )
     dims = q.select("label", F.posexplode("q").alias("dim", "val"))
-    # Overflow guard (ADVICE r05): the s² accumulation is the first term to
-    # hit the int64 ceiling (≈3e5 vectors/label at d=16, |x|≤2) and Spark
-    # (non-ANSI) would WRAP silently where DuckDB raises — a silently wrong
-    # answer.  Square/sum in DECIMAL(38,0) instead (a handful of aggregated
-    # (label, dim) rows, negligible) and raise_error() when the exact total
-    # exceeds int64 (or overflows decimal → NULL), so the Spark side fails
-    # LOUDLY past the documented caller bound.  Under the bound the
-    # decimal→long cast is exact: identical integers, identical hash.
-    _i64max = F.lit(2**63 - 1).cast("decimal(38,0)")
-    _sdec = F.col("s").cast("decimal(38,0)")
+    _sdec = F.col("s").cast(dec)
     normsq = (
         dims.groupBy("label", "dim")
         .agg(F.sum("val").alias("s"))
         .groupBy("label")
-        .agg(F.sum(_sdec * _sdec).alias("nss_dec"))
-        .select(
-            "label",
-            F.when(
-                F.col("nss_dec").isNull() | (F.col("nss_dec") > _i64max),
-                F.raise_error(
-                    F.format_string(
-                        "emb_meandot_audit: norm_sq_sum overflows int64 for "
-                        "label %s (exact=%s); lower _MEANDOT_QSCALE or lift "
-                        "the accumulators to DECIMAL (see module note)",
-                        F.col("label"),
-                        F.col("nss_dec"),
-                    )
-                ),
-            )
-            .otherwise(F.col("nss_dec").cast("long"))
-            .alias("norm_sq_sum"),
-        )
+        .agg(F.sum(_sdec * _sdec).alias("norm_sq_sum"))
+        .select("label", _checked_long("norm_sq_sum"))
     )
     return base.join(normsq, "label").select(
         "label",

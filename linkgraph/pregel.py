@@ -1,44 +1,62 @@
 """Pregel-style superstep runner over CSR blocks (SURVEY.md §2.10).
 
-Execution model per superstep (all per-edge work is vectorized numpy inside
-Arrow-batched cogrouped pandas UDFs — zero per-row Python):
+Execution model (all per-edge work is vectorized numpy inside Arrow-batched
+cogroup UDFs — zero per-row Python).  Between supersteps the loop holds ONE
+materialized **carried table**, hash-partitioned by ``part_id``.  It has two
+kinds of rows: partition p's state rows (``vid`` set, ``dst``/payload lists
+empty) and the packed message rows addressed to p (``vid`` and every state
+column null, one ``dst[]`` + payload-list row per sending block).  The lists
+of state rows are empty rather than null because Spark's JVM->Arrow writer
+is quadratic in null list entries (measured: 20k state rows per partition
+cost 3.3-4.0 s with null lists, 0.3-0.4 s with empty ones).
 
-    scatter : cogroup(blocks, state) on part_id -> block-local numpy
-              gather + per-udst pre-aggregation (np.bincount / minimum.at);
-              emits (part_id-of-dst, dst, payload) partial messages
-    combine+apply : ONE shuffle — messages exchange to their destination
-              partition, then cogroup(msgs, state) on part_id finalizes the
-              aggregation AND the state update in a single numpy pass
-              (dense residue-class indexing, no join)
-    stats   : global aggregates observed on the state-materialization job
-              (convergence / change count; no extra job)
-    persist : checkpoint write + read-back (durable, truncates lineage) or
-              localCheckpoint (ephemeral) — either way the plan for t+1 is
-              one superstep deep (op 54)
+    prologue : cogroup(blocks, state_0) on part_id in scatter-only mode —
+               state_0 passes through with a zero stat column and is
+               scattered; this gives the first carried table and, through
+               the Observation of ``stat_exprs()``, state_0's stats (e.g.
+               PageRank's first dangling mass)
+    superstep: cogroup(blocks, carried_t) on part_id -> ONE Arrow pass per
+               partition: apply the incoming messages to state_t (dense
+               residue-class indexing, no join), scatter state_{t+1}
+               through block p (block-local gather + per-udst
+               pre-aggregation), emit state_{t+1} rows + packed messages
+    exchange : ONE shuffle by part_id routes the messages to their
+               destination partition (state rows stay put) and re-pins the
+               partitioning for the next cogroup
+    stats    : global aggregates observed on the materialization job
+               (message rows are all-null there, so sums/maxima skip them)
+    persist  : eager localCheckpoint keeps the plan one superstep deep
+               (op 54); the durable checkpoint writes the state rows,
+               overlapped with the next superstep
 
-One skeleton, ``VertexProgram.superstep``, runs that shape for every program
-(the two cogroups, empty partitions, dense state reads, output assembly and
-the hub-split messages).  A program declares ``state_cols``/``init_state``,
-``apply_schema`` (state + one stat column), ``msg_types``, ``uses_undirected``
-and two numpy kernels, both staticmethods closing over plain scalars only:
+So a superstep is one Python stage and one Exchange.  The carried table is
+materialized once and read by exactly one consumer, and the blocks are
+static, so nothing is recomputed.  ``RunResult.state`` and the durable
+checkpoints are the state rows of the last carried table, projected to
+``state_cols`` (filter + project keep the ``part_id`` partitioning).
+
+A program declares ``state_cols``/``init_state``, ``apply_schema`` (state +
+one stat column), ``msg_types``, ``uses_undirected`` and two numpy kernels,
+both staticmethods closing over plain scalars only:
 
     scatter(blk, st) -> (udst, {payload: array}) | None
         blk(name): CSR block column; st(col): source state, dense by (vid-p)//P
     apply(st, nloc, loc, m, **step_params) -> {column: array}
         loc/m[payload]: flat incoming messages (typed empties if none)
 
-Hub edges (op 47) are messaged by ``hub_payload()`` Column expressions:
-off the static pack for dense programs, or, when ``hub_frontier()``
-returns a predicate, through a broadcast join of the active hub senders.
+Hub edges (op 47) are messaged in the JVM by ``hub_payload()`` Column
+expressions over the state rows of the carried table: off the static pack
+for dense programs, or, when ``hub_frontier()`` returns a predicate, through
+a broadcast join of the active hub senders.  The hub messages are padded to
+the carried schema and unioned into the cogroup's carried side; both union
+children are hash-partitioned by ``part_id`` into P partitions, so the union
+adds no Exchange.
 
-Per superstep the ONLY full-width exchange is the message shuffle; the old
-form's groupBy(dst) exchange + state equi-join (two more shuffles of |V|..
-|msgs| rows and a window for LPA) are fused into the destination-side
-cogroup.  The scatter shuffle carries at most |udst| rows per block (unique
-dsts), not nnz — the block-local bincount is the map-side combine.  Skewed
-hub dsts are therefore bounded by P partial rows each; the explicit salted
-two-phase aggregation for raw message streams lives in skew.py and is used
-by the naive (non-CSR) paths.
+The scatter carries at most |udst| values per block (unique dsts), not nnz —
+the block-local bincount is the map-side combine — packed as P array rows
+per block.  Skewed hub dsts are therefore bounded by P partial rows each;
+the explicit salted two-phase aggregation for raw message streams lives in
+skew.py and is used by the naive (non-CSR) paths.
 """
 
 from __future__ import annotations
@@ -54,6 +72,7 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -459,31 +478,49 @@ def _ddl_fields(schema: str) -> list[tuple[str, str]]:
     return [tuple(f.split()) for f in schema.split(",")]
 
 
-def _packed_msgs(P: int, udst: np.ndarray, payloads: dict[str, np.ndarray]) -> "pa.Table":
+_MSG = "msg_"  # carried-table prefix of the packed payload columns
+
+
+def _carried_ddl(program) -> str:
+    """Spark DDL of a program's carried table: ``apply_schema`` (state + stat
+    column), then the packed message columns (``dst`` + one list per
+    payload; payloads are prefixed because LabelProp's ``label`` message
+    shares its name with the state column)."""
+    return ", ".join(
+        [program.apply_schema, "dst array<long>"]
+        + [f"{_MSG}{n} array<{t}>" for n, t in program.msg_types.items()]
+    )
+
+
+def _carried_schema(program) -> "pa.Schema":
+    return pa.schema([
+        pa.field(n, pa.list_(_ARROW[t[6:-1]]) if t.startswith("array<") else _ARROW[t])
+        for n, t in _ddl_fields(_carried_ddl(program))
+    ])
+
+
+def _packed_msgs(
+    schema: "pa.Schema", P: int, udst: np.ndarray, payloads: dict[str, np.ndarray]
+) -> "pa.Table":
     """Split per-dst partial messages by destination partition and pack each
-    slice as ONE Arrow list row: the shuffle then moves P array rows per
-    block instead of |udst| scalar rows — no per-row shuffle CPU, and the
-    destination side reads the values buffers back zero-copy."""
+    slice as ONE Arrow list row of the carried schema (state columns null):
+    the shuffle then moves P array rows per block instead of |udst| scalar
+    rows — no per-row shuffle CPU, and the destination side reads the
+    values buffers back zero-copy."""
     pid = (udst % P).astype(np.int32)
     order = np.argsort(pid, kind="stable")
     offs = pa.array(np.searchsorted(pid[order], np.arange(P + 1)).astype(np.int32))
-    cols: dict[str, object] = {
+    cols = {
         "part_id": pa.array(np.arange(P, dtype=np.int32)),
-        "dst": pa.ListArray.from_arrays(offs, pa.array(udst[order])),
+        "dst": pa.ListArray.from_arrays(offs, pa.array(udst[order], pa.int64())),
     }
     for name, vals in payloads.items():
-        cols[name] = pa.ListArray.from_arrays(offs, pa.array(vals[order]))
-    return pa.table(cols)
-
-
-def _empty_packed(msg_types: dict[str, str]) -> "pa.Table":
-    cols = {
-        "part_id": pa.array([], pa.int32()),
-        "dst": pa.array([], pa.list_(pa.int64())),
-    }
-    for name, typ in msg_types.items():
-        cols[name] = pa.array([], pa.list_(_ARROW[typ]))
-    return pa.table(cols)
+        typ = schema.field(_MSG + name).type.value_type
+        cols[_MSG + name] = pa.ListArray.from_arrays(offs, pa.array(vals[order], typ))
+    return pa.Table.from_arrays(
+        [cols[f.name] if f.name in cols else pa.nulls(P, f.type) for f in schema],
+        schema=schema,
+    )
 
 
 def _prepack_hub(hub_edges: DataFrame, P: int, payload: tuple[str, ...]) -> DataFrame:
@@ -493,7 +530,9 @@ def _prepack_hub(hub_edges: DataFrame, P: int, payload: tuple[str, ...]) -> Data
     per-superstep ``collect_list`` it replaces was task-order dependent).
     Consumed by the dense vertex programs via a broadcast vid->state map +
     ``zip_with``/``transform`` — the hub adjacency itself never moves again
-    inside the superstep loop."""
+    inside the superstep loop.  The explicit P-way repartition pins the pack
+    to the carried table's partitioning, so unioning its messages into the
+    superstep cogroup needs no Exchange."""
     z = F.sort_array(
         F.collect_list(F.struct(F.col("dst"), F.col("src"), *[F.col(c) for c in payload]))
     )
@@ -502,9 +541,9 @@ def _prepack_hub(hub_edges: DataFrame, P: int, payload: tuple[str, ...]) -> Data
         return lambda x: x[name]
 
     return (
-        hub_edges.groupBy(
-            F.pmod(F.col("dst"), F.lit(P)).cast("int").alias("part_id")
-        )
+        hub_edges.withColumn("part_id", F.pmod(F.col("dst"), F.lit(P)).cast("int"))
+        .repartition(P, "part_id")
+        .groupBy("part_id")
         .agg(z.alias("_z"))
         .select(
             "part_id",
@@ -552,53 +591,72 @@ def _pack_hub_jvm(hub_rows, payload: tuple[str, ...]):
     )
 
 
+def _states(carried: DataFrame) -> DataFrame:
+    """The state rows of a carried table (message rows have a null vid)."""
+    return carried.where(F.col("vid").isNotNull())
+
+
 # --------------------------------------------------------------------------
 # the shared superstep
 # --------------------------------------------------------------------------
 
-def _scatter_udf(kernel, P: int, msg_types: dict[str, str]):
-    """Source-side cogroup UDF around a program's ``scatter`` kernel: one CSR
-    block + its co-partitioned state in, packed partial messages out."""
+def _superstep_udf(program, P: int, params: dict | None):
+    """The one Python stage of a superstep: a cogroup UDF over CSR block p
+    and partition p's carried rows.  It applies the incoming messages to
+    the state with the program's ``apply`` kernel, scatters the new state
+    through the block with ``scatter``, and returns the new state rows plus
+    the packed messages for the next superstep as one table of the carried
+    schema.  ``params=None`` is the prologue: the carried side is a plain
+    state table, which passes through (stat column zero) and is scattered.
+    Only the kernels and schemas are closed over, never the program (it may
+    hold DataFrames)."""
+    schema = _carried_schema(program)
+    n_state = len(_ddl_fields(program.apply_schema))
+    state_fields, msg_fields = list(schema)[:n_state], list(schema)[n_state:]
+    stat = state_fields[-1]
+    kept = [f.name for f in state_fields[:-1] if f.name not in ("vid", "part_id")]
+    no_msgs = {n: np.empty(0, _ARROW[t].to_pandas_dtype()) for n, t in program.msg_types.items()}
+    scatter = program.scatter
+    apply = None if params is None else functools.partial(program.apply, **params)
 
-    def scatter(key, left: pa.Table, right: pa.Table) -> pa.Table:
+    def step(key, blk: pa.Table, carried: pa.Table) -> pa.Table:
         # NOTE: the (key, table...) type hints are load-bearing — PySpark
         # 4.1.2's applyInArrow raises UnboundLocalError if hint inference
         # fails (group_ops.py:936).
-        if left.num_rows and right.num_rows:
-            p = left["part_id"][0].as_py()
-            out = kernel(
-                lambda name: _block_np(left, name),
-                lambda col: _dense_state(right, col, p, P),
-            )
-            if out is not None:
-                return _packed_msgs(P, *out)
-        return _empty_packed(msg_types)
-
-    return scatter
-
-
-def _apply_udf(kernel, P: int, schema: str, msg_types: dict[str, str]):
-    """Destination-side cogroup UDF around a program's ``apply`` kernel: the
-    packed messages of one partition + its state in, new state out (dense
-    residue-class indexing, no join).  A partition without messages hands
-    the kernel typed empty arrays, so kernels have no empty branch."""
-    fields = _ddl_fields(schema)
-    no_msgs = {n: np.empty(0, _ARROW[t].to_pandas_dtype()) for n, t in msg_types.items()}
-
-    def apply(key, msgs: pa.Table, state: pa.Table) -> pa.Table:
-        p, nloc = key[0].as_py(), state.num_rows
+        p = key[0].as_py()
+        msgs = None
+        if apply is not None:
+            is_state = pc.is_valid(carried["vid"])
+            carried, msgs = carried.filter(is_state), carried.filter(pc.invert(is_state))
+        nloc = carried.num_rows
         if nloc == 0:
-            return pa.table({n: pa.array([], _ARROW[t]) for n, t in fields})
-        loc, m = np.empty(0, np.int64), no_msgs
-        if msgs.num_rows:
-            loc = (_pa_flat(msgs, "dst") - p) // P
-            m = {n: _pa_flat(msgs, n) for n in msg_types}
-        out = kernel(lambda col: _dense_state(state, col, p, P), nloc, loc, m)
+            return schema.empty_table()
+        st = functools.partial(_dense_state, carried, p=p, P=P)
+        if apply is None:
+            out = {n: st(n) for n in kept}
+            out[stat.name] = np.zeros(nloc, stat.type.to_pandas_dtype())
+        else:
+            loc, m = np.empty(0, np.int64), no_msgs
+            if msgs.num_rows:
+                loc = (_pa_flat(msgs, "dst") - p) // P
+                m = {n: _pa_flat(msgs, _MSG + n) for n in no_msgs}
+            out = apply(st, nloc, loc, m)
         out["vid"] = p + np.arange(nloc, dtype=np.int64) * P
         out["part_id"] = np.full(nloc, p, np.int32)
-        return pa.table({n: pa.array(out[n]) for n, _ in fields})
+        no_lists = pa.array(np.zeros(nloc + 1, np.int32))
+        tables = [
+            pa.Table.from_arrays(
+                [pa.array(out[f.name], f.type) for f in state_fields]
+                + [pa.ListArray.from_arrays(no_lists, pa.array([], f.type.value_type)) for f in msg_fields],
+                schema=schema,
+            )
+        ]
+        sent = scatter(lambda name: _block_np(blk, name), out.__getitem__) if blk.num_rows else None
+        if sent is not None:
+            tables.append(_packed_msgs(schema, P, *sent))
+        return pa.concat_tables(tables)
 
-    return apply
+    return step
 
 
 class VertexProgram:
@@ -612,7 +670,8 @@ class VertexProgram:
     hub_col: str | None = None
 
     def step_params(self, ctx: GraphContext, state: DataFrame, carry: dict | None) -> dict:
-        """Plain scalars bound into the apply kernel for this superstep."""
+        """Plain scalars bound into the apply kernel for this superstep;
+        ``carry`` is the stats row observed on ``state``."""
         return {}
 
     def hub_payload(self) -> dict:
@@ -634,43 +693,46 @@ class VertexProgram:
     def done(self, stats: dict) -> bool:
         return stats["changes"] == 0
 
-    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
-        apply = functools.partial(self.apply, **self.step_params(ctx, state, carry))
-        if self.uses_undirected:
-            blocks, hub_edges, hub_vids, hub_pack = (
-                ctx.ublocks, ctx.uhub_edges, ctx.uhub_vids, ctx.uhub_pack,
-            )
-        else:
-            blocks, hub_edges, hub_vids, hub_pack = (
-                ctx.blocks, ctx.hub_edges, ctx.hub_vids, ctx.hub_pack,
-            )
-        packed_schema = ", ".join(
-            ["part_id int", "dst array<long>"]
-            + [f"{n} array<{t}>" for n, t in self.msg_types.items()]
-        )
-        msgs = (
+    def _cogroup(self, ctx: GraphContext, carried: DataFrame, params: dict | None) -> DataFrame:
+        blocks = ctx.ublocks if self.uses_undirected else ctx.blocks
+        return (
             blocks.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(_scatter_udf(self.scatter, ctx.P, self.msg_types), packed_schema)
+            .cogroup(carried.groupby("part_id"))
+            .applyInArrow(_superstep_udf(self, ctx.P, params), _carried_ddl(self))
         )
+
+    def _prologue(self, ctx: GraphContext, state: DataFrame) -> DataFrame:
+        """Carried table of a plain state (lazy): its rows with a zero stat
+        column, plus the messages it scatters."""
+        return self._cogroup(ctx, state.repartition(ctx.P, "part_id"), None)
+
+    def _step(self, ctx: GraphContext, carried: DataFrame, carry: dict) -> DataFrame:
+        """Carried table of the next superstep (lazy), from the materialized
+        carried table of this one and its observed stats."""
+        params = self.step_params(ctx, _states(carried), carry)
+        if self.uses_undirected:
+            hub_edges, hub_vids, hub_pack = ctx.uhub_edges, ctx.uhub_vids, ctx.uhub_pack
+        else:
+            hub_edges, hub_vids, hub_pack = ctx.hub_edges, ctx.hub_vids, ctx.hub_pack
         if hub_edges is not None:
             # op 47: hub adjacency lives outside the CSR blocks; its messages
-            # join the block messages in the same packed wire format.
-            payload = [col.alias(n) for n, col in self.hub_payload().items()]
+            # are computed in the JVM from the carried state rows (message
+            # rows have null state columns and drop out of both joins) and
+            # join the carried side in the same packed wire format.
+            payload = [col.alias(_MSG + n) for n, col in self.hub_payload().items()]
             frontier = self.hub_frontier()
             if frontier is None:
                 # dense: static pack per destination partition (built once)
                 # + a broadcast vid->state map over the tiny hub set — the hub
                 # edge set never re-shuffles in the loop.
-                m = _hub_state_map(state, hub_vids, self.hub_col)
-                hub_msgs = hub_pack.crossJoin(F.broadcast(m)).select(
-                    "part_id", "dst", *payload
-                )
+                m = _hub_state_map(carried, hub_vids, self.hub_col)
+                hub_msgs = hub_pack.crossJoin(F.broadcast(m)).select("part_id", "dst", *payload)
             else:
                 # frontier-sparse: only active hub senders are broadcast-
-                # joined onto their edges, then packed JVM-side.
+                # joined onto their edges, then packed JVM-side (the P-way
+                # repartition is the pack's grouping shuffle).
                 hub_state = (
-                    state.where(frontier)
+                    carried.where(frontier)
                     .join(F.broadcast(hub_vids), "vid")
                     .select(F.col("vid").alias("src"), *filter(None, [self.hub_col]))
                 )
@@ -679,19 +741,27 @@ class VertexProgram:
                     "dst",
                     *payload,
                 )
-                hub_msgs = _pack_hub_jvm(hub_rows, tuple(self.msg_types))
-            msgs = msgs.unionByName(hub_msgs)
-        # ONE shuffle: packed message rows to their destination partition;
-        # the cogroup finalizes the combine + state update in numpy (no
-        # groupBy(dst), no join, no per-row shuffle records).
-        return (
-            msgs.groupby("part_id")
-            .cogroup(state.groupby("part_id"))
-            .applyInArrow(
-                _apply_udf(apply, ctx.P, self.apply_schema, self.msg_types),
-                self.apply_schema,
+                hub_msgs = _pack_hub_jvm(
+                    hub_rows.repartition(ctx.P, "part_id"),
+                    tuple(_MSG + n for n in self.msg_types),
+                )
+            carried = carried.unionByName(
+                hub_msgs.select(*[
+                    n if n in hub_msgs.columns else F.lit(None).cast(t).alias(n)
+                    for n, t in _ddl_fields(_carried_ddl(self))
+                ])
             )
-        )
+        return self._cogroup(ctx, carried, params)
+
+    def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
+        """One superstep on a plain state DataFrame: the ``apply_schema``
+        rows of state_{t+1} (lazy).  Built from the loop's own parts — the
+        prologue is materialized (one job, which also observes ``state``'s
+        stats, the default ``carry``), then the fused step is projected to
+        its state rows."""
+        carried, stats = _materialize(self, ctx, self._prologue(ctx, state), "prologue")
+        step = self._step(ctx, carried, stats if carry is None else carry)
+        return _states(step).select(*[n for n, _ in _ddl_fields(self.apply_schema)])
 
 
 def _monotone_apply(col: str, msg: str, ufunc, identity):
@@ -741,28 +811,19 @@ class PageRankProgram(VertexProgram):
             "msum": F.zip_with("src", self.hub_weight, lambda s, c: F.col("_m")[s] * c)
         }
 
-    def _dangling_mass(self, state: DataFrame, carry: dict | None) -> float:
-        # dangling mass of state_{t-1}: carried from the previous superstep's
-        # stats row (saves one job per superstep); computed directly only on
-        # the first superstep after init/resume.
-        # Both paths compute the dangling mass as an EXACT decimal(38,25)
-        # sum: double-sum merge order varies with task completion order
-        # (load-dependent), and this scalar feeds back into every rank, so
-        # an order-dependent sum breaks bit-identical resume (the carry
-        # path and the post-resume recompute path must agree bitwise).
-        # Decimal addition is exact, hence order-independent; float() of
-        # the exact total is one deterministic rounding.
-        if carry is not None and "dangling_mass" in carry:
-            return float(carry["dangling_mass"] or 0.0)
-        return float(
-            state.where("dangling")
-            .agg(F.sum(F.col("rank").cast("decimal(38,25)")))
-            .collect()[0][0]
-            or 0.0
-        )
+    @staticmethod
+    def _dangling_mass(carry: dict) -> float:
+        # dangling mass of state_{t-1}, read off the stats row observed on
+        # the job that produced it (the prologue's for the first superstep
+        # after init/resume): no job of its own.  It is an EXACT
+        # decimal(38,25) sum (see stat_exprs): a double sum's merge order
+        # varies with task completion order, and this scalar feeds back into
+        # every rank, so an order-dependent sum would break bit-identical
+        # resume.  float() of the exact total is one deterministic rounding.
+        return float(carry["dangling_mass"] or 0.0)
 
     def step_params(self, ctx, state, carry) -> dict:
-        return {"d": self.d, "n": ctx.n_vertices, "dmass": self._dangling_mass(state, carry)}
+        return {"d": self.d, "n": ctx.n_vertices, "dmass": self._dangling_mass(carry)}
 
     @staticmethod
     def apply(st, nloc, loc, m, d, n, dmass):
@@ -832,7 +893,7 @@ class PersonalizedPageRankProgram(PageRankProgram):
         )
 
     def step_params(self, ctx, state, carry) -> dict:
-        return {"d": self.d, "dmass": self._dangling_mass(state, carry)}
+        return {"d": self.d, "dmass": self._dangling_mass(carry)}
 
     @staticmethod
     def apply(st, nloc, loc, m, d, dmass):
@@ -1421,23 +1482,80 @@ def _strip_origin_stats(df: DataFrame) -> None:
         fld.set(jplan, none)
 
 
+def _materialize(program, ctx: GraphContext, carried: DataFrame, tag) -> tuple[DataFrame, dict]:
+    """Run a carried table: observe the program's stats on it, route its
+    message rows to their destination partition with ONE Exchange (state
+    rows stay put; the repartition also re-pins HashPartitioning(part_id),
+    which the cogroup output does not report, so the next cogroup reads it
+    with no exchange), and materialize it with an eager localCheckpoint in
+    the same job, keeping the plan one superstep deep (op 54).
+
+    ONE Spark job per superstep: the convergence aggregates ride the
+    materialization job via CollectMetrics (observe) instead of a separate
+    groupBy+collect job.  Message rows are all-null in the state columns,
+    so they contribute nothing to any ``stat_exprs`` sum or max."""
+    obs = Observation(f"{program.name}-{tag}-{_next_obs_id()}")
+    ns = (
+        carried.observe(obs, *program.stat_exprs())
+        .repartition(ctx.P, "part_id")
+        .localCheckpoint(eager=True)
+    )
+    # LogicalRDD from localCheckpoint captures the ORIGIN plan's estimated
+    # statistics/constraints, and the cogroup stats visitor is a product
+    # over children sizeInBytes — left in place, each superstep's carried
+    # table inherits the product of the previous one (bit-length triples per
+    # superstep; by ~step 16 Catalyst spins on million-bit BigInteger
+    # multiplies and then throws "BigInteger would overflow supported
+    # range").  Stripping originStats resets every superstep to the
+    # constant leaf default, so within-superstep plan stats stay bounded and
+    # never compound across supersteps.
+    _strip_origin_stats(ns)
+    # decimal aggregates (exact, order-independent — e.g. PageRank's
+    # dangling_mass) come back as Decimal: one deterministic float() here
+    # keeps carry math and metrics JSON plain-float.
+    stats = {
+        name: float(v) if isinstance(v, decimal.Decimal) else v
+        for name, v in obs.get.items()
+    }
+    return ns, stats
+
+
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextlib.contextmanager
+def _job_description(sc):
+    """Yield a setter for the calling thread's Spark job description and
+    restore the previous description on exit (it is a thread-local
+    property, so each thread tags its own jobs)."""
+    prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+    try:
+        yield sc.setJobDescription
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, prev)
+
+
 class _CkptWriter:
     """One durable write in flight, overlapped with the next superstep's
     compute — but never silent: a failed ckpt.write (disk full, parquet
     error) is captured and re-raised at the next submit()/join(), so a
     broken durability surface aborts the run instead of reporting
-    success with a hole in the resume chain."""
+    success with a hole in the resume chain.  Each write's jobs carry the
+    description given to submit(), set inside the writer thread."""
 
-    def __init__(self) -> None:
+    def __init__(self, sc) -> None:
+        self._sc = sc
         self._thread: threading.Thread | None = None
         self._err: BaseException | None = None
 
-    def submit(self, fn, *args, **kwargs) -> None:
+    def submit(self, description: str, fn, *args, **kwargs) -> None:
         self.join()  # re-raises any previous write failure
 
         def run():
             try:
-                fn(*args, **kwargs)
+                with _job_description(self._sc) as describe:
+                    describe(description)
+                    fn(*args, **kwargs)
             except BaseException as e:  # noqa: BLE001 — re-raised in join
                 self._err = e
 
@@ -1476,10 +1594,15 @@ def run_program(
     against the DuckDB oracle (VERDICT r01 item 1).
 
     With ``ckpt_root``: every superstep is durably checkpointed with lineage
-    + metrics and the next superstep reads back from parquet; a killed run
-    re-invoked with the same root resumes from the latest complete superstep
-    (op 53).  Without it, localCheckpoint gives the same plan truncation
-    without durability.
+    + metrics; a killed run re-invoked with the same root resumes from the
+    latest complete superstep (op 53).  Either way the eager localCheckpoint
+    of each carried table truncates the plan.
+
+    The run starts with the prologue (see the module docstring) on the init
+    state, or on the checkpointed state when resuming; each superstep is
+    then one cogroup + one Exchange + localCheckpoint.  Spark jobs are
+    tagged ``pregel.<name>:t=<n>`` (prologue: the starting step) and
+    ``checkpoint.<name>:t=<n>``; the caller's job description is restored.
 
     AQE is disabled for the duration of the loop: superstep plans are fully
     pinned (explicit P-way partitioning, fixed shapes), so adaptive re-
@@ -1487,7 +1610,7 @@ def run_program(
     and its partition coalescing can silently undo the co-partitioning
     (SURVEY.md §7 trap 4).  Restored afterwards for the relational glue.
     """
-    with aqe_off(ctx.spark):
+    with aqe_off(ctx.spark), _job_description(ctx.spark.sparkContext) as describe:
         ckpt = None
         if ckpt_root is not None:
             ckpt = CheckpointManager(
@@ -1508,69 +1631,32 @@ def run_program(
                 t0 = latest[0]
                 state = ckpt.read_state(t0)
 
+        describe(f"pregel.{program.name}:t={t0}")
         if state is None:
-            state = (
-                (init_state if init_state is not None else program.init_state(ctx))
-                .repartition(ctx.P, "part_id")
-                .localCheckpoint()
-            )
+            state = init_state if init_state is not None else program.init_state(ctx)
+        # The prologue's stats are state_t0's (its stat column is zero): the
+        # carry of the first superstep, e.g. PageRank's first dangling mass.
+        carried, carry = _materialize(program, ctx, program._prologue(ctx, state), f"t{t0}")
 
         nnz = ctx.nnz_undirected if program.uses_undirected else ctx.nnz_directed + ctx.nnz_hub
         history: list[dict[str, Any]] = []
         converged = False
-        carry: dict | None = None
         t = t0
-        writer = _CkptWriter()
+        writer = _CkptWriter(ctx.spark.sparkContext)
         last_iter = fixed_iters if fixed_iters is not None else max_iter
         try:
             for t in range(t0 + 1, last_iter + 1):
                 tic = time.monotonic()
-                # ONE Spark job per superstep: the convergence aggregates ride
-                # the state-materialization job itself via CollectMetrics
-                # (observe), instead of a separate groupBy+collect job.
-                # observe() computes the program's stat_exprs as global
-                # aggregates during the eager localCheckpoint, so at
-                # P=32/sf0.1 the per-superstep fixed floor is one job's
-                # scheduling overhead, not two (VERDICT r03 item 5).
-                obs = Observation(f"{program.name}-t{t}-{_next_obs_id()}")
-                ns = (
-                    program.superstep(ctx, state, carry)
-                    .observe(obs, *program.stat_exprs())
-                    .select(*program.state_cols)
-                    # repartition re-pins HashPartitioning(part_id) (cogroup
-                    # output partitioning is unknown to Catalyst) so the next
-                    # superstep's two cogroups reuse it with no extra
-                    # exchange; the eager localCheckpoint materializes in the
-                    # same job and keeps the plan one superstep deep (op 54).
-                    .repartition(ctx.P, "part_id")
-                    .localCheckpoint(eager=True)
+                describe(f"pregel.{program.name}:t={t}")
+                carried, stats = _materialize(
+                    program, ctx, program._step(ctx, carried, carry), f"t{t}"
                 )
-                # LogicalRDD from localCheckpoint captures the ORIGIN plan's
-                # estimated statistics/constraints, and the cogroup stats
-                # visitor is a product over children sizeInBytes — left in
-                # place, each superstep's state inherits the product of the
-                # previous one (bit-length triples per superstep; by ~step 16
-                # Catalyst spins on million-bit BigInteger multiplies and then
-                # throws "BigInteger would overflow supported range").
-                # Stripping originStats resets every superstep to the constant
-                # leaf default, so within-superstep plan stats stay bounded
-                # and never compound across supersteps.
-                _strip_origin_stats(ns)
-                # decimal aggregates (exact, order-independent — e.g.
-                # PageRank's dangling_mass) come back as Decimal: one
-                # deterministic float() here keeps carry math and metrics JSON
-                # plain-float.
-                stats: dict[str, Any] = {
-                    name: float(v) if isinstance(v, decimal.Decimal) else v
-                    for name, v in obs.get.items()
-                }
                 stats.update({"wall_s": None, "edges_scattered": nnz})
-                state = ns
                 if ckpt is not None:
                     # The durable write is needed only for resume (op 53),
-                    # never by the next superstep (which reads the
-                    # checkpointed state) — so it runs on a writer thread
-                    # OVERLAPPED with superstep t+1's compute, reading the
+                    # never by the next superstep (which reads the carried
+                    # table) — so it runs on a writer thread OVERLAPPED with
+                    # superstep t+1's compute, reading the state rows of the
                     # localCheckpoint's in-memory RDD.  The lineage stats
                     # (rows + checksum) ride the write job itself as an
                     # Observation, so the durable surface costs ONE overlapped
@@ -1581,9 +1667,10 @@ def run_program(
                     # + manifest revalidation in CheckpointManager (resume
                     # falls back to the newest complete step).
                     writer.submit(
+                        f"checkpoint.{program.name}:t={t}",
                         ckpt.write,
                         t,
-                        state,
+                        _states(carried),
                         metrics={k: stats[k] for k in stats if k != "wall_s"},
                     )
                 stats["wall_s"] = time.monotonic() - tic
@@ -1600,4 +1687,5 @@ def run_program(
             writer.wait()
             raise
         writer.join()  # surface any failure of the final durable write
-        return RunResult(state, t, converged, history, resumed_from=t0)
+    state = _states(carried).select(*program.state_cols)
+    return RunResult(state, t, converged, history, resumed_from=t0)

@@ -568,3 +568,27 @@ def test_emb_meandot_audit_overflow_raises_loudly(spark, tmp_path):
     ).write.parquet(f"{sf}/embeddings.parquet")
     with pytest.raises(Exception, match="overflows int64"):
         emb_meandot_audit(spark, sf).collect()
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_emb_meandot_audit_sum_sq_norm_overflow_raises(spark, tmp_path, ansi):
+    """A mean-zero label: [+3.1e5] and [-3.1e5] quantize to q = ±3.1e9,
+    so every per-dim sum s is 0 (norm_sq_sum = 0, far under the bound)
+    while each q² = 9.61e18 already exceeds 2^63-1.  The sum_sq_norm
+    accumulator must raise, also with ANSI off, where an int64 sum would
+    wrap silently."""
+    from linkgraph.ann import emb_meandot_audit
+
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [(0, 7, [3.1e5]), (1, 7, [-3.1e5])],
+        "vec_id long, label int, embedding array<double>",
+    ).write.parquet(f"{sf}/embeddings.parquet")
+    key = "spark.sql.ansi.enabled"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, ansi)
+        with pytest.raises(Exception, match="sum_sq_norm overflows int64"):
+            emb_meandot_audit(spark, sf).collect()
+    finally:
+        spark.conf.set(key, saved)

@@ -49,7 +49,10 @@ def test_sql_floor_division_convention(con, a, b):
     """The sign-portable floor division (a - ((a%b)+b)%b) // b equals
     python's // for either sign of a — including past 2^53, where the
     old /-based form could drift (ADVICE r04)."""
-    expr = f"SELECT CAST(((?) - ((((?) % (?)) + (?)) % (?))) // (?) AS BIGINT)"
+    # operands typed BIGINT: DuckDB would otherwise bind small python ints
+    # as INT32 and overflow (a % b) + b near 2^31
+    x = "CAST(? AS BIGINT)"
+    expr = f"SELECT CAST((({x}) - (((({x}) % ({x})) + ({x})) % ({x}))) // ({x}) AS BIGINT)"
     got = con.execute(expr, [a, a, b, b, b, b]).fetchone()[0]
     assert got == a // b
 

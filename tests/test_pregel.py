@@ -15,6 +15,7 @@ from linkgraph.pregel import (
     LabelPropProgram,
     PageRankProgram,
     PersonalizedPageRankProgram,
+    _materialize,
     aqe_off,
     run_program,
 )
@@ -198,38 +199,99 @@ def test_katz_hub_split_equals_unsplit(spark, make_prog):
         ctx_split.unpersist()
 
 
+def _plan_tree(df) -> list[tuple[int, str]]:
+    """(depth, operator name) of each node in the executed physical plan of
+    ``df``, in tree-string order."""
+    tree = df._jdf.queryExecution().executedPlan().treeString()  # noqa: SLF001
+    node = re.compile(r"^([\s:+\-|]*)(?:\*\(\d+\) )?(\w+)")
+    return [
+        (len(m.group(1)) // 3, m.group(2))
+        for m in map(node.match, tree.splitlines())
+        if m is not None
+    ]
+
+
 def _plan_nodes(df) -> Counter:
     """Operator names in the executed physical plan of ``df``, one per node."""
-    tree = df._jdf.queryExecution().executedPlan().treeString()  # noqa: SLF001
-    node = re.compile(r"^[\s:+\-|]*(?:\*\(\d+\) )?(\w+)")
-    return Counter(node.match(line).group(1) for line in tree.splitlines() if line.strip())
+    return Counter(name for _depth, name in _plan_tree(df))
+
+
+def _ancestors(df, name: str) -> list[list[str]]:
+    """For each ``name`` node of the executed plan, the operators above it,
+    nearest first."""
+    tree = _plan_tree(df)
+    out = []
+    for i, (depth, op) in enumerate(tree):
+        if op == name:
+            up, want = [], depth - 1
+            for d, o in reversed(tree[:i]):
+                if d == want:
+                    up.append(o)
+                    want -= 1
+            out.append(up)
+    return out
+
+
+def _star_hub_ctx(spark, split: bool):
+    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    kw = {"hub_theta": 0, "hub_floor": 0} if split else {}
+    ctx = GraphContext.build(g, 4, **kw)
+    assert (ctx.hub_edges is not None) == split
+    return ctx
 
 
 @pytest.mark.parametrize(
     "split, expected",
     [
-        (False, {"Exchange": 2, "BroadcastExchange": 0, "FlatMapCoGroupsInArrow": 2}),
+        (False, {"Exchange": 1, "BroadcastExchange": 0, "FlatMapCoGroupsInArrow": 1}),
         # the hub pack adds the vid->rank map's aggregation exchange and the
         # broadcasts of the hub vid set and of the map
-        (True, {"Exchange": 3, "BroadcastExchange": 2, "FlatMapCoGroupsInArrow": 2}),
+        (True, {"Exchange": 2, "BroadcastExchange": 2, "FlatMapCoGroupsInArrow": 1}),
     ],
     ids=["unsplit", "split"],
 )
 def test_pagerank_superstep_plan_shape(spark, split, expected):
-    """One PageRank superstep, built through the program API with AQE off
-    as run_program runs it: the message shuffle and the state re-pin are
-    the only full exchanges, scatter and apply the only Python stages."""
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
-    kw = {"hub_theta": 0, "hub_floor": 0} if split else {}
-    ctx = GraphContext.build(g, 4, **kw)
+    """One PageRank superstep through the composite ``superstep()`` with
+    AQE off, as a caller re-pins it: the caller's repartition is the only
+    full exchange (the prologue is materialized inside superstep()), and
+    the fused apply+scatter cogroup the only Python stage."""
+    ctx = _star_hub_ctx(spark, split)
     try:
-        assert (ctx.hub_edges is not None) == split
         prog = PageRankProgram()
         with aqe_off(spark):
             state = prog.init_state(ctx).repartition(ctx.P, "part_id").localCheckpoint()
             step = prog.superstep(ctx, state).select(*prog.state_cols)
             nodes = _plan_nodes(step.repartition(ctx.P, "part_id"))
         assert {k: nodes[k] for k in expected} == expected
+    finally:
+        ctx.unpersist()
+
+
+@pytest.mark.parametrize("split", [False, True], ids=["unsplit", "split"])
+def test_pagerank_fused_step_plan_shape(spark, split):
+    """The in-loop superstep: one cogroup of the static blocks with the
+    materialized carried table, then the one message Exchange.  Split, the
+    hub messages join the carried side through a Union whose children are
+    both partitioned by part_id, so no Exchange sits above it."""
+    ctx = _star_hub_ctx(spark, split)
+    try:
+        prog = PageRankProgram()
+        with aqe_off(spark):
+            carried, carry = _materialize(prog, ctx, prog._prologue(ctx, prog.init_state(ctx)), 0)
+            step = prog._step(ctx, carried, carry).repartition(ctx.P, "part_id")
+            nodes = _plan_nodes(step)
+            unions = _ancestors(step, "Union")
+        assert nodes["FlatMapCoGroupsInArrow"] == 1
+        if split:
+            # nothing between the Union and the cogroup re-shuffles
+            assert len(unions) == 1
+            up = unions[0]
+            assert "Exchange" not in up[: up.index("FlatMapCoGroupsInArrow")]
+        else:
+            assert {k: nodes[k] for k in ("Exchange", "BroadcastExchange")} == {
+                "Exchange": 1, "BroadcastExchange": 0,
+            }
+            assert unions == []
     finally:
         ctx.unpersist()
 
@@ -255,6 +317,42 @@ def test_run_program_restores_aqe(spark, synth_ctx, prior):
         assert spark.conf.get(key) == prior
     finally:
         spark.conf.set(key, saved)
+
+
+def _job_descriptions(sc) -> dict[int, str]:
+    """jobId -> description of every job in the status store, after the
+    listener bus has caught up."""
+    import json
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    jvm = sc._jvm  # noqa: SLF001
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala_mod = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala_mod, "MODULE$"))
+    jobs = sc._jsc.sc().statusStore().jobsList(jvm.java.util.ArrayList())  # noqa: SLF001
+    return {j["jobId"]: j.get("description") for j in json.loads(mapper.writeValueAsString(jobs))}
+
+
+def test_run_program_job_descriptions(spark, synth_ctx, tmp_path):
+    """Every job of a checkpointed run names its layer and superstep — the
+    prologue under the starting step, durable writes under checkpoint.* —
+    and the caller's job description is restored afterwards."""
+    _g, ctx = synth_ctx
+    sc = spark.sparkContext
+    before = set(_job_descriptions(sc))
+    sc.setJobDescription("caller")
+    try:
+        run_program(
+            ctx, ComponentsProgram(), fixed_iters=2, ckpt_root=str(tmp_path), resume=False
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    new = {d for j, d in _job_descriptions(sc).items() if j not in before}
+    assert new == {
+        "pregel.components:t=0", "pregel.components:t=1", "pregel.components:t=2",
+        "checkpoint.components:t=1", "checkpoint.components:t=2",
+    }
 
 
 def _graph_from_pairs(spark, pairs, n):

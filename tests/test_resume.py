@@ -5,10 +5,17 @@ import os
 import shutil
 
 import numpy as np
+import pytest
 
 from linkgraph.derive import build_graph
-from linkgraph.pregel import ComponentsProgram, GraphContext, PageRankProgram, run_program
-from linkgraph.synth import synth_transcripts
+from linkgraph.pregel import (
+    BFSProgram,
+    ComponentsProgram,
+    GraphContext,
+    PageRankProgram,
+    run_program,
+)
+from linkgraph.synth import micro_transcripts, synth_transcripts
 
 P = 8
 
@@ -74,6 +81,37 @@ def test_kill_and_resume_equals_uninterrupted(tmp_path, spark):
         assert resumed.supersteps == full.supersteps
         # bit-identical: both runs read state from parquet checkpoints
         assert (_ranks(resumed.state, n) == r_full).all()
+    finally:
+        ctx.unpersist()
+
+
+@pytest.mark.parametrize(
+    "make_prog",
+    [
+        lambda spark: PageRankProgram(tol=0.0),
+        lambda spark: BFSProgram(spark.createDataFrame([(0,)], "vid long")),
+    ],
+    ids=["pagerank", "bfs"],
+)
+def test_hub_split_kill_and_resume_equals_uninterrupted(tmp_path, spark, make_prog):
+    """Forced hub split on star_hub, killed after step 2 of 4: the resumed
+    run starts with the prologue on the checkpointed state and unions the
+    hub messages (static pack for PageRank, frontier join for BFS) into
+    its first superstep, and ends bit-identical to the uninterrupted run."""
+    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    ctx = GraphContext.build(g, 4, hub_theta=0, hub_floor=0)
+    n = ctx.n_vertices
+    try:
+        assert ctx.hub_edges is not None and ctx.uhub_edges is not None
+        full = run_program(ctx, make_prog(spark), fixed_iters=4, ckpt_root=str(tmp_path / "a"))
+        root_b = str(tmp_path / "b")
+        algo = make_prog(spark).name
+        run_program(ctx, make_prog(spark), fixed_iters=4, ckpt_root=root_b)
+        for s in _steps(root_b, algo)[2:]:
+            shutil.rmtree(os.path.join(root_b, algo, s))
+        resumed = run_program(ctx, make_prog(spark), fixed_iters=4, ckpt_root=root_b)
+        assert resumed.resumed_from == 2 and resumed.supersteps == full.supersteps == 4
+        assert np.array_equal(_ranks(resumed.state, n), _ranks(full.state, n))
     finally:
         ctx.unpersist()
 
