@@ -3,7 +3,9 @@
 Usage:
   spark-submit --master local[8] --py-files build/linkgraph.zip \
       bench/submit_main.py [sf_dir]
-Runs the flagship events-graph query and prints the top-10 + row count.
+Runs the flagship events-graph query (5 PageRank supersteps of the CSR
+engine, whose Arrow cogroup UDFs run in the executors' Python workers off
+the zipped package) and prints the top-10 + row count.
 """
 import sys
 

@@ -14,8 +14,8 @@ pre-registered ``events`` view.  Semantics mirrored exactly:
 - vids: dense, assigned by sorted vkey (``row_number() OVER (ORDER BY vkey)
   - 1``) — identical to the Spark side's sorted-window assignment.
 - PageRank: r_t(v) = (1-d)/n + d*(sum_{u->v} r_{t-1}(u)*w/out_w(u)
-  + dangling_mass_{t-1}/n); float64; matches pagerank_naive / the CSR
-  engine (pregel.PageRankProgram) exactly.
+  + dangling_mass_{t-1}/n); float64; matches the CSR engine
+  (pregel.PageRankProgram) exactly.
 - LPA: synchronous, new label = most frequent neighbour label over the
   undirected simple graph, ties -> min label, isolated vertices keep theirs;
   labels live in vkey space (min vid == min vkey under sorted assignment).

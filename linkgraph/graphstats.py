@@ -2566,12 +2566,16 @@ def _decayed_graph(spark: SparkSession, sf_dir: str):
 def q_decayed_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency-weighted authority: 5 fixed PageRank supersteps over the
     time-decayed events graph, top-10 actors by rounded rank."""
-    from .pagerank import pagerank_naive
+    from .pregel import GraphContext, PageRankProgram, run_program
 
     g = _decayed_graph(spark, sf_dir)
-    res = pagerank_naive(g, tol=0.0, max_iter=_DECAY_STEPS)
+    ctx = GraphContext.build(g, 8)
+    try:
+        ranks = run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=_DECAY_STEPS).state
+    finally:
+        ctx.unpersist()
     return (
-        res.ranks.join(g.vertices, "vid")
+        ranks.join(g.vertices, "vid")
         .select(F.col("vkey").alias("actor"), F.round("rank", 6).alias("rank"))
         .orderBy(F.desc("rank"), "actor")
         .limit(10)
@@ -3468,13 +3472,17 @@ def q_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-``_STAB_TOPK``, its rank position in BOTH halves and the absolute
     position delta.  Positions rank on the ROUNDED score with vkey
     tiebreak so both engines order identically."""
-    from .pagerank import pagerank_naive
+    from .pregel import GraphContext, PageRankProgram, run_program
 
     pos = []
     for p in (0, 1):
         g = _parity_graph(spark, sf_dir, p)
-        res = pagerank_naive(g, tol=0.0, max_iter=_STAB_STEPS)
-        r = res.ranks.join(g.vertices, "vid").select(
+        ctx = GraphContext.build(g, 8)
+        try:
+            ranks = run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=_STAB_STEPS).state
+        finally:
+            ctx.unpersist()
+        r = ranks.join(g.vertices, "vid").select(
             "vkey", F.round("rank", 6).alias("r")
         )
         w = Window.orderBy(F.desc("r"), "vkey")

@@ -54,9 +54,9 @@ adds no Exchange.
 
 The scatter carries at most |udst| values per block (unique dsts), not nnz —
 the block-local bincount is the map-side combine — packed as P array rows
-per block.  Skewed hub dsts are therefore bounded by P partial rows each;
-the explicit salted two-phase aggregation for raw message streams lives in
-skew.py and is used by the naive (non-CSR) paths.
+per block.  Skewed hub dsts are therefore bounded by P partial rows each,
+so no engine path needs the explicit salted two-phase aggregation for raw
+message streams (``skew.salted_sum``).
 """
 
 from __future__ import annotations
@@ -156,7 +156,10 @@ class GraphContext:
         independent job chains off ONE shared pre-summed edge scan; they are
         materialized from concurrent driver threads (Spark schedules jobs
         from separate threads in parallel), which overlaps their fixed
-        per-job latencies (VERDICT r01 item 5).
+        per-job latencies (VERDICT r01 item 5).  Each thread tags its jobs
+        ``context.build:<phase>`` (count_vertices, esum, ddeg_stats,
+        sym_stats, directed, undirected, base, fp); the caller's job
+        description is untouched.
 
         AQE is DISABLED for the MATERIALIZATION phase of the build (the
         four threads that checkpoint blocks/ublocks/base): ``localCheckpoint``
@@ -242,34 +245,29 @@ class GraphContext:
                 pre["unnz"] = int(urow["nnz"] or 0)
                 pre["udeg"] = udeg
 
-            subs = [
-                threading.Thread(target=_pre_guard(fn), daemon=True)
-                for fn in (_ddeg_stats, _sym_stats)
-            ]
-            for th in subs:
+            _concurrently(pre_errs, _ddeg_stats, _sym_stats)
+
+        def _concurrently(errs: list, *fns) -> None:
+            """Run fns on concurrent threads and join them; each thread tags
+            its jobs ``context.build:<fn name>`` and appends any failure to
+            errs."""
+
+            def run(fn):
+                try:
+                    with _job_description(spark.sparkContext) as describe:
+                        describe(f"context.build:{fn.__name__.lstrip('_')}")
+                        fn()
+                except BaseException as exc:  # surface thread failures
+                    errs.append(exc)
+
+            threads = [threading.Thread(target=run, args=(fn,), daemon=True) for fn in fns]
+            for th in threads:
                 th.start()
-            for th in subs:
+            for th in threads:
                 th.join()
 
         pre_errs: list[BaseException] = []
-
-        def _pre_guard(fn):
-            def run():
-                try:
-                    fn()
-                except BaseException as exc:
-                    pre_errs.append(exc)
-
-            return run
-
-        pre_threads = [
-            threading.Thread(target=_pre_guard(fn), daemon=True)
-            for fn in (_count_vertices, _esum)
-        ]
-        for th in pre_threads:
-            th.start()
-        for th in pre_threads:
-            th.join()
+        _concurrently(pre_errs, _count_vertices, _esum)
         if pre_errs:
             raise pre_errs[0]
         n, esum = pre["n"], pre["esum"]
@@ -403,28 +401,12 @@ class GraphContext:
             # equally deterministic, order-insensitive lineage identity.
             out["fp"] = input_fingerprint(esum)
 
-        def _guard(fn):
-            def run():
-                try:
-                    fn()
-                except BaseException as exc:  # surface thread failures
-                    errs.append(exc)
-
-            return run
-
-        threads = [
-            threading.Thread(target=_guard(fn), daemon=True)
-            for fn in (_directed, _undirected, _base, _fp)
-        ]
         # AQE off ONLY while the loop-facing tables are checkpointed, so the
         # captured LogicalRDD leaves keep hashpartitioning(part_id, P) — see
         # the build() docstring.  (Session conf is driver-global; the build
         # owns the session for this window, exactly like run_program's loop.)
         with aqe_off(spark):
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join()
+            _concurrently(errs, _directed, _undirected, _base, _fp)
         if errs:
             raise errs[0]
 

@@ -4,8 +4,9 @@ Two complementary mechanisms:
 
 1. ``salted_sum`` — two-phase salted aggregation for any (key, value)
    message stream: pre-aggregate on (key, salt) so no single reducer owns a
-   hub key's full message volume, then finalize on key.  Used by the naive
-   (non-CSR) paths and property-tested equal to the unsalted aggregate.
+   hub key's full message volume, then finalize on key.  Property-tested
+   equal to the unsalted aggregate; no engine path calls it (the CSR
+   scatter pre-aggregates per block, see below).
 
 2. ``split_hub_edges`` — scatter-side hub splitting for the CSR path.  Mod
    partitioning puts ALL out-edges of a vertex in one block, so a hub source

@@ -361,21 +361,28 @@ def _host_graph(spark: SparkSession, sf_dir: str):
     )
 
 
+def _host_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(host, rank): 5 fixed CSR-engine PageRank supersteps over the host
+    co-citation graph, rank rounded to 6 decimals."""
+    from .pregel import GraphContext, PageRankProgram, run_program
+
+    g = _host_graph(spark, sf_dir)
+    ctx = GraphContext.build(g, 8)
+    try:
+        ranks = run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=_PR_STEPS).state
+    finally:
+        ctx.unpersist()
+    return ranks.join(g.vertices, "vid").select(
+        F.col("vkey").alias("host"), F.round("rank", 6).alias("rank")
+    )
+
+
 def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain authority: 5 fixed PageRank supersteps over the host
     co-citation graph, top-10 hosts by rounded rank (the same fixed-k +
     round-to-6 protocol as the flagship, so the unrolled-CTE oracle is a
     full hash check).  Output (host, rank)."""
-    from .pagerank import pagerank_naive
-
-    g = _host_graph(spark, sf_dir)
-    res = pagerank_naive(g, tol=0.0, max_iter=_PR_STEPS)
-    return (
-        res.ranks.join(g.vertices, "vid")
-        .select(F.col("vkey").alias("host"), F.round("rank", 6).alias("rank"))
-        .orderBy(F.desc("rank"), "host")
-        .limit(10)
-    )
+    return _host_ranks(spark, sf_dir).orderBy(F.desc("rank"), "host").limit(10)
 
 
 _HOST_GRAPH_CTES = f"""
@@ -428,13 +435,8 @@ def q_rank_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable sum, then ONE top-k — per-partition heaps, no global sort.
     Output (doc_id, w, skey)."""
     from .datapipe import _md5_int
-    from .pagerank import pagerank_naive
 
-    g = _host_graph(spark, sf_dir)
-    res = pagerank_naive(g, tol=0.0, max_iter=_PR_STEPS)
-    ranks = res.ranks.join(g.vertices, "vid").select(
-        F.col("vkey").alias("host"), F.round("rank", 6).alias("rank")
-    )
+    ranks = _host_ranks(spark, sf_dir)
     d = _with_sub_urls(load_table(spark, sf_dir, "documents"))
     dh = d.select(
         "doc_id",

@@ -355,6 +355,31 @@ def test_run_program_job_descriptions(spark, synth_ctx, tmp_path):
     }
 
 
+def test_context_build_job_descriptions(spark):
+    """Every job of GraphContext.build (hub split forced, so every build
+    thread runs jobs) names its build phase, and the caller's job
+    description is restored afterwards."""
+    g = build_graph(synth_transcripts(spark, n_conversations=30, seed=7))
+    sc = spark.sparkContext
+    before = set(_job_descriptions(sc))
+    sc.setJobDescription("caller")
+    try:
+        ctx = GraphContext.build(g, P, hub_theta=2, hub_floor=0)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    ctx.unpersist()
+    assert ctx.nnz_hub > 0 and ctx.nnz_uhub > 0
+    new = {d for j, d in _job_descriptions(sc).items() if j not in before}
+    assert new == {
+        f"context.build:{phase}"
+        for phase in (
+            "count_vertices", "esum", "ddeg_stats", "sym_stats",
+            "directed", "undirected", "base", "fp",
+        )
+    }
+
+
 def _graph_from_pairs(spark, pairs, n):
     from linkgraph.derive import GraphTables, build_degrees
 
