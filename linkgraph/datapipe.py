@@ -1359,32 +1359,15 @@ def cluster_pairs(pairs: DataFrame) -> DataFrame:
     canonical (min doc_id of its connected cluster), via the hash-min
     Pregel engine.  Exposed separately so the transitive-closure semantics
     are unit-testable on planted chains (tests/test_datapipe.py)."""
-    from .derive import GraphTables, build_degrees
+    from .derive import key_graph
     from .pregel import ComponentsProgram, GraphContext, run_program
 
-    keys = (
-        pairs.select(F.col("doc_a").alias("did"))
-        .unionByName(pairs.select(F.col("doc_b").alias("did")))
-        .distinct()
+    # numeric doc_id keys order numerically -> min vid == min doc_id
+    edges = pairs.select(
+        F.col("doc_a").alias("s"), F.col("doc_b").alias("t"),
+        F.lit("dup").alias("etype"), F.lit(1.0).alias("w"),
     )
-    vw = Window.orderBy("did")  # numeric order -> min vid == min doc_id
-    verts = keys.select(
-        F.col("did"),
-        F.col("did").cast("string").alias("vkey"),
-        (F.row_number().over(vw) - 1).cast("long").alias("vid"),
-        F.lit("doc").alias("vtype"),
-    )
-    va = verts.select(F.col("did").alias("doc_a"), F.col("vid").alias("src"))
-    vb = verts.select(F.col("did").alias("doc_b"), F.col("vid").alias("dst"))
-    edges = (
-        pairs.join(va, "doc_a")
-        .join(vb, "doc_b")
-        .select("src", "dst", F.lit("dup").alias("etype"), F.lit(1.0).alias("w"))
-    )
-    vertices = verts.select("vkey", "vid", "vtype")
-    g = GraphTables(
-        vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices)
-    )
+    g = key_graph(edges, F.lit("doc"))
     ctx = GraphContext.build(g, 4)
     try:
         res = run_program(ctx, ComponentsProgram(), max_iter=50)
@@ -1396,7 +1379,8 @@ def cluster_pairs(pairs: DataFrame) -> DataFrame:
                 "doc_dedup_clusters: components did not converge in 50 "
                 "supersteps; raise max_iter for this corpus"
             )
-        vmap = verts.select("vid", "did")
+        did = pairs.schema["doc_a"].dataType
+        vmap = g.vertices.select("vid", F.col("vkey").cast(did).alias("did"))
         canon = vmap.select(F.col("vid").alias("comp"), F.col("did").alias("canon_doc"))
         return (
             res.state.join(vmap, "vid")

@@ -4,16 +4,20 @@ Pipeline:
   transcripts --stable ordering--> ordered turns
              --lead() window-->    consecutive-turn edges (actor -> actor)
              --filter-->           tool-invocation edges  (actor -> tool)
-             --distinct+sort-->    vertex map (dense deterministic vids)
+             --distinct+dense_ids-> vertex map (dense vids in (vtype, vkey) order)
              --join+groupBy-->     edge table (src,dst,etype, w=multiplicity)
              --groupBy-->          degree table
 
 Invariants (BASELINE.json north_rule / input_hint):
 - stable turn ordering: sort key (conv_id, turn_idx, ts); the derived edge
   set is invariant to the physical row order of the input (property-tested).
-- vids are dense int64, assigned deterministically; NO
+- vids are dense int64 and equal ``row_number() OVER (ORDER BY vtype,
+  vkey) - 1``: ``dense_ids`` computes exactly that window's ids with a
+  range-partitioned sort, so no stage funnels the vertex set through one
+  task and the DuckDB oracles can replay the ids as plain SQL.  NO
   ``monotonically_increasing_id`` anywhere (non-deterministic across
-  runs/partitionings — SURVEY.md op 39).
+  runs/partitionings — SURVEY.md op 39).  ``key_graph`` applies the same
+  ids to the single-namespace key graphs the registry queries derive.
 - actor keys are normalized ``lower(trim(role))``; tool keys
   ``lower(trim(tool))``; vertex identity is (vkey, vtype).
 """
@@ -22,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 TURN = "turn"
@@ -96,19 +100,78 @@ def edge_keys(transcripts: DataFrame) -> DataFrame:
     return turn_edge_keys(ordered).unionByName(tool_edge_keys(ordered))
 
 
-def build_vertices(ekeys: DataFrame, distributed: bool = False) -> DataFrame:
+def dense_ids(keys: DataFrame, *order_cols: str) -> DataFrame:
+    """``keys`` plus ``vid`` = ``row_number() OVER (ORDER BY order_cols) - 1``.
+
+    The same ids as that global window, without its single-task stage:
+    range-partition by ``order_cols`` (partition p holds a contiguous key
+    range), tag each row with its partition and materialize, collect the
+    per-partition row counts (at most ``spark.sql.shuffle.partitions``
+    rows) and add each partition's prefix offset to a partition-local
+    ``row_number``.  ``order_cols`` must be unique over ``keys`` (they are
+    the keys themselves at every call site), or ties make the window
+    nondeterministic too.  Runs eagerly: the range partitioner's sampling
+    job, the checkpoint job and the count collect.
+    """
+    spark = keys.sparkSession
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    tagged = (
+        keys.repartitionByRange(n_parts, *order_cols)
+        .withColumn("_p", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    counts = sorted(tuple(r) for r in tagged.groupBy("_p").count().collect())
+    offsets, acc = [], 0
+    for p, c in counts:
+        offsets.append((p, acc))
+        acc += c
+    off = spark.createDataFrame(offsets, "_p int, _off long")
+    w = Window.partitionBy("_p").orderBy(*order_cols)
+    return tagged.join(F.broadcast(off), "_p").select(
+        *keys.columns,
+        (F.col("_off") + F.row_number().over(w) - 1).cast("long").alias("vid"),
+    )
+
+
+def key_graph(
+    ekeys: DataFrame, vtype: Column, vkeys: DataFrame | None = None
+) -> GraphTables:
+    """Key-space edges ``(s, t, etype, w)`` -> ``GraphTables``, vids dense in
+    key order.
+
+    The vertex set is ``vkeys`` (one column ``vkey``) when given, so
+    zero-degree vertices stay in it; otherwise the distinct edge endpoints.
+    ``vtype`` is a Column over ``vkey``.  Edge rows are mapped one to one,
+    not aggregated: callers that want one weighted row per link group in
+    key space first.  A numeric key orders numerically; ``vertices.vkey``
+    is its string form.
+    """
+    if vkeys is None:
+        vkeys = (
+            ekeys.select(F.col("s").alias("vkey"))
+            .unionByName(ekeys.select(F.col("t").alias("vkey")))
+            .distinct()
+        )
+    ids = dense_ids(vkeys, "vkey")
+    vertices = ids.select(
+        F.col("vkey").cast("string").alias("vkey"), "vid", vtype.alias("vtype")
+    )
+    v = F.broadcast(ids)
+    edges = (
+        ekeys.join(v.select(F.col("vkey").alias("s"), F.col("vid").alias("src")), "s")
+        .join(v.select(F.col("vkey").alias("t"), F.col("vid").alias("dst")), "t")
+        .select("src", "dst", "etype", "w")
+    )
+    return GraphTables(vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices))
+
+
+def build_vertices(ekeys: DataFrame) -> DataFrame:
     """Vertex map with dense deterministic vids (op 43).
 
     Identity = (vkey, vtype): srcs are always actors; dsts are actors for
-    turn-edges and tools for tool-edges.
-
-    Default path: global sort + ``row_number()`` (single-partition window).
-    The vertex vocabulary (distinct actors + tools) is orders of magnitude
-    smaller than the turn count, so this is fine up to ~10^7 vertices.
-    ``distributed=True`` switches to a deterministic two-phase scheme (hash
-    bucket -> per-bucket offsets -> bucket-local row_number) that never
-    funnels through one task; vids are still dense + deterministic but not
-    globally key-ordered.
+    turn-edges and tools for tool-edges.  vids follow (vtype, vkey) order
+    and are assigned by ``dense_ids``, which never funnels the vertex set
+    through one task.
     """
     srcs = ekeys.select(F.col("src_key").alias("vkey"), F.lit(ACTOR_T).alias("vtype"))
     dsts = ekeys.select(
@@ -116,50 +179,17 @@ def build_vertices(ekeys: DataFrame, distributed: bool = False) -> DataFrame:
         F.when(F.col("etype") == TOOL, F.lit(TOOL_T)).otherwise(F.lit(ACTOR_T)).alias("vtype"),
     )
     keys = srcs.unionByName(dsts).distinct()
-
-    if not distributed:
-        w = Window.orderBy("vtype", "vkey")
-        return keys.select(
-            "vkey", (F.row_number().over(w) - 1).cast("long").alias("vid"), "vtype"
-        )
-
-    # Distributed deterministic dense ids: bucket by hash, compute bucket
-    # offsets on the driver (B rows), then bucket-local row_number + offset.
-    # The bucketed key set is materialized once (localCheckpoint): the
-    # offsets job and the final id assignment would otherwise each re-run
-    # the full distinct over the edge-key stream.
-    n_buckets = 256
-    bucketed = keys.withColumn(
-        "b", F.pmod(F.xxhash64("vtype", "vkey"), F.lit(n_buckets)).cast("int")
-    ).localCheckpoint()
-    counts = {r["b"]: r["c"] for r in bucketed.groupBy("b").agg(F.count("*").alias("c")).collect()}
-    offsets, acc = {}, 0
-    for b in range(n_buckets):
-        offsets[b] = acc
-        acc += counts.get(b, 0)
-    off_df = bucketed.sparkSession.createDataFrame(
-        [(b, offsets[b]) for b in range(n_buckets)], "b int, off long"
-    )
-    wb = Window.partitionBy("b").orderBy("vtype", "vkey")
-    return (
-        bucketed.join(F.broadcast(off_df), "b")
-        .select(
-            "vkey",
-            (F.col("off") + F.row_number().over(wb) - 1).cast("long").alias("vid"),
-            "vtype",
-        )
-    )
+    return dense_ids(keys, "vtype", "vkey").select("vkey", "vid", "vtype")
 
 
-def build_edges(ekeys: DataFrame, vertices: DataFrame, broadcast_vertices: bool = True) -> DataFrame:
+def build_edges(ekeys: DataFrame, vertices: DataFrame) -> DataFrame:
     """Map keys -> vids and dedup to weighted edges (op 44).
 
     w = multiplicity of the (src,dst,etype) link (double, for weighted
-    PageRank).  The vertex map is broadcast by default — it is small relative
-    to the edge table at every scale tier (hub-list pattern, SURVEY.md op 11);
-    pass False to fall back to shuffle joins at extreme vertex counts.
+    PageRank).  The vertex map is broadcast — it is small relative to the
+    edge table at every scale tier (hub-list pattern, SURVEY.md op 11).
     """
-    v = F.broadcast(vertices) if broadcast_vertices else vertices
+    v = F.broadcast(vertices)
     vsrc = v.where(F.col("vtype") == ACTOR_T).select(
         F.col("vkey").alias("src_key"), F.col("vid").alias("src")
     )
@@ -203,25 +233,21 @@ def build_degrees(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     )
 
 
-def build_graph(
-    transcripts: DataFrame, distributed_ids: bool = True, cache: bool = False
-) -> GraphTables:
+def build_graph(transcripts: DataFrame, cache: bool = False) -> GraphTables:
     """Full derivation: transcripts -> (vertices, edges, degrees).
 
-    ``distributed_ids`` defaults to True — the PRODUCTION path: vid
-    assignment never funnels through a single task (the global-sort
-    variant's single-partition window is a scale-killer past ~10^7
-    vertices; VERDICT r01 item 3).  Pass False only where downstream logic
-    needs vids globally ordered by (vtype, vkey).
+    vids are dense in (vtype, vkey) order (``build_vertices``); the vertex
+    map is materialized while it is built (``dense_ids``), the edge and
+    degree tables stay lazy.
 
     ``cache=True`` eagerly materializes the edge-key stream once
     (localCheckpoint) so the vertex/edge/degree builds don't each re-run the
-    transcript window pass — use for bench/production builds; tests keep the
-    pure-lazy default."""
+    transcript window pass — use for bench/production builds; tests keep
+    the default."""
     ekeys = edge_keys(transcripts)
     if cache:
         ekeys = ekeys.localCheckpoint()
-    vertices = build_vertices(ekeys, distributed=distributed_ids)
+    vertices = build_vertices(ekeys)
     edges = build_edges(ekeys, vertices)
     degrees = build_degrees(edges, vertices)
     return GraphTables(vertices=vertices, edges=edges, degrees=degrees)

@@ -271,37 +271,22 @@ GROUP BY c.comp_key
 def engine_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle total over the events turn-edge graph via the engine's
     degree-oriented 2-join (triangles.py); SQL oracle = 3-way self-join."""
-    from .derive import GraphTables, build_degrees
+    from .derive import key_graph
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         e.select(
-            F.col("event_type").alias("src_key"),
-            F.lead("event_type").over(w).alias("dst_key"),
+            F.col("event_type").alias("s"),
+            F.lead("event_type").over(w).alias("t"),
         )
-        .where(F.col("dst_key").isNotNull())
-    )
-    keys = (
-        pairs.select(F.col("src_key").alias("vkey"))
-        .unionByName(pairs.select(F.col("dst_key").alias("vkey")))
-        .distinct()
-    )
-    vw = Window.orderBy("vkey")
-    vertices = keys.select(
-        "vkey", (F.row_number().over(vw) - 1).cast("long").alias("vid"),
-        F.lit("actor").alias("vtype"),
-    )
-    v = F.broadcast(vertices)
-    edges = (
-        pairs.join(v.select(F.col("vkey").alias("src_key"), F.col("vid").alias("src")), "src_key")
-        .join(v.select(F.col("vkey").alias("dst_key"), F.col("vid").alias("dst")), "dst_key")
-        .groupBy("src", "dst")
+        .where(F.col("t").isNotNull())
+        .groupBy("s", "t")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
         .withColumn("etype", F.lit("turn"))
     )
-    g = GraphTables(vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices))
+    g = key_graph(pairs, F.lit("actor"))
     res = count_triangles(g)
     out = spark.createDataFrame([(res.total,)], "n_triangles bigint")
     res.unpersist()

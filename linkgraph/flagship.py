@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .derive import GraphTables, build_degrees
+from .derive import GraphTables, key_graph
 from .io import load_table
 from .pregel import GraphContext, PageRankProgram, run_program
 
@@ -21,41 +21,23 @@ def events_graph(events: DataFrame) -> GraphTables:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
         "user_id",
-        F.col("event_type").alias("src_key"),
-        F.lead("event_type").over(w).alias("dst_key"),
+        F.col("event_type").alias("s"),
+        F.lead("event_type").over(w).alias("t"),
     )
-    turn = seq.where(F.col("dst_key").isNotNull()).select(
-        "src_key", "dst_key", F.lit("turn").alias("etype")
-    )
+    turn = seq.where(F.col("t").isNotNull()).select("s", "t", F.lit("turn").alias("etype"))
     tool = events.select(
-        F.concat(F.lit("user:"), F.col("user_id").cast("string")).alias("src_key"),
-        F.col("event_type").alias("dst_key"),
+        F.concat(F.lit("user:"), F.col("user_id").cast("string")).alias("s"),
+        F.col("event_type").alias("t"),
         F.lit("tool").alias("etype"),
     )
-    ekeys = turn.unionByName(tool)
-
-    # single shared namespace: every key is one vertex regardless of edge type
-    keys = (
-        ekeys.select(F.col("src_key").alias("vkey"))
-        .unionByName(ekeys.select(F.col("dst_key").alias("vkey")))
-        .distinct()
-    )
-    vw = Window.orderBy("vkey")
-    vertices = keys.select(
-        "vkey",
-        (F.row_number().over(vw) - 1).cast("long").alias("vid"),
-        F.when(F.col("vkey").startswith("user:"), F.lit("actor"))
-        .otherwise(F.lit("tool"))
-        .alias("vtype"),
-    )
-    v = F.broadcast(vertices)
-    edges = (
-        ekeys.join(v.select(F.col("vkey").alias("src_key"), F.col("vid").alias("src")), "src_key")
-        .join(v.select(F.col("vkey").alias("dst_key"), F.col("vid").alias("dst")), "dst_key")
-        .groupBy("src", "dst", "etype")
+    ekeys = (
+        turn.unionByName(tool)
+        .groupBy("s", "t", "etype")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
-    return GraphTables(vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices))
+    # single shared namespace: every key is one vertex regardless of edge type
+    vtype = F.when(F.col("vkey").startswith("user:"), F.lit("actor")).otherwise(F.lit("tool"))
+    return key_graph(ekeys, vtype)
 
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:

@@ -12,7 +12,9 @@ pre-registered ``events`` view.  Semantics mirrored exactly:
   user (stable order ts, event_id) plus ``user:<id> -> event_type``
   invocation edges; w = multiplicity (flagship.events_graph).
 - vids: dense, assigned by sorted vkey (``row_number() OVER (ORDER BY vkey)
-  - 1``) — identical to the Spark side's sorted-window assignment.
+  - 1``).  The engine's vids equal this SQL by construction:
+  ``derive.dense_ids`` (behind ``derive.key_graph``) computes exactly that
+  window's ids with a range-partitioned sort.
 - PageRank: r_t(v) = (1-d)/n + d*(sum_{u->v} r_{t-1}(u)*w/out_w(u)
   + dangling_mass_{t-1}/n); float64; matches the CSR engine
   (pregel.PageRankProgram) exactly.

@@ -1081,38 +1081,20 @@ def _components_over_keys(pairs: DataFrame) -> DataFrame:
     datapipe.cluster_pairs.  vids are assigned by sorted vkey, so the
     engine's min-vid label maps back to the lexicographically smallest key
     of each component."""
-    from .derive import GraphTables, build_degrees
+    from .derive import key_graph
     from .pregel import ComponentsProgram, GraphContext, run_program
 
-    keys = (
-        pairs.select(F.col("a").alias("vkey"))
-        .unionByName(pairs.select(F.col("b").alias("vkey")))
-        .distinct()
+    edges = pairs.select(
+        F.col("a").alias("s"), F.col("b").alias("t"),
+        F.lit("msf").alias("etype"), F.lit(1.0).alias("w"),
     )
-    vw = Window.orderBy("vkey")
-    verts = keys.select(
-        "vkey",
-        (F.row_number().over(vw) - 1).cast("long").alias("vid"),
-        F.lit("k").alias("vtype"),
-    )
-    va = verts.select(F.col("vkey").alias("a"), F.col("vid").alias("src"))
-    vb = verts.select(F.col("vkey").alias("b"), F.col("vid").alias("dst"))
-    edges = (
-        pairs.join(va, "a")
-        .join(vb, "b")
-        .select("src", "dst", F.lit("msf").alias("etype"), F.lit(1.0).alias("w"))
-    )
-    g = GraphTables(
-        vertices=verts.select("vkey", "vid", "vtype"),
-        edges=edges,
-        degrees=build_degrees(edges, verts),
-    )
+    g = key_graph(edges, F.lit("k"))
     ctx = GraphContext.build(g, 4)
     try:
         res = run_program(ctx, ComponentsProgram(), max_iter=100)
         if not res.converged:
             raise RuntimeError("components closure did not converge")
-        v = verts.select("vkey", "vid")
+        v = g.vertices.select("vkey", "vid")
         ck = v.select(F.col("vid").alias("comp"), F.col("vkey").alias("comp_key"))
         return res.state.join(v, "vid").join(ck, "comp").select("vkey", "comp_key")
     finally:
@@ -2199,9 +2181,11 @@ def q_rectangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cliques4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact K4 census over the undirected simple events graph; one row
     (k4_count, oriented_edges, max_outdeg).  The orientation rank is
-    row_number over (deg, vkey) — computed by the same distributed sort
-    the engine uses for dense vid assignment (derive.py), not a driver
-    collect."""
+    row_number over (deg, vkey) — computed by ``derive.dense_ids``, the
+    range-partitioned sort the engine uses for dense vid assignment, not
+    a single-task window or a collect of every key."""
+    from .derive import dense_ids
+
     dk = _directed_simple(spark, sf_dir)
     und = dk.select(
         F.least("s", "t").alias("u"), F.greatest("s", "t").alias("v")
@@ -2210,9 +2194,8 @@ def q_cliques4(spark: SparkSession, sf_dir: str) -> DataFrame:
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    rk = deg.select(
-        F.col("u").alias("vk"),
-        F.row_number().over(Window.orderBy("deg", "u")).cast("long").alias("rk"),
+    rk = dense_ids(deg, "deg", "u").select(
+        F.col("u").alias("vk"), (F.col("vid") + 1).alias("rk")
     )
     # o feeds SEVEN consumers (six quad projections + the degree stats);
     # materialized so the orientation derivation runs once (audit: 118
@@ -2515,7 +2498,7 @@ _DECAY_STEPS = 5
 
 
 def _decayed_graph(spark: SparkSession, sf_dir: str):
-    from .derive import GraphTables, build_degrees
+    from .derive import key_graph
 
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -2540,27 +2523,9 @@ def _decayed_graph(spark: SparkSession, sf_dir: str):
         )
         .groupBy("s", "t")
         .agg(F.sum("wo").alias("w"))
+        .withColumn("etype", F.lit("decayed"))
     )
-    vw = Window.orderBy("vkey")
-    vertices = (
-        e.select(F.col("s").alias("vkey"))
-        .unionByName(e.select(F.col("t").alias("vkey")))
-        .distinct()
-        .select(
-            "vkey",
-            (F.row_number().over(vw) - 1).cast("long").alias("vid"),
-            F.lit("actor").alias("vtype"),
-        )
-    )
-    v = F.broadcast(vertices)
-    edges = (
-        e.join(v.select(F.col("vkey").alias("s"), F.col("vid").alias("src")), "s")
-        .join(v.select(F.col("vkey").alias("t"), F.col("vid").alias("dst")), "t")
-        .select("src", "dst", F.lit("decayed").alias("etype"), "w")
-    )
-    return GraphTables(
-        vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices)
-    )
+    return key_graph(e, F.lit("actor"))
 
 
 def q_decayed_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3426,7 +3391,7 @@ _STAB_TOPK = 20
 
 
 def _parity_graph(spark: SparkSession, sf_dir: str, parity: int):
-    from .derive import GraphTables, build_degrees
+    from .derive import key_graph
 
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_id") % 2 == parity
@@ -3444,27 +3409,9 @@ def _parity_graph(spark: SparkSession, sf_dir: str, parity: int):
         turn.unionByName(tool)
         .groupBy("s", "t")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
+        .withColumn("etype", F.lit("half"))
     )
-    vw = Window.orderBy("vkey")
-    vertices = (
-        e.select(F.col("s").alias("vkey"))
-        .unionByName(e.select(F.col("t").alias("vkey")))
-        .distinct()
-        .select(
-            "vkey",
-            (F.row_number().over(vw) - 1).cast("long").alias("vid"),
-            F.lit("actor").alias("vtype"),
-        )
-    )
-    v = F.broadcast(vertices)
-    edges = (
-        e.join(v.select(F.col("vkey").alias("s"), F.col("vid").alias("src")), "s")
-        .join(v.select(F.col("vkey").alias("t"), F.col("vid").alias("dst")), "t")
-        .select("src", "dst", F.lit("half").alias("etype"), "w")
-    )
-    return GraphTables(
-        vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices)
-    )
+    return key_graph(e, F.lit("actor"))
 
 
 def q_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -238,43 +238,31 @@ def _affinity_graph(spark: SparkSession, sf_dir: str) -> GraphTables:
     """Bipartite affinity graph: ``user:<id> -> event_type`` where the user
     invoked the type >= _AFFINITY_MIN_COUNT times.  vids dense by sorted
     vkey (so vid order == vkey order, which the oracles rely on)."""
-    from .derive import build_degrees
+    from .derive import key_graph
     from .io import load_table
-    from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
+    user = F.concat(F.lit("user:"), F.col("user_id").cast("string"))
     aff = (
         e.groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("m"))
         .where(F.col("m") >= _AFFINITY_MIN_COUNT)
         .select(
-            F.concat(F.lit("user:"), F.col("user_id").cast("string")).alias("src_key"),
-            F.col("event_type").alias("dst_key"),
+            user.alias("s"),
+            F.col("event_type").alias("t"),
+            F.lit("tool").alias("etype"),
             F.col("m").cast("double").alias("w"),
         )
     )
     # vertex set = ALL users + ALL types (zero-degree vertices kept so the
-    # histogram sees them), ids dense by sorted vkey
+    # histogram sees them)
     keys = (
-        e.select(F.concat(F.lit("user:"), F.col("user_id").cast("string")).alias("vkey"))
+        e.select(user.alias("vkey"))
         .unionByName(e.select(F.col("event_type").alias("vkey")))
         .distinct()
     )
-    vw = Window.orderBy("vkey")
-    vertices = keys.select(
-        "vkey",
-        (F.row_number().over(vw) - 1).cast("long").alias("vid"),
-        F.when(F.col("vkey").startswith("user:"), F.lit("actor"))
-        .otherwise(F.lit("tool"))
-        .alias("vtype"),
-    )
-    v = F.broadcast(vertices)
-    edges = (
-        aff.join(v.select(F.col("vkey").alias("src_key"), F.col("vid").alias("src")), "src_key")
-        .join(v.select(F.col("vkey").alias("dst_key"), F.col("vid").alias("dst")), "dst_key")
-        .select("src", "dst", F.lit("tool").alias("etype"), "w")
-    )
-    return GraphTables(vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices))
+    vtype = F.when(F.col("vkey").startswith("user:"), F.lit("actor")).otherwise(F.lit("tool"))
+    return key_graph(aff, vtype, keys)
 
 
 # User vertices have degree <= |types| (bounded at every scale); type
@@ -1100,11 +1088,12 @@ def q_link_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex table on a hash-uniform vid (no skew) and anti-joined against
     the distinct edge set on the (least, greatest) key — three narrow
     equi-joins and two combinable aggregates; |V| is a 1-row broadcast.
-    The dense vid here is the oracle-shared row_number assignment (a
-    vertices-sized sort, vertices ≪ edges); the engine's distributed
-    assignment (derive.py) is the production path.  Output (vkey, rn,
-    neg_key)."""
+    The dense vid is the oracle-shared ``row_number() OVER (ORDER BY
+    vkey) - 1``, computed by ``derive.dense_ids`` (the engine's
+    range-partitioned vid assignment, no single-task window).  Output
+    (vkey, rn, neg_key)."""
     from .datapipe import _md5_int
+    from .derive import dense_ids
     from .io import load_table
 
     e = load_table(spark, sf_dir, "events")
@@ -1134,10 +1123,7 @@ def q_link_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(ek.select(F.col("t").alias("vkey")))
         .distinct()
     )
-    vid_w = Window.orderBy("vkey")
-    vmap = verts.select(
-        "vkey", (F.row_number().over(vid_w) - 1).cast("long").alias("vid")
-    )
+    vmap = dense_ids(verts, "vkey")
     nv = vmap.agg(F.count(F.lit(1)).alias("n"))
     cand = (
         vmap.select("vkey")

@@ -320,7 +320,7 @@ def _host_graph(spark: SparkSession, sf_dir: str):
     edge (w = co-citing doc count) per ordered host pair.  Hosts that never
     co-occur with another host have no edges and are excluded — mirrored in
     the oracle's ``v`` CTE (derived from ``e``, not from all hosts)."""
-    from .derive import GraphTables, build_degrees
+    from .derive import key_graph
 
     d = _with_urls(load_table(spark, sf_dir, "documents"))
     hosts = (
@@ -339,26 +339,9 @@ def _host_graph(spark: SparkSession, sf_dir: str):
         .where(F.col("s") != F.col("t"))
         .groupBy("s", "t")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
+        .withColumn("etype", F.lit("cocite"))
     )
-    vw = Window.orderBy("vkey")
-    vertices = (
-        e.select(F.col("s").alias("vkey"))
-        .distinct()
-        .select(
-            "vkey",
-            (F.row_number().over(vw) - 1).cast("long").alias("vid"),
-            F.lit("host").alias("vtype"),
-        )
-    )
-    v = F.broadcast(vertices)
-    edges = (
-        e.join(v.select(F.col("vkey").alias("s"), F.col("vid").alias("src")), "s")
-        .join(v.select(F.col("vkey").alias("t"), F.col("vid").alias("dst")), "t")
-        .select("src", "dst", F.lit("cocite").alias("etype"), "w")
-    )
-    return GraphTables(
-        vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices)
-    )
+    return key_graph(e, F.lit("host"))
 
 
 def _host_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:

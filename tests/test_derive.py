@@ -3,9 +3,10 @@
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from linkgraph.derive import build_graph, build_vertices, edge_keys
+from linkgraph.derive import build_graph, build_vertices, dense_ids, edge_keys
 from linkgraph.io import TRANSCRIPT_SCHEMA
 from linkgraph.synth import micro_transcripts, synth_transcripts, synth_transcripts_pdf
 
@@ -56,19 +57,48 @@ def test_vid_deterministic_and_dense(spark):
     assert v1 == v2
     vids = sorted(v1.values())
     assert vids == list(range(len(vids)))
+    # key-ordered: vid i is the i-th vertex in (vtype, vkey) order
+    by_key = sorted(v1, key=lambda k: (k[1], k[0]))
+    assert [v1[k] for k in by_key] == vids
 
 
-def test_vid_distributed_matches_contract(spark):
-    t = synth_transcripts(spark, n_conversations=40, seed=42)
-    ek = edge_keys(t)
-    vd1 = {(r["vkey"], r["vtype"]): r["vid"] for r in build_vertices(ek, distributed=True).collect()}
-    vd2 = {(r["vkey"], r["vtype"]): r["vid"] for r in build_vertices(ek, distributed=True).collect()}
-    assert vd1 == vd2  # deterministic
-    vids = sorted(vd1.values())
-    assert vids == list(range(len(vids)))  # dense
-    assert set(vd1) == {
-        (r["vkey"], r["vtype"]) for r in build_vertices(ek).collect()
-    }  # same key set as the sorted path
+def _window_ids(keys, *cols):
+    w = Window.orderBy(*cols)
+    return keys.select(*keys.columns, (F.row_number().over(w) - 1).cast("long").alias("vid"))
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+@pytest.mark.parametrize("n_parts", [1, 4, 64])
+def test_dense_ids_equals_global_window(spark, n_parts, aqe):
+    """dense_ids == row_number() OVER (ORDER BY cols) - 1 at any range
+    partition count (64 exceeds every key count here) with AQE on or off."""
+    typed = spark.createDataFrame(
+        [(f"k{i % 13}", "tool" if i % 3 else "actor") for i in range(40)],
+        "vkey string, vtype string",
+    ).distinct()
+    numeric = spark.range(0, 30).select(((F.col("id") * 7) % 30).alias("did"))
+    single = spark.createDataFrame([("only",)], "vkey string")
+    empty = spark.createDataFrame([], "vkey string")
+    cases = [
+        (typed, ("vtype", "vkey")),
+        (numeric, ("did",)),
+        (single, ("vkey",)),
+        (empty, ("vkey",)),
+    ]
+    confs = {"spark.sql.shuffle.partitions": str(n_parts), "spark.sql.adaptive.enabled": aqe}
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        for keys, cols in cases:
+            got = sorted(tuple(r) for r in dense_ids(keys, *cols).collect())
+            want = sorted(tuple(r) for r in _window_ids(keys, *cols).collect())
+            assert got == want, cols
+            if cols == ("did",):
+                assert dict(got)[9] == 9 and dict(got)[10] == 10  # numeric order
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_text_round_trip(tmp_path, spark):

@@ -80,7 +80,7 @@ def test_bfs_multi_source(spark, synth_ctx):
 def test_bfs_hub_split_equals_unsplit(spark):
     """Forced undirected hub split (star_hub fixture) changes the plan, not
     the distances."""
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     src, dst, _w, n = edges_numpy(g)
     sources = spark.createDataFrame([(0,)], "vid long")
 
@@ -133,7 +133,7 @@ def test_sssp_matches_reference_and_networkx(spark, synth_ctx):
 def test_sssp_hub_split_equals_unsplit(spark):
     """Forced DIRECTED hub split: the broadcast hub path must relax on the
     raw w column and give identical distances."""
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     src, dst, w, n = edges_numpy(g)
     sources = spark.createDataFrame([(0,)], "vid long")
     ctx_plain = GraphContext.build(g, 4)
@@ -194,7 +194,7 @@ def test_widest_hub_split_equals_unsplit(spark):
     from linkgraph.pregel import WidestPathProgram
     from linkgraph.ref_single_node import widest_ref
 
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     src, dst, w, n = edges_numpy(g)
     sources = spark.createDataFrame([(0,)], "vid long")
     ctx_plain = GraphContext.build(g, 4)
@@ -325,7 +325,7 @@ def test_adamic_adar_vs_networkx(spark, synth_ctx):
 def test_jaccard_max_deg_excludes_hub_wedges(spark):
     """star_hub: every leaf pair shares only the hub; max_deg below the hub
     degree must yield no candidates."""
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     assert jaccard_pairs(g).count() > 0
     assert jaccard_pairs(g, max_deg=3).count() == 0
 
@@ -835,7 +835,7 @@ def test_ltcascade_hub_split_equals_unsplit(spark):
     the cascade."""
     from linkgraph.pregel import LTCascadeProgram
 
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     src, dst, _w, n = edges_numpy(g)
     theta, _deg = _lt_thresholds(src, dst, n)
     seeds_df = spark.createDataFrame([(0,)], "vid long")

@@ -176,7 +176,7 @@ def test_katz_hub_split_equals_unsplit(spark, make_prog):
     """Forced hub split on the star_hub fixture: the hub pack path (raw
     weights for Katz/eigenvector, coeff + seed teleport for PPR's own apply
     kernel) must produce the same values as the unsplit plan."""
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     src, dst, w, n = edges_numpy(g)
 
     ctx_plain = GraphContext.build(g, 4)
@@ -233,7 +233,7 @@ def _ancestors(df, name: str) -> list[list[str]]:
 
 
 def _star_hub_ctx(spark, split: bool):
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     kw = {"hub_theta": 0, "hub_floor": 0} if split else {}
     ctx = GraphContext.build(g, 4, **kw)
     assert (ctx.hub_edges is not None) == split
@@ -449,7 +449,7 @@ def test_bipartite_hub_split_equals_unsplit(spark):
     """Forced undirected hub split on star_hub: identical parity masks."""
     from linkgraph.pregel import BipartiteProgram
 
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     _src, _dst, _w, n = edges_numpy(g)
     ctx_plain = GraphContext.build(g, 4)
     ctx_split = GraphContext.build(g, 4, hub_theta=0, hub_floor=0)

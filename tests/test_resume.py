@@ -98,7 +98,7 @@ def test_hub_split_kill_and_resume_equals_uninterrupted(tmp_path, spark, make_pr
     run starts with the prologue on the checkpointed state and unions the
     hub messages (static pack for PageRank, frontier join for BFS) into
     its first superstep, and ends bit-identical to the uninterrupted run."""
-    g = build_graph(micro_transcripts(spark, "star_hub"), distributed_ids=False)
+    g = build_graph(micro_transcripts(spark, "star_hub"))
     ctx = GraphContext.build(g, 4, hub_theta=0, hub_floor=0)
     n = ctx.n_vertices
     try:

@@ -639,7 +639,7 @@ def test_streaming_ingest_to_warm_pagerank_end_to_end(spark, landing_dirs):
             ekeys = spark.read.parquet(out_dir).select(
                 "src_key", "dst_key", "etype"
             )
-            vertices = build_vertices(ekeys, distributed=True)
+            vertices = build_vertices(ekeys)
             edges = build_edges(ekeys, vertices)
             return GraphTables(
                 vertices=vertices,

@@ -1,11 +1,13 @@
 """Plan-shape audit over every registry row (guide §1/§7.2).
 
 For each ``queries()`` row, captures ``explain("formatted")`` at the given
-sf tier and records: Exchange count, join strategies, Python-eval nodes
-(BatchEvalPython/ArrowEvalPython — should be zero outside the sanctioned
-vectorized paths), CartesianProduct nodes, and whether parquet scans carry
-PushedFilters.  Writes one JSON line per row to stdout; optionally dumps
-the full plan text per row into a directory.
+sf tier and records: Exchange count, ``Exchange SinglePartition`` count
+(stages that funnel every row through one task, such as unpartitioned
+windows and aggregates without grouping keys), join strategies,
+Python-eval nodes (BatchEvalPython/ArrowEvalPython — should be zero
+outside the sanctioned vectorized paths), CartesianProduct nodes, and
+whether parquet scans carry PushedFilters.  Writes one JSON line per row
+to stdout; optionally dumps the full plan text per row into a directory.
 
 Usage: python tools/plan_audit.py [sf_dir] [outdir] [name ...]
 """
@@ -53,6 +55,7 @@ def main() -> int:
         rec = {
             "name": name,
             "exchanges": plan.count("Exchange ("),
+            "single_partition": plan.count("Arguments: SinglePartition"),
             "smj": plan.count("SortMergeJoin"),
             "bhj": plan.count("BroadcastHashJoin"),
             "shj": plan.count("ShuffledHashJoin"),
