@@ -62,6 +62,27 @@ def test_vid_deterministic_and_dense(spark):
     assert [v1[k] for k in by_key] == vids
 
 
+def test_vid_distributed_matches_contract(spark):
+    """Vids assigned across many range partitions keep the contract:
+    deterministic, dense, and the same key -> vid map as a single partition."""
+    t = synth_transcripts(spark, n_conversations=40, seed=42)
+    ek = edge_keys(t)
+
+    def vid_map(n_parts):
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        try:
+            return {(r["vkey"], r["vtype"]): r["vid"] for r in build_vertices(ek).collect()}
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    vd1, vd2 = vid_map(16), vid_map(16)
+    assert vd1 == vd2  # deterministic
+    vids = sorted(vd1.values())
+    assert vids == list(range(len(vids)))  # dense
+    assert vd1 == vid_map(1)  # same keys and vids as the one-partition order
+
+
 def _window_ids(keys, *cols):
     w = Window.orderBy(*cols)
     return keys.select(*keys.columns, (F.row_number().over(w) - 1).cast("long").alias("vid"))
