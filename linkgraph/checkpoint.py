@@ -37,17 +37,24 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
-def input_fingerprint(edges: DataFrame) -> str:
-    """Order-insensitive fingerprint of the edge table (lineage anchor)."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.crc32(F.concat_ws(",", "src", "dst", "w"))).alias("h"),
-    ).collect()[0]
-    return f"e{row['n']}-{row['h']}"
+def fingerprint_exprs() -> list[Column]:
+    """Aggregates of the order-insensitive edge-table fingerprint (lineage
+    anchor), observed on the job that materializes the pre-summed edge
+    table; ``format_fingerprint`` renders their values.  Changing either
+    orphans every existing checkpoint chain."""
+    return [
+        F.count(F.lit(1)).alias("fp_n"),
+        F.sum(F.crc32(F.concat_ws(",", "src", "dst", "w"))).alias("fp_h"),
+    ]
+
+
+def format_fingerprint(stats: dict[str, Any]) -> str:
+    """``e{rows}-{crc sum}`` (``e0-None`` for an empty edge table)."""
+    return f"e{stats['fp_n']}-{stats['fp_h']}"
 
 
 _WRITE_OBS_IDS = itertools.count()

@@ -20,7 +20,7 @@ combine is a single ``np.bincount`` and the shuffle carries at most
 
 Blocks are genuine Arrow data end-to-end: packed inside
 ``groupBy(part).applyInPandas`` (Arrow batches in/out), cached columnar, and
-consumed by ``cogroup().applyInPandas`` gather-scatter (pregel.py).
+consumed by the superstep's ``cogroup().applyInArrow`` (pregel.py).
 """
 
 from __future__ import annotations
@@ -63,7 +63,9 @@ def n_local_of(part_id: int, n_vertices: int, P: int) -> int:
 
 
 def _make_pack(P: int, V: int):
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: a partial hint makes applyInPandas warn that it cannot
+    # infer the eval type (the grouped-map default is the one wanted)
+    def pack(key, pdf):
         p = int(key[0])
         nloc = n_local_of(p, V, P)
         src = pdf["src"].to_numpy(np.int64)

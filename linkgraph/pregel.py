@@ -1,5 +1,12 @@
 """Pregel-style superstep runner over CSR blocks (SURVEY.md §2.10).
 
+Build: ``GraphContext.build`` makes the static side of a run once.  It
+materializes the pre-summed edge table, the per-src degrees, the symmetrized
+view, the hub splits and the directed/undirected CSR blocks with eager
+``localCheckpoint``s, and reads every figure it needs (nnz counts, maximum
+degrees, the lineage fingerprint) off ``Observation``s on those same jobs,
+so no statistic costs a query of its own.
+
 Execution model (all per-edge work is vectorized numpy inside Arrow-batched
 cogroup UDFs — zero per-row Python).  Between supersteps the loop holds ONE
 materialized **carried table**, hash-partitioned by ``part_id``.  It has two
@@ -76,7 +83,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import CheckpointManager, input_fingerprint
+from .checkpoint import CheckpointManager, fingerprint_exprs, format_fingerprint
 from .csr import build_csr_blocks, symmetrize
 from .derive import GraphTables
 from .skew import split_hub_edges
@@ -93,6 +100,24 @@ def aqe_off(spark: SparkSession):
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+def _observed(df: DataFrame, *exprs) -> tuple[DataFrame, dict[str, Any]]:
+    """Eagerly ``localCheckpoint`` df and observe the aggregate exprs on
+    that same job (CollectMetrics), so a build statistic costs no query of
+    its own.  Returns the checkpointed table and {alias: value}."""
+    obs = Observation(f"context.build-{_next_obs_id()}")
+    return df.observe(obs, *exprs).localCheckpoint(), obs.get
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """Per-src row length and weight of a one-row-per-(src, dst) edge
+    table: vid, out_deg, out_w."""
+    return (
+        edges.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("out_deg"), F.sum("w").alias("out_w"))
+        .withColumnRenamed("src", "vid")
+    )
 
 
 @dataclass
@@ -152,17 +177,29 @@ class GraphContext:
         manager + re-running GraphContext.build, which is cheap relative to
         the iteration itself.)
 
-        The directed side, undirected side, vertex base, and fingerprint are
-        independent job chains off ONE shared pre-summed edge scan; they are
-        materialized from concurrent driver threads (Spark schedules jobs
-        from separate threads in parallel), which overlaps their fixed
-        per-job latencies (VERDICT r01 item 5).  Each thread tags its jobs
-        ``context.build:<phase>`` (count_vertices, esum, ddeg_stats,
-        sym_stats, directed, undirected, base, fp); the caller's job
-        description is untouched.
+        Every statistic the build needs rides an ``Observation`` on the
+        ``localCheckpoint`` job of the table it describes (``_observed``),
+        so the build runs no query of its own beyond the vertex count:
+
+            esum        pre-summed (src, dst) edges; observes the row count
+                        (nnz_total) and the fingerprint aggregates
+            dirdeg      per-src degrees off esum; observes max out-degree
+            sym, udeg   symmetrized view and its degrees (hub_theta only);
+                        observe its row count and max degree
+            hub vids    per side, when a row exceeds the threshold; observe
+                        their degree sum (nnz_hub / nnz_uhub)
+            blocks      per side; observe sum(nnz) (nnz_directed and the
+                        undirected block nnz)
+
+        The phases run on concurrent driver threads (Spark schedules jobs
+        from separate threads in parallel, which overlaps their fixed
+        per-job latencies — VERDICT r01 item 5): count_vertices || esum,
+        then dirdeg || sym off esum, then directed || undirected || base.
+        Each thread tags its jobs ``context.build:<phase>``; the caller's
+        job description is untouched.
 
         AQE is DISABLED for the MATERIALIZATION phase of the build (the
-        four threads that checkpoint blocks/ublocks/base): ``localCheckpoint``
+        three threads that checkpoint blocks/ublocks/base): ``localCheckpoint``
         under AQE wraps the plan in AdaptiveSparkPlanExec, whose output
         partitioning is opaque at checkpoint time, so the captured
         LogicalRDD reports UnknownPartitioning — and every superstep then
@@ -171,83 +208,49 @@ class GraphContext:
         2).  With AQE off at checkpoint time, the leaf keeps
         hashpartitioning(part_id, P) and the per-superstep cogroups consume
         blocks/state with no exchange at all (guide §2.4).  The pre-phase
-        (vertex count + shared esum/degree scan — the jobs that actually
-        execute the graph derivation and fill the persist caches) keeps AQE
-        ON: measured ~20-30%% faster with adaptive coalescing/broadcasts,
-        and nothing it materializes is consumed by the superstep loop."""
+        (vertex count, esum, degrees, symmetrized view — the jobs that
+        actually execute the graph derivation and fill the persist caches)
+        keeps AQE ON: measured ~20-30%% faster with adaptive
+        coalescing/broadcasts (the undirected degree aggregate ~2x), and
+        nothing it materializes needs pinned partitioning."""
         spark = graph.edges.sparkSession
         # cache the derivation once: vertices/edges plans are embedded in
-        # every downstream table (degrees, blocks, fingerprint).  persist()
-        # is lazy — the caches FILL as a side effect of the two jobs below
-        # (vertex count; esum scan over edges), so no extra materialization
-        # job is spent on either.
+        # every downstream table.  persist() is lazy — the caches FILL as a
+        # side effect of the vertex count and the esum scan.
         graph.vertices.persist()
         graph.edges.persist()
-        # Two independent jobs launched from concurrent threads: the vertex
-        # count (needed to size the dense CSR index space) and ONE
-        # pre-summed simple edge scan shared by the directed build, the hub
-        # splits, the symmetrized build, and the fingerprint (previously
-        # each ran its own groupBy(src, dst) pass over the raw edge table).
         pre: dict[str, Any] = {}
+        errs: list[BaseException] = []
 
         def _count_vertices() -> None:
             pre["n"] = graph.vertices.count()
 
         def _esum() -> None:
-            esum = (
-                graph.edges.groupBy("src", "dst")
-                .agg(F.sum("w").alias("w"))
-                .localCheckpoint()
+            # ONE pre-summed simple edge scan shared by the directed build,
+            # the hub splits, the symmetrized build and the fingerprint.
+            esum, st = _observed(
+                graph.edges.groupBy("src", "dst").agg(F.sum("w").alias("w")),
+                *fingerprint_exprs(),
             )
-            pre["esum"] = esum
-            # Per-src degree/weight off the materialized esum — ONE tiny
-            # (V_src rows) table shared by the hub split, the dangling base,
-            # and every nnz/max-degree statistic below; previously the
-            # build_degrees plan (2 groupBys + 2 joins over the raw edge
-            # cache) re-ran in both the split and the base thread.  out_deg
-            # here counts distinct dsts, i.e. the CSR row LENGTH — the
-            # quantity hub splitting actually guards.
-            dirdeg = (
-                esum.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("out_deg"), F.sum("w").alias("out_w"))
-                .withColumnRenamed("src", "vid")
-                .localCheckpoint()
-            )
-            pre["dirdeg"] = dirdeg
+            pre["esum"], pre["fp"], pre["nnz_total"] = esum, format_fingerprint(st), st["fp_n"]
+            _concurrently(_dirdeg, _sym)
 
-            # The directed degree stats and the symmetrized view + its
-            # degree stats are independent chains off the esum leaf — run
-            # them concurrently, still inside the AQE-on pre-phase (the
-            # undirected degree aggregate measured ~2x slower with AQE off;
-            # neither table needs pinned partitioning, so nothing forces
-            # them into the AQE-off materialization phase).
-            def _ddeg_stats() -> None:
-                row = dirdeg.agg(
-                    F.max("out_deg").alias("mx"), F.sum("out_deg").alias("nnz")
-                ).collect()[0]
-                pre["max_out"] = int(row["mx"] or 0)
-                pre["nnz_total"] = int(row["nnz"] or 0)
+        def _dirdeg() -> None:
+            # shared by the directed split and the dangling base; out_deg
+            # counts distinct dsts, i.e. the CSR row LENGTH — the quantity
+            # hub splitting guards
+            dirdeg, st = _observed(_degrees(pre["esum"]), F.max("out_deg").alias("mx"))
+            pre["dirdeg"] = (dirdeg, st["mx"] or 0, pre["nnz_total"])
 
-            def _sym_stats() -> None:
-                if hub_theta is None:
-                    return
-                sym = symmetrize(esum).localCheckpoint()
-                pre["sym"] = sym
-                udeg = (
-                    sym.groupBy("src")
-                    .agg(F.count(F.lit(1)).alias("out_deg"), F.sum("w").alias("out_w"))
-                    .withColumnRenamed("src", "vid")
-                )
-                urow = udeg.agg(
-                    F.max("out_deg").alias("mx"), F.sum("out_deg").alias("nnz")
-                ).collect()[0]
-                pre["umax"] = int(urow["mx"] or 0)
-                pre["unnz"] = int(urow["nnz"] or 0)
-                pre["udeg"] = udeg
+        def _sym() -> None:
+            if hub_theta is None:  # nothing to size: ublocks read the view lazily
+                pre["sym"], pre["udeg"] = symmetrize(pre["esum"]), None
+                return
+            sym, st = _observed(symmetrize(pre["esum"]), F.count(F.lit(1)).alias("nnz"))
+            udeg, ust = _observed(_degrees(sym), F.max("out_deg").alias("mx"))
+            pre["sym"], pre["udeg"] = sym, (udeg, ust["mx"] or 0, st["nnz"])
 
-            _concurrently(pre_errs, _ddeg_stats, _sym_stats)
-
-        def _concurrently(errs: list, *fns) -> None:
+        def _concurrently(*fns) -> None:
             """Run fns on concurrent threads and join them; each thread tags
             its jobs ``context.build:<fn name>`` and appends any failure to
             errs."""
@@ -266,14 +269,10 @@ class GraphContext:
             for th in threads:
                 th.join()
 
-        pre_errs: list[BaseException] = []
-        _concurrently(pre_errs, _count_vertices, _esum)
-        if pre_errs:
-            raise pre_errs[0]
-        n, esum = pre["n"], pre["esum"]
-
-        out: dict[str, Any] = {}
-        errs: list[BaseException] = []
+        _concurrently(_count_vertices, _esum)
+        if errs:
+            raise errs[0]
+        n = pre["n"]
 
         def _theta_eff(nnz_side: int) -> int:
             # A vertex only serializes a scatter partition when its
@@ -299,85 +298,49 @@ class GraphContext:
                 return hub_theta
             return max(hub_theta, nnz_side // (2 * P), hub_floor)
 
+        def _split(edges: DataFrame, deg: DataFrame, theta: int, payload: tuple[str, ...]):
+            """Pull the adjacency rows longer than theta out of ``edges``;
+            returns the remaining edges and (hub_edges, hub_vids, nnz_hub,
+            hub_pack)."""
+            non_hub, hub_e = split_hub_edges(edges, deg, theta, presummed=True)
+            hub_edges = (
+                hub_e.select("src", "dst", *payload).repartition(P, "src", "dst").localCheckpoint()
+            )
+            hub_pack = _prepack_hub(hub_edges, P, payload).localCheckpoint()
+            # ONE materialization of the (tiny) hub vid set: its degree sum
+            # is the hub nnz (exact: edges has one row per (src, dst)), and
+            # the per-superstep broadcast projects vid off the same leaf
+            hubv, st = _observed(
+                deg.where(F.col("out_deg") > theta).select("vid", "out_deg"),
+                F.sum("out_deg").alias("nnz"),
+            )
+            return non_hub, (hub_edges, hubv.select("vid"), st["nnz"], hub_pack)
+
+        def _side(edges: DataFrame, deg: tuple | None, payload: tuple[str, ...]) -> tuple:
+            """CSR blocks of one side plus its hub split: (blocks, nnz,
+            hub_edges, hub_vids, nnz_hub, hub_pack).  deg is (degree table,
+            max degree, total nnz).  The split only exists for rows that can
+            straggle a scatter task; when the max degree is under theta_eff
+            the whole hub pipeline is provably a no-op and is skipped — at
+            bench/toy scale the common case (theta_eff floor 64k)."""
+            hub = (None, None, 0, None)
+            if hub_theta is not None:
+                table, mx, nnz_side = deg
+                theta = _theta_eff(nnz_side)
+                if mx > theta:
+                    edges, hub = _split(edges, table, theta, payload)
+            blocks, st = _observed(
+                build_csr_blocks(edges, n, P, presummed=True), F.sum("nnz").alias("nnz")
+            )
+            return (blocks, st["nnz"] or 0, *hub)
+
+        out: dict[str, Any] = {}
+
         def _directed() -> None:
-            hub_edges = hub_vids = hub_pack = None
-            nnz_hub = 0
-            pr_edges = esum
-            dirdeg = pre["dirdeg"]
-            theta = _theta_eff(pre["nnz_total"]) if hub_theta is not None else None
-            # Short-circuit: the split only exists for rows that can straggle
-            # a scatter task; when the max out-degree is under theta_eff the
-            # whole hub pipeline (split joins + 2 materializations + counts)
-            # is provably a no-op — skip it.  At bench/toy scale this is the
-            # common case (theta_eff floor 64k >> max degree).
-            if theta is not None and pre["max_out"] > theta:
-                non_hub, hub_e = split_hub_edges(esum, dirdeg, theta, presummed=True)
-                hub_edges = hub_e.repartition(P, "src", "dst").localCheckpoint()
-                hub_pack = _prepack_hub(hub_edges, P, ("coeff", "w")).localCheckpoint()
-                # ONE materialization of the (tiny) hub vid set carrying its
-                # out-degree: the nnz agg reads the leaf instead of running
-                # a second dirdeg scan job, and the per-superstep broadcast
-                # projects vid off the same leaf.
-                hubv = (
-                    dirdeg.where(F.col("out_deg") > theta)
-                    .select("vid", "out_deg")
-                    .localCheckpoint()
-                )
-                # hub nnz = total CSR row length of the hub srcs (exact:
-                # esum has one row per (src, dst))
-                nnz_hub = int(hubv.agg(F.sum("out_deg")).collect()[0][0])
-                hub_vids = hubv.select("vid")
-                pr_edges = non_hub
-            blocks = build_csr_blocks(pr_edges, n, P, presummed=True).localCheckpoint()
-            out["blocks"] = blocks
-            out["hub_edges"], out["hub_vids"], out["nnz_hub"] = hub_edges, hub_vids, nnz_hub
-            out["hub_pack"] = hub_pack
-            out["nnz_d"] = pre["nnz_total"] - nnz_hub
+            out["directed"] = _side(pre["esum"], pre["dirdeg"], ("coeff", "w"))
 
         def _undirected() -> None:
-            uhub_edges = uhub_vids = uhub_pack = None
-            nnz_uhub = 0
-            nnz_ub = None
-            if hub_theta is not None:
-                # symmetrized view + degree stats come pre-materialized from
-                # the AQE-on pre-phase (_sym_stats)
-                sym = pre["sym"]
-                udeg = pre["udeg"]
-                umax, unnz = pre["umax"], pre["unnz"]
-                theta = _theta_eff(unnz)
-                if umax > theta:  # same short-circuit as the directed side
-                    udeg = udeg.localCheckpoint()  # referenced twice by the split
-                    non_hub_u, uhub_e = split_hub_edges(sym, udeg, theta, presummed=True)
-                    uhub_edges = (
-                        uhub_e.select("src", "dst").repartition(P, "src", "dst").localCheckpoint()
-                    )
-                    uhub_pack = _prepack_hub(uhub_edges, P, ()).localCheckpoint()
-                    # one leaf for the stats agg + the per-superstep
-                    # broadcast (see the directed side)
-                    uhubv = (
-                        udeg.where(F.col("out_deg") > theta)
-                        .select("vid", "out_deg")
-                        .localCheckpoint()
-                    )
-                    nnz_uhub = int(uhubv.agg(F.sum("out_deg")).collect()[0][0])
-                    uhub_vids = uhubv.select("vid")
-                    sym = non_hub_u.select("src", "dst", "w")
-                nnz_ub = unnz - nnz_uhub
-            else:
-                sym = symmetrize(esum)
-            ublocks = build_csr_blocks(sym, n, P, presummed=True).localCheckpoint()
-            out["ublocks"] = ublocks
-            out["uhub_edges"], out["uhub_vids"], out["nnz_uhub"] = (
-                uhub_edges, uhub_vids, nnz_uhub,
-            )
-            out["uhub_pack"] = uhub_pack
-            # hub_theta=None path has no degree scan to reuse — fall back to
-            # the block-nnz agg (tiny: P rows).
-            out["nnz_ub"] = (
-                nnz_ub
-                if nnz_ub is not None
-                else int(ublocks.agg(F.sum("nnz")).collect()[0][0] or 0)
-            )
+            out["undirected"] = _side(pre["sym"], pre["udeg"], ())
 
         def _base() -> None:
             # dangling ⇔ no out-edges ⇔ vid absent from the per-src degree
@@ -385,7 +348,7 @@ class GraphContext:
             # re-running its two groupBys + two joins over the edge cache).
             out["base"] = (
                 graph.vertices.select("vid")
-                .join(pre["dirdeg"].select("vid", "out_deg"), "vid", "left")
+                .join(pre["dirdeg"][0].select("vid", "out_deg"), "vid", "left")
                 .select(
                     "vid",
                     F.pmod(F.col("vid"), F.lit(P)).cast("int").alias("part_id"),
@@ -395,29 +358,23 @@ class GraphContext:
                 .localCheckpoint()
             )
 
-        def _fp() -> None:
-            # anchored on the pre-summed simple edge table (a tiny cached
-            # leaf) rather than a second full scan of the raw edge table —
-            # equally deterministic, order-insensitive lineage identity.
-            out["fp"] = input_fingerprint(esum)
-
         # AQE off ONLY while the loop-facing tables are checkpointed, so the
         # captured LogicalRDD leaves keep hashpartitioning(part_id, P) — see
         # the build() docstring.  (Session conf is driver-global; the build
         # owns the session for this window, exactly like run_program's loop.)
         with aqe_off(spark):
-            _concurrently(errs, _directed, _undirected, _base, _fp)
+            _concurrently(_directed, _undirected, _base)
         if errs:
             raise errs[0]
 
+        blocks, nnz_d, hub_edges, hub_vids, nnz_hub, hub_pack = out["directed"]
+        ublocks, nnz_ub, uhub_edges, uhub_vids, nnz_uhub, uhub_pack = out["undirected"]
         return GraphContext(
-            spark, P, n, out["base"], out["blocks"], out["ublocks"],
-            out["nnz_d"], out["nnz_ub"] + out["nnz_uhub"], out["fp"],
-            hub_edges=out["hub_edges"], hub_vids=out["hub_vids"],
-            nnz_hub=int(out["nnz_hub"]),
-            uhub_edges=out["uhub_edges"], uhub_vids=out["uhub_vids"],
-            nnz_uhub=int(out["nnz_uhub"]),
-            hub_pack=out["hub_pack"], uhub_pack=out["uhub_pack"],
+            spark, P, n, out["base"], blocks, ublocks,
+            nnz_d, nnz_ub + nnz_uhub, pre["fp"],
+            hub_edges=hub_edges, hub_vids=hub_vids, nnz_hub=nnz_hub,
+            uhub_edges=uhub_edges, uhub_vids=uhub_vids, nnz_uhub=nnz_uhub,
+            hub_pack=hub_pack, uhub_pack=uhub_pack,
             _cached_inputs=(graph.vertices, graph.edges),
         )
 

@@ -1,5 +1,7 @@
 """CSR block packing properties (op 46)."""
 
+import warnings
+
 import numpy as np
 
 from linkgraph.csr import build_csr_blocks, n_local_of, symmetrize, unpack_blocks
@@ -65,3 +67,12 @@ def test_symmetrize_micro(spark):
     a, b, t = vk["a"], vk["b"], vk["tool00"]
     # self-loop a->a dropped; all other links present in both directions
     assert sym == {(a, b), (b, a), (a, t), (t, a), (b, t), (t, b)}
+
+
+def test_build_raises_no_warning(spark):
+    """Packing the blocks raises no warning (a partial type hint on the
+    pack function made applyInPandas warn on every build)."""
+    g = _graph(spark, n_conversations=10)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        build_csr_blocks(g.edges, 50, 4)  # plans the pack; no job runs

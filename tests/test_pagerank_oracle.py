@@ -22,6 +22,14 @@ SF_DIR = inspect.signature(flagship).parameters["sf_dir"].default
 @pytest.fixture(scope="module")
 def con():
     c = duckdb.connect()
+    # An explicit cap makes a blow-up fail loudly (OutOfMemoryException)
+    # instead of pressuring the host.  The host_pagerank and
+    # rank_weighted_sample oracles (unrolled 5-step PageRank over the host
+    # co-citation graph) need more than 6 GB at sf0.001: with DuckDB 1.0.0
+    # on a 4-core host both fail at 6GB and pass at 6500MB (also at 1 thread
+    # they fail at 5GB, so fewer threads do not lower the need).
+    c.execute("SET memory_limit='6500MB'")
+    c.execute("SET threads=2")
     for t in TESTDATA_TABLES:
         c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
     yield c

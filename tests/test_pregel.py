@@ -374,10 +374,75 @@ def test_context_build_job_descriptions(spark):
     assert new == {
         f"context.build:{phase}"
         for phase in (
-            "count_vertices", "esum", "ddeg_stats", "sym_stats",
-            "directed", "undirected", "base", "fp",
+            "count_vertices", "esum", "dirdeg", "sym", "directed", "undirected", "base",
         )
     }
+
+
+def _expected_contract(spark, edges):
+    """Fingerprint and nnz figures of an edge table, computed in SQL
+    independently of the build: the fingerprint is over the pre-summed
+    (src, dst) table, which keeps old checkpoint chains resumable."""
+    edges.createOrReplaceTempView("contract_edges")
+    return spark.sql(
+        """
+        WITH es AS (SELECT src, dst, sum(w) AS w FROM contract_edges GROUP BY src, dst),
+             und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
+                     FROM contract_edges WHERE src != dst)
+        SELECT (SELECT count(*) FROM es) AS n,
+               (SELECT sum(crc32(concat_ws(',', src, dst, w))) FROM es) AS h,
+               (SELECT 2 * count(*) FROM und) AS und_nnz
+        """
+    ).collect()[0]
+
+
+@pytest.fixture(scope="module")
+def contract_graph(spark):
+    """A star (hub 0), a ring, parallel edges, self-loops and reciprocal
+    pairs: a fingerprint of the raw table would differ from the pre-summed
+    one, and the undirected count must dedupe and drop loops."""
+    n = 40
+    pairs = [(0, d) for d in range(1, 21)] + [(i, (i + 1) % n) for i in range(n)]
+    pairs += [(5, 6), (5, 6), (7, 8), (3, 3), (9, 9), (6, 5), (2, 1)]
+    return _graph_from_pairs(spark, pairs, n)
+
+
+@pytest.mark.parametrize("kw", [
+    pytest.param(dict(hub_theta=256), id="unsplit"),
+    pytest.param(dict(hub_theta=2, hub_floor=0), id="split"),
+    pytest.param(dict(hub_theta=None), id="no_theta"),
+])
+def test_context_contract(spark, contract_graph, kw):
+    """The statistics the build observes equal the same figures computed
+    in SQL on the input edges: fingerprint, directed nnz (blocks + hub) and
+    undirected nnz (blocks + hub)."""
+    want = _expected_contract(spark, contract_graph.edges)
+    ctx = GraphContext.build(contract_graph, P, **kw)
+    ctx.unpersist()
+    assert ctx.fingerprint == f"e{want['n']}-{want['h']}"
+    assert ctx.nnz_directed + ctx.nnz_hub == want["n"]
+    assert ctx.nnz_undirected == want["und_nnz"]
+    split = kw.get("hub_floor") == 0
+    assert (ctx.nnz_hub > 0 and ctx.nnz_uhub > 0) == split
+    assert (ctx.hub_vids is not None and ctx.uhub_vids is not None) == split
+
+
+@pytest.mark.parametrize("kw", [
+    pytest.param(dict(hub_theta=2, hub_floor=0), id="split"),
+    pytest.param(dict(hub_theta=None), id="no_theta"),
+])
+def test_context_contract_empty_edges(spark, kw):
+    from linkgraph.derive import GraphTables
+
+    vertices = spark.createDataFrame(
+        [(f"v{i}", i, "actor") for i in range(5)], "vkey string, vid long, vtype string"
+    )
+    edges = spark.createDataFrame([], "src long, dst long, etype string, w double")
+    ctx = GraphContext.build(GraphTables(vertices, edges, None), P, **kw)
+    ctx.unpersist()
+    assert ctx.fingerprint == "e0-None"
+    assert ctx.n_vertices == 5
+    assert (ctx.nnz_directed, ctx.nnz_undirected, ctx.nnz_hub, ctx.nnz_uhub) == (0, 0, 0, 0)
 
 
 def _graph_from_pairs(spark, pairs, n):

@@ -9,6 +9,13 @@ outside the sanctioned vectorized paths), CartesianProduct nodes, and
 whether parquet scans carry PushedFilters.  Writes one JSON line per row
 to stdout; optionally dumps the full plan text per row into a directory.
 
+Only the plan of the DataFrame a row returns is explained.  Work a row runs
+eagerly before it returns is not counted: ``GraphContext.build``,
+``run_program``, ``dense_ids`` and any other ``localCheckpoint``.  Rows such
+as ``engine_msf`` or ``engine_triangles`` can report 0 Exchanges here while
+running dozens of Spark jobs; for them read the jobs and stages from the
+Spark status store, as ``perfbench/spans.py`` does.
+
 Usage: python tools/plan_audit.py [sf_dir] [outdir] [name ...]
 """
 
