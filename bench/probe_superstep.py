@@ -20,8 +20,8 @@ import tempfile
 import time
 
 sf = float(os.environ.get("PROBE_SF", "0.1"))
-cpus = int(os.environ.get("PROBE_CPUS", "32"))
-P = 32
+cpus = int(os.environ.get("PROBE_CPUS", len(os.sched_getaffinity(0))))
+P = cpus
 
 from linkgraph.session import get_spark
 

@@ -282,6 +282,10 @@ class GraphContext:
             # per-superstep cost (broadcast build + extra Arrow stage +
             # union into the message shuffle) — measured ~1.5-3 s/superstep
             # at sf0.1, tripling CC/LPA walls for zero straggler benefit.
+            # That figure predates the zip-importer guard in
+            # linkgraph/__init__.py: every Python task then also paid a
+            # ~0.3 s re-read of pyspark.zip, so the extra Arrow stage costs
+            # less now and needs a new measurement before it is cited.
             # hub_theta is therefore only a LOWER bound; the effective
             # threshold is the max of
             #   - hub_theta (caller intent),
@@ -511,7 +515,10 @@ def _pack_hub_jvm(hub_rows, payload: tuple[str, ...]):
     array row in the same wire format as ``_packed_msgs`` — collect_list of
     (dst, payload...) structs, unzipped with ``transform``.  Packing in the
     JVM spares the hub path a Python worker round trip, which would be the
-    bulk of the hub split's fixed per-superstep overhead at small scale."""
+    bulk of the hub split's fixed per-superstep overhead at small scale.
+    That round-trip cost was measured while every Python task still paid a
+    ~0.3 s re-read of pyspark.zip (see the zip-importer guard in
+    ``linkgraph/__init__.py``); re-measure it before relying on it."""
     z = F.collect_list(F.struct(F.col("dst"), *[F.col(c) for c in payload]))
 
     def _field(name):
