@@ -234,9 +234,10 @@ def main() -> None:
 
         # -- skewed tier: hub-split path under time ------------------------
         # Star source (70k out-edges > 64k floor) + zipf background; the
-        # split pulls the star's adjacency out of its CSR block and scatters
-        # it via broadcast-join, so this section times the salting machinery
-        # the flat tier never engages (hub_edges=0 there by cost model).
+        # split moves the star's adjacency out of its CSR block into
+        # destination-keyed hub blocks scattered from mirrored hub state,
+        # so this section times the hub path the flat tier never engages
+        # (hub_edges=0 there by cost model).
         bg_edges = max(50_000, int(HUB_TIER_BG_EDGES_PER_SF * sf))
         star = spark.range(1, HUB_TIER_STAR + 1).select(
             F.lit(0).alias("src"), F.col("id").alias("dst"), F.lit(1.0).alias("w")

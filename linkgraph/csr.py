@@ -8,8 +8,9 @@ One block row per graph partition ``p`` (``p = pmod(src, P)``):
     weights:array<double>,    # edge weights
     coeff:array<double>,      # w / out_w(src): PageRank scatter coefficient
     udst:array<int64>,        # unique dst vids in this block (sorted)
-    e2u:array<int32>          # per-edge index into udst (block-local
+    e2u:array<int32>,         # per-edge index into udst (block-local
                               # pre-aggregation target, PowerGraph-style)
+    hub:boolean               # False: residue-class block (this module)
 
 The residue-class layout makes local indexing dense and join-free: vid ``v``
 belongs to partition ``v % P`` at local index ``(v - p) // P``; every vid of
@@ -17,6 +18,11 @@ the class is represented (dangling vertices get empty indptr rows).  The
 ``udst``/``e2u`` pair is precomputed once so each superstep's block-local
 combine is a single ``np.bincount`` and the shuffle carries at most
 ``|udst|`` rows per block instead of ``nnz``.
+
+``build_hub_blocks`` packs the adjacency of split-off hub sources in the same
+layout, keyed by DESTINATION partition instead (``hub`` True): row ``q``
+holds the hub edges whose dst lies in partition ``q``, with ``indptr``
+indexed by position in the sorted list of hub source vids.
 
 Blocks are genuine Arrow data end-to-end: packed inside
 ``groupBy(part).applyInPandas`` (Arrow batches in/out), cached columnar, and
@@ -31,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -51,6 +58,7 @@ BLOCK_SCHEMA = StructType(
         StructField("coeff", ArrayType(DoubleType()), False),
         StructField("udst", ArrayType(LongType()), False),
         StructField("e2u", ArrayType(IntegerType()), False),
+        StructField("hub", BooleanType(), False),
     ]
 )
 
@@ -62,17 +70,24 @@ def n_local_of(part_id: int, n_vertices: int, P: int) -> int:
     return (n_vertices - 1 - part_id) // P + 1
 
 
-def _make_pack(P: int, V: int):
+def _make_pack(P: int, V: int, hubs: np.ndarray | None = None):
+    """Pack function of one block row.  Residue-class rows (``hubs`` None)
+    index partition p's vid class and derive coeff = w / out_w from the
+    row; hub rows index the sorted ``hubs`` and take the given coeff."""
+
     # no type hints: a partial hint makes applyInPandas warn that it cannot
     # infer the eval type (the grouped-map default is the one wanted)
     def pack(key, pdf):
         p = int(key[0])
-        nloc = n_local_of(p, V, P)
         src = pdf["src"].to_numpy(np.int64)
         dst = pdf["dst"].to_numpy(np.int64)
         w = pdf["w"].to_numpy(np.float64)
 
-        loc = (src - p) // P
+        if hubs is None:
+            nloc = n_local_of(p, V, P)
+            loc, vmin, vmax = (src - p) // P, p, p + (nloc - 1) * P if nloc else p
+        else:
+            nloc, loc, vmin, vmax = len(hubs), np.searchsorted(hubs, src), hubs[0], hubs[-1]
         order = np.lexsort((dst, loc))
         loc, dst, w = loc[order], dst[order], w[order]
 
@@ -80,9 +95,12 @@ def _make_pack(P: int, V: int):
         indptr = np.zeros(nloc + 1, dtype=np.int64)
         np.cumsum(counts, out=indptr[1:])
 
-        out_w = np.bincount(loc, weights=w, minlength=nloc)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            coeff = w / out_w[loc]
+        if hubs is None:
+            out_w = np.bincount(loc, weights=w, minlength=nloc)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                coeff = w / out_w[loc]
+        else:
+            coeff = pdf["coeff"].to_numpy(np.float64)[order]
 
         udst, e2u = np.unique(dst, return_inverse=True)
 
@@ -90,8 +108,8 @@ def _make_pack(P: int, V: int):
             {
                 "part_id": [np.int32(p)],
                 "n_local": [np.int64(nloc)],
-                "vmin": [np.int64(p)],
-                "vmax": [np.int64(p + (nloc - 1) * P if nloc else p)],
+                "vmin": [np.int64(vmin)],
+                "vmax": [np.int64(vmax)],
                 "nnz": [np.int64(len(dst))],
                 "indptr": [indptr],
                 "indices": [dst],
@@ -99,6 +117,7 @@ def _make_pack(P: int, V: int):
                 "coeff": [coeff],
                 "udst": [udst],
                 "e2u": [e2u.astype(np.int32)],
+                "hub": [hubs is not None],
             }
         )
 
@@ -126,6 +145,17 @@ def build_csr_blocks(
     e = e.withColumn("part", F.pmod(F.col("src"), F.lit(P)).cast("int"))
     blocks = e.groupBy("part").applyInPandas(_make_pack(P, n_vertices), BLOCK_SCHEMA)
     return blocks.repartition(P, "part_id")
+
+
+def build_hub_blocks(hub_edges: DataFrame, hubs: tuple[int, ...], P: int) -> DataFrame:
+    """Pack (src, dst, coeff, w) hub edges into one block row per
+    DESTINATION partition, indexed by position in the sorted hub vids
+    ``hubs``.  coeff must be w / out_w over the hub's whole row
+    (``skew.split_hub_edges``): a row split by destination cannot derive it."""
+    part = F.pmod(F.col("dst"), F.lit(P)).cast("int").alias("part")
+    pack = _make_pack(P, 0, np.asarray(hubs, dtype=np.int64))
+    packed = hub_edges.select(part, "src", "dst", "coeff", "w").groupBy("part")
+    return packed.applyInPandas(pack, BLOCK_SCHEMA).repartition(P, "part_id")
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:

@@ -2,19 +2,21 @@
 
 Build: ``GraphContext.build`` makes the static side of a run once.  It
 materializes the pre-summed edge table, the per-src degrees, the symmetrized
-view, the hub splits and the directed/undirected CSR blocks with eager
-``localCheckpoint``s, and reads every figure it needs (nnz counts, maximum
-degrees, the lineage fingerprint) off ``Observation``s on those same jobs,
+view and the directed/undirected CSR blocks (hub rows included) with eager
+``localCheckpoint``s, and reads every figure it needs (nnz counts, the hub
+vid sets, the lineage fingerprint) off ``Observation``s on those same jobs,
 so no statistic costs a query of its own.
 
 Execution model (all per-edge work is vectorized numpy inside Arrow-batched
 cogroup UDFs — zero per-row Python).  Between supersteps the loop holds ONE
-materialized **carried table**, hash-partitioned by ``part_id``.  It has two
+materialized **carried table**, hash-partitioned by ``part_id``.  It has three
 kinds of rows: partition p's state rows (``vid`` set, ``dst``/payload lists
-empty) and the packed message rows addressed to p (``vid`` and every state
-column null, one ``dst[]`` + payload-list row per sending block).  The lists
-of state rows are empty rather than null because Spark's JVM->Arrow writer
-is quadratic in null list entries (measured: 20k state rows per partition
+empty), the packed message rows addressed to p (``vid`` and every state
+column null, one ``dst[]`` + payload-list row per sending block) and the
+hub mirror rows addressed to p (``vid``, state and lists null, ``mirror``
+one Arrow IPC stream of a sending partition's hub states).  The lists of
+state rows are empty rather than null because Spark's JVM->Arrow writer is
+quadratic in null list entries (measured: 20k state rows per partition
 cost 3.3-4.0 s with null lists, 0.3-0.4 s with empty ones).
 
     prologue : cogroup(blocks, state_0) on part_id in scatter-only mode —
@@ -23,15 +25,18 @@ cost 3.3-4.0 s with null lists, 0.3-0.4 s with empty ones).
                the Observation of ``stat_exprs()``, state_0's stats (e.g.
                PageRank's first dangling mass)
     superstep: cogroup(blocks, carried_t) on part_id -> ONE Arrow pass per
-               partition: apply the incoming messages to state_t (dense
-               residue-class indexing, no join), scatter state_{t+1}
+               partition: scatter the mirrored hub states through p's hub
+               block, apply those and the incoming messages to state_t
+               (dense residue-class indexing, no join), scatter state_{t+1}
                through block p (block-local gather + per-udst
-               pre-aggregation), emit state_{t+1} rows + packed messages
+               pre-aggregation), emit state_{t+1} rows + packed messages +
+               mirrors of p's hubs
     exchange : ONE shuffle by part_id routes the messages to their
                destination partition (state rows stay put) and re-pins the
                partitioning for the next cogroup
     stats    : global aggregates observed on the materialization job
-               (message rows are all-null there, so sums/maxima skip them)
+               (message and mirror rows are all-null there, so sums/maxima
+               skip them)
     persist  : eager localCheckpoint keeps the plan one superstep deep
                (op 54); the durable checkpoint writes the state rows,
                overlapped with the next superstep
@@ -51,13 +56,16 @@ both staticmethods closing over plain scalars only:
     apply(st, nloc, loc, m, **step_params) -> {column: array}
         loc/m[payload]: flat incoming messages (typed empties if none)
 
-Hub edges (op 47) are messaged in the JVM by ``hub_payload()`` Column
-expressions over the state rows of the carried table: off the static pack
-for dense programs, or, when ``hub_frontier()`` returns a predicate, through
-a broadcast join of the active hub senders.  The hub messages are padded to
-the carried schema and unioned into the cogroup's carried side; both union
-children are hash-partitioned by ``part_id`` into P partitions, so the union
-adds no Exchange.
+Hub vertices (op 47) are scattered by the same ``scatter`` kernel from
+mirrored state.  Mod partitioning puts a vertex's whole adjacency row in one
+block, so the build moves each row longer than the hub threshold into
+destination-keyed hub blocks: block table row (p, hub=True) holds the hub
+edges whose dst is in partition p, indexed by position in the sorted hub
+vid list (``GraphContext.hubs``/``uhubs``).  The partition that owns a hub
+sends its state to every partition as a mirror row, and each receiver
+scatters its hub block from those mirrors, so a hub's edges are spread over
+all P scatter tasks.  Mirrors ride the superstep's one Exchange; a split
+superstep has the unsplit shape.
 
 The scatter carries at most |udst| values per block (unique dsts), not nnz —
 the block-local bincount is the map-side combine — packed as P array rows
@@ -84,7 +92,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointManager, fingerprint_exprs, format_fingerprint
-from .csr import build_csr_blocks, symmetrize
+from .csr import build_csr_blocks, build_hub_blocks, symmetrize
 from .derive import GraphTables
 from .skew import split_hub_edges
 
@@ -128,28 +136,19 @@ class GraphContext:
     P: int
     n_vertices: int
     vertex_base: DataFrame          # vid, part_id, dangling (cached)
-    blocks: DataFrame               # directed CSR (cached)
-    ublocks: DataFrame              # symmetrized undirected CSR (cached)
-    nnz_directed: int
+    blocks: DataFrame               # directed CSR + hub blocks (cached)
+    ublocks: DataFrame              # symmetrized undirected CSR + hub blocks
+    nnz_directed: int               # residue-class blocks only
     nnz_undirected: int             # TOTAL undirected nnz (blocks + hub)
     fingerprint: str
-    hub_edges: DataFrame | None = None   # src, dst, coeff (op 47 hub split)
-    hub_vids: DataFrame | None = None    # vid (broadcast into hub scatter)
+    # op 47 hub split, per side: the sorted vids whose adjacency row moved
+    # out of the residue-class blocks into the destination-keyed hub block
+    # rows (csr.build_hub_blocks), and the number of edges moved.  The
+    # superstep mirrors these vertices' state to every partition.
+    hubs: tuple[int, ...] = ()
     nnz_hub: int = 0
-    uhub_edges: DataFrame | None = None  # undirected hub adjacency (src, dst)
-    uhub_vids: DataFrame | None = None   # undirected hub vids
+    uhubs: tuple[int, ...] = ()
     nnz_uhub: int = 0
-    # Pre-packed hub adjacency, one array row per destination partition
-    # (part_id, dst[], src[], coeff[], w[] / part_id, dst[], src[]): built
-    # ONCE at context build, so dense programs (PageRank/Katz/CC/LPA) never
-    # re-shuffle the hub edge set inside the superstep loop — per superstep
-    # they broadcast only a vid->state map over the (tiny) hub vertex set
-    # and evaluate it against the static pack with JVM zip_with/transform
-    # (guide §2.3 "shuffle keys and metadata instead of payloads").
-    # Frontier-sparse programs (BFS/SSSP/Widest/LT/Bipartite) keep the
-    # filtered broadcast-join path on hub_edges/uhub_edges.
-    hub_pack: DataFrame | None = None
-    uhub_pack: DataFrame | None = None
     _cached_inputs: tuple = ()
 
     @staticmethod
@@ -159,12 +158,14 @@ class GraphContext:
         hub_theta: int | None = None,
         hub_floor: int = 65536,
     ) -> "GraphContext":
-        """hub_theta: degree above which a vertex's adjacency is pulled out
-        of the CSR blocks and scattered via broadcast-join (skew.py) —
-        applied to BOTH the directed blocks (out-degree, PageRank) and the
-        symmetrized blocks (undirected degree, CC/LPA): mod partitioning
-        puts a vertex's whole adjacency row in one block, so an unsplit hub
-        would serialize one partition of every scatter (VERDICT r01 item 4).
+        """hub_theta: degree above which a vertex's adjacency row is pulled
+        out of its residue-class CSR block into the destination-keyed hub
+        block rows, scattered on every partition from mirrored hub state
+        (see the module docstring; skew.py) — applied to BOTH the directed
+        blocks (out-degree, PageRank) and the symmetrized blocks (undirected
+        degree, CC/LPA): mod partitioning puts a vertex's whole adjacency
+        row in one block, so an unsplit hub would serialize one partition
+        of every scatter (VERDICT r01 item 4).
 
         All static context tables are EAGERLY materialized with
         ``localCheckpoint`` rather than ``persist``: a cached plan that still
@@ -183,13 +184,15 @@ class GraphContext:
 
             esum        pre-summed (src, dst) edges; observes the row count
                         (nnz_total) and the fingerprint aggregates
-            dirdeg      per-src degrees off esum; observes max out-degree
+            dirdeg      per-src degrees off esum; observes the hub vids (rows
+                        longer than the threshold) and their degree sum
+                        (hubs, nnz_hub)
             sym, udeg   symmetrized view and its degrees (hub_theta only);
-                        observe its row count and max degree
-            hub vids    per side, when a row exceeds the threshold; observe
-                        their degree sum (nnz_hub / nnz_uhub)
-            blocks      per side; observe sum(nnz) (nnz_directed and the
-                        undirected block nnz)
+                        observe its row count, then the undirected hub vids
+                        and their degree sum (uhubs, nnz_uhub)
+            blocks      per side, residue-class blocks plus the hub block
+                        rows; observe the residue-class sum(nnz)
+                        (nnz_directed and the undirected block nnz)
 
         The phases run on concurrent driver threads (Spark schedules jobs
         from separate threads in parallel, which overlaps their fixed
@@ -225,6 +228,42 @@ class GraphContext:
         def _count_vertices() -> None:
             pre["n"] = graph.vertices.count()
 
+        def _theta_eff(nnz_side: int) -> int | None:
+            # A vertex only serializes a scatter partition when its
+            # adjacency row is a material fraction of a block (~nnz/P rows
+            # on average).  Splitting a row below that buys no straggler
+            # relief and only adds hub block rows and mirror traffic, so
+            # hub_theta is only a LOWER bound; the effective threshold is
+            # the max of
+            #   - hub_theta (caller intent),
+            #   - nnz/(2P): only rows >= half an average CSR block can
+            #     straggle a scatter task, at ANY scale (it also keeps each
+            #     side under 2P hubs, so mirrors stay small),
+            #   - hub_floor (abs): a row under ~64k entries packs/scatters
+            #     in microseconds regardless of relative size, so splitting
+            #     it never pays — this is what keeps the hub machinery
+            #     dormant at toy/bench scale while the relative bound takes
+            #     over at production scale.
+            # hub_floor=0 is the test hook: trust hub_theta exactly so the
+            # split path can be forced on micro fixtures.  None: no split.
+            if hub_theta is None or not hub_floor:
+                return hub_theta
+            return max(hub_theta, nnz_side // (2 * P), hub_floor)
+
+        def _hub_degrees(edges: DataFrame, nnz_side: int) -> tuple:
+            """Checkpointed per-src degrees of one side, observing on the
+            same job the vids of the rows longer than theta_eff and their
+            degree sum (exact: edges has one row per (src, dst)): (degree
+            table, theta, sorted hub vids, nnz_hub)."""
+            theta = _theta_eff(nnz_side)
+            hub = F.lit(False) if theta is None else F.col("out_deg") > theta
+            deg, st = _observed(
+                _degrees(edges),
+                F.collect_list(F.when(hub, F.col("vid"))).alias("hubs"),
+                F.sum(F.when(hub, F.col("out_deg"))).alias("nnz_hub"),
+            )
+            return deg, theta, tuple(sorted(st["hubs"] or ())), st["nnz_hub"] or 0
+
         def _esum() -> None:
             # ONE pre-summed simple edge scan shared by the directed build,
             # the hub splits, the symmetrized build and the fingerprint.
@@ -239,16 +278,14 @@ class GraphContext:
             # shared by the directed split and the dangling base; out_deg
             # counts distinct dsts, i.e. the CSR row LENGTH — the quantity
             # hub splitting guards
-            dirdeg, st = _observed(_degrees(pre["esum"]), F.max("out_deg").alias("mx"))
-            pre["dirdeg"] = (dirdeg, st["mx"] or 0, pre["nnz_total"])
+            pre["dirdeg"] = _hub_degrees(pre["esum"], pre["nnz_total"])
 
         def _sym() -> None:
             if hub_theta is None:  # nothing to size: ublocks read the view lazily
                 pre["sym"], pre["udeg"] = symmetrize(pre["esum"]), None
                 return
             sym, st = _observed(symmetrize(pre["esum"]), F.count(F.lit(1)).alias("nnz"))
-            udeg, ust = _observed(_degrees(sym), F.max("out_deg").alias("mx"))
-            pre["sym"], pre["udeg"] = sym, (udeg, ust["mx"] or 0, st["nnz"])
+            pre["sym"], pre["udeg"] = sym, _hub_degrees(sym, st["nnz"])
 
         def _concurrently(*fns) -> None:
             """Run fns on concurrent threads and join them; each thread tags
@@ -274,77 +311,30 @@ class GraphContext:
             raise errs[0]
         n = pre["n"]
 
-        def _theta_eff(nnz_side: int) -> int:
-            # A vertex only serializes a scatter partition when its
-            # adjacency row is a material fraction of a block (~nnz/P rows
-            # on average).  Splitting below that pushes bulk edges through
-            # the per-edge broadcast path, which carries a FIXED
-            # per-superstep cost (broadcast build + extra Arrow stage +
-            # union into the message shuffle) — measured ~1.5-3 s/superstep
-            # at sf0.1, tripling CC/LPA walls for zero straggler benefit.
-            # That figure predates the zip-importer guard in
-            # linkgraph/__init__.py: every Python task then also paid a
-            # ~0.3 s re-read of pyspark.zip, so the extra Arrow stage costs
-            # less now and needs a new measurement before it is cited.
-            # hub_theta is therefore only a LOWER bound; the effective
-            # threshold is the max of
-            #   - hub_theta (caller intent),
-            #   - nnz/(2P): only rows >= half an average CSR block can
-            #     straggle a scatter task, at ANY scale,
-            #   - hub_floor (abs): a row under ~64k entries packs/scatters
-            #     in microseconds regardless of relative size, so splitting
-            #     it never pays — this is what keeps the hub machinery
-            #     dormant at toy/bench scale while the relative bound takes
-            #     over at production scale.
-            # hub_floor=0 is the test hook: trust hub_theta exactly so the
-            # split path can be forced on micro fixtures.
-            if not hub_floor:
-                return hub_theta
-            return max(hub_theta, nnz_side // (2 * P), hub_floor)
-
-        def _split(edges: DataFrame, deg: DataFrame, theta: int, payload: tuple[str, ...]):
-            """Pull the adjacency rows longer than theta out of ``edges``;
-            returns the remaining edges and (hub_edges, hub_vids, nnz_hub,
-            hub_pack)."""
-            non_hub, hub_e = split_hub_edges(edges, deg, theta, presummed=True)
-            hub_edges = (
-                hub_e.select("src", "dst", *payload).repartition(P, "src", "dst").localCheckpoint()
-            )
-            hub_pack = _prepack_hub(hub_edges, P, payload).localCheckpoint()
-            # ONE materialization of the (tiny) hub vid set: its degree sum
-            # is the hub nnz (exact: edges has one row per (src, dst)), and
-            # the per-superstep broadcast projects vid off the same leaf
-            hubv, st = _observed(
-                deg.where(F.col("out_deg") > theta).select("vid", "out_deg"),
-                F.sum("out_deg").alias("nnz"),
-            )
-            return non_hub, (hub_edges, hubv.select("vid"), st["nnz"], hub_pack)
-
-        def _side(edges: DataFrame, deg: tuple | None, payload: tuple[str, ...]) -> tuple:
-            """CSR blocks of one side plus its hub split: (blocks, nnz,
-            hub_edges, hub_vids, nnz_hub, hub_pack).  deg is (degree table,
-            max degree, total nnz).  The split only exists for rows that can
-            straggle a scatter task; when the max degree is under theta_eff
-            the whole hub pipeline is provably a no-op and is skipped — at
-            bench/toy scale the common case (theta_eff floor 64k)."""
-            hub = (None, None, 0, None)
-            if hub_theta is not None:
-                table, mx, nnz_side = deg
-                theta = _theta_eff(nnz_side)
-                if mx > theta:
-                    edges, hub = _split(edges, table, theta, payload)
+        def _side(edges: DataFrame, deg: tuple | None) -> tuple:
+            """CSR blocks of one side, its hub rows moved to destination-
+            keyed hub blocks: (blocks, residue-class nnz, hubs, nnz_hub).
+            deg is ``_hub_degrees``' result (None: no split)."""
+            table, theta, hubs, nnz_hub = deg or (None, None, (), 0)
+            if hubs:
+                edges, hub_e = split_hub_edges(edges, table, theta, presummed=True)
+            blocks = build_csr_blocks(edges, n, P, presummed=True)
+            if hubs:
+                # both children are hashpartitioning(part_id, P): the union
+                # keeps it, so the superstep cogroup reads them unshuffled
+                blocks = blocks.unionByName(build_hub_blocks(hub_e, hubs, P))
             blocks, st = _observed(
-                build_csr_blocks(edges, n, P, presummed=True), F.sum("nnz").alias("nnz")
+                blocks, F.sum(F.when(~F.col("hub"), F.col("nnz"))).alias("nnz")
             )
-            return (blocks, st["nnz"] or 0, *hub)
+            return blocks, st["nnz"] or 0, hubs, nnz_hub
 
         out: dict[str, Any] = {}
 
         def _directed() -> None:
-            out["directed"] = _side(pre["esum"], pre["dirdeg"], ("coeff", "w"))
+            out["directed"] = _side(pre["esum"], pre["dirdeg"])
 
         def _undirected() -> None:
-            out["undirected"] = _side(pre["sym"], pre["udeg"], ())
+            out["undirected"] = _side(pre["sym"], pre["udeg"])
 
         def _base() -> None:
             # dangling ⇔ no out-edges ⇔ vid absent from the per-src degree
@@ -371,14 +361,12 @@ class GraphContext:
         if errs:
             raise errs[0]
 
-        blocks, nnz_d, hub_edges, hub_vids, nnz_hub, hub_pack = out["directed"]
-        ublocks, nnz_ub, uhub_edges, uhub_vids, nnz_uhub, uhub_pack = out["undirected"]
+        blocks, nnz_d, hubs, nnz_hub = out["directed"]
+        ublocks, nnz_ub, uhubs, nnz_uhub = out["undirected"]
         return GraphContext(
             spark, P, n, out["base"], blocks, ublocks,
             nnz_d, nnz_ub + nnz_uhub, pre["fp"],
-            hub_edges=hub_edges, hub_vids=hub_vids, nnz_hub=nnz_hub,
-            uhub_edges=uhub_edges, uhub_vids=uhub_vids, nnz_uhub=nnz_uhub,
-            hub_pack=hub_pack, uhub_pack=uhub_pack,
+            hubs=hubs, nnz_hub=nnz_hub, uhubs=uhubs, nnz_uhub=nnz_uhub,
             _cached_inputs=(graph.vertices, graph.edges),
         )
 
@@ -399,21 +387,25 @@ def _pa_flat(tbl: "pa.Table", name: str) -> np.ndarray:
     return np.asarray(tbl[name].combine_chunks().flatten())
 
 
-def _block_np(left: "pa.Table", name: str) -> np.ndarray:
-    return np.asarray(left[name].combine_chunks().values)
+def _block_np(row: "pa.Table", name: str) -> np.ndarray:
+    """Values of list column ``name`` of a one-row block table (zero-copy)."""
+    return np.asarray(row[name].chunk(0).flatten())
 
 
-def _dense_state(state: "pa.Table", col: str, p: int, P: int) -> np.ndarray:
-    """State column in residue-class-dense order (index (vid - p) // P)."""
-    loc = (_pa_np(state["vid"]) - p) // P
+def _dense_state(state: "pa.Table", at: np.ndarray, col: str) -> np.ndarray:
+    """State column with row i placed at index at[i]: residue-class-dense
+    order (vid - p) // P, or a hub's position in the sorted hub vids."""
     vals = _pa_np(state[col])
     arr = np.zeros(state.num_rows, dtype=vals.dtype)
-    arr[loc] = vals
+    arr[at] = vals
     return arr
 
 
 # Spark DDL type name -> Arrow type, for the schemas vertex programs declare
-_ARROW = {"long": pa.int64(), "int": pa.int32(), "double": pa.float64(), "boolean": pa.bool_()}
+_ARROW = {
+    "long": pa.int64(), "int": pa.int32(), "double": pa.float64(), "boolean": pa.bool_(),
+    "binary": pa.binary(),
+}
 
 
 def _ddl_fields(schema: str) -> list[tuple[str, str]]:
@@ -422,16 +414,18 @@ def _ddl_fields(schema: str) -> list[tuple[str, str]]:
 
 
 _MSG = "msg_"  # carried-table prefix of the packed payload columns
+_MIRROR = "mirror"  # carried-table column of mirrored hub states
 
 
 def _carried_ddl(program) -> str:
     """Spark DDL of a program's carried table: ``apply_schema`` (state + stat
     column), then the packed message columns (``dst`` + one list per
     payload; payloads are prefixed because LabelProp's ``label`` message
-    shares its name with the state column)."""
+    shares its name with the state column), then the hub ``mirror``."""
     return ", ".join(
         [program.apply_schema, "dst array<long>"]
         + [f"{_MSG}{n} array<{t}>" for n, t in program.msg_types.items()]
+        + [f"{_MIRROR} binary"]
     )
 
 
@@ -440,6 +434,16 @@ def _carried_schema(program) -> "pa.Schema":
         pa.field(n, pa.list_(_ARROW[t[6:-1]]) if t.startswith("array<") else _ARROW[t])
         for n, t in _ddl_fields(_carried_ddl(program))
     ])
+
+
+def _addressed(schema: "pa.Schema", P: int, cols: dict) -> "pa.Table":
+    """One carried row per destination partition 0..P-1: ``cols`` by name,
+    every other column null."""
+    cols = {"part_id": pa.array(np.arange(P, dtype=np.int32)), **cols}
+    return pa.Table.from_arrays(
+        [cols[f.name] if f.name in cols else pa.nulls(P, f.type) for f in schema],
+        schema=schema,
+    )
 
 
 def _packed_msgs(
@@ -453,92 +457,34 @@ def _packed_msgs(
     pid = (udst % P).astype(np.int32)
     order = np.argsort(pid, kind="stable")
     offs = pa.array(np.searchsorted(pid[order], np.arange(P + 1)).astype(np.int32))
-    cols = {
-        "part_id": pa.array(np.arange(P, dtype=np.int32)),
-        "dst": pa.ListArray.from_arrays(offs, pa.array(udst[order], pa.int64())),
-    }
+    cols = {"dst": pa.ListArray.from_arrays(offs, pa.array(udst[order], pa.int64()))}
     for name, vals in payloads.items():
         typ = schema.field(_MSG + name).type.value_type
         cols[_MSG + name] = pa.ListArray.from_arrays(offs, pa.array(vals[order], typ))
-    return pa.Table.from_arrays(
-        [cols[f.name] if f.name in cols else pa.nulls(P, f.type) for f in schema],
-        schema=schema,
-    )
+    return _addressed(schema, P, cols)
 
 
-def _prepack_hub(hub_edges: DataFrame, P: int, payload: tuple[str, ...]) -> DataFrame:
-    """Pack hub edges into ONE array row per destination partition at build
-    time: (part_id, dst[], src[], payload[]...).  ``sort_array`` on the
-    (dst, src, ...) structs makes the pack deterministic across builds (the
-    per-superstep ``collect_list`` it replaces was task-order dependent).
-    Consumed by the dense vertex programs via a broadcast vid->state map +
-    ``zip_with``/``transform`` — the hub adjacency itself never moves again
-    inside the superstep loop.  The explicit P-way repartition pins the pack
-    to the carried table's partitioning, so unioning its messages into the
-    superstep cogroup needs no Exchange."""
-    z = F.sort_array(
-        F.collect_list(F.struct(F.col("dst"), F.col("src"), *[F.col(c) for c in payload]))
-    )
-
-    def _field(name):
-        return lambda x: x[name]
-
-    return (
-        hub_edges.withColumn("part_id", F.pmod(F.col("dst"), F.lit(P)).cast("int"))
-        .repartition(P, "part_id")
-        .groupBy("part_id")
-        .agg(z.alias("_z"))
-        .select(
-            "part_id",
-            F.transform("_z", _field("dst")).alias("dst"),
-            F.transform("_z", _field("src")).alias("src"),
-            *[F.transform("_z", _field(c)).alias(c) for c in payload],
-        )
-    )
+def _mirrors(schema: "pa.Schema", P: int, vids: np.ndarray, state: dict) -> "pa.Table":
+    """The states of hub vertices ``vids`` (``state``: column -> values in
+    vids order) as ONE Arrow IPC stream, addressed to every partition."""
+    sink = pa.BufferOutputStream()
+    tbl = pa.table({"vid": vids, **state})
+    with pa.ipc.new_stream(sink, tbl.schema) as w:
+        w.write_table(tbl)
+    return _addressed(schema, P, {_MIRROR: pa.array([sink.getvalue().to_pybytes()] * P, pa.binary())})
 
 
-def _hub_state_map(state: DataFrame, hub_vids: DataFrame, col: str) -> DataFrame:
-    """One-row vid->state map over the hub vertex set (broadcast into the
-    pre-packed hub evaluation; hub sets are tiny by definition)."""
-    return (
-        state.join(F.broadcast(hub_vids), "vid")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("vid"), F.col(col)))
-            ).alias("_m")
-        )
-    )
-
-
-def _pack_hub_jvm(hub_rows, payload: tuple[str, ...]):
-    """JVM-side hub message packer: per destination partition, one packed
-    array row in the same wire format as ``_packed_msgs`` — collect_list of
-    (dst, payload...) structs, unzipped with ``transform``.  Packing in the
-    JVM spares the hub path a Python worker round trip, which would be the
-    bulk of the hub split's fixed per-superstep overhead at small scale.
-    That round-trip cost was measured while every Python task still paid a
-    ~0.3 s re-read of pyspark.zip (see the zip-importer guard in
-    ``linkgraph/__init__.py``); re-measure it before relying on it."""
-    z = F.collect_list(F.struct(F.col("dst"), *[F.col(c) for c in payload]))
-
-    def _field(name):
-        # single-parameter lambda per field: a two-parameter lambda would be
-        # read by transform() as (element, index) and break field extraction
-        return lambda x: x[name]
-
-    return (
-        hub_rows.groupBy("part_id")
-        .agg(z.alias("_z"))
-        .select(
-            "part_id",
-            F.transform("_z", _field("dst")).alias("dst"),
-            *[F.transform("_z", _field(c)).alias(c) for c in payload],
-        )
-    )
+def _mirrored_state(mirrors: "pa.Table", hubs: np.ndarray):
+    """Source-state accessor over all hub vertices, dense in ``hubs`` order
+    (the index of a hub block's ``indptr``), from the mirror rows that each
+    hub owner sent, one per owner."""
+    tbl = pa.concat_tables(pa.ipc.open_stream(b).read_all() for b in mirrors[_MIRROR].to_pylist())
+    return functools.partial(_dense_state, tbl, np.searchsorted(hubs, _pa_np(tbl["vid"])))
 
 
 def _states(carried: DataFrame) -> DataFrame:
-    """The state rows of a carried table (message rows have a null vid)."""
+    """The state rows of a carried table (message and mirror rows have a
+    null vid)."""
     return carried.where(F.col("vid").isNotNull())
 
 
@@ -546,30 +492,35 @@ def _states(carried: DataFrame) -> DataFrame:
 # the shared superstep
 # --------------------------------------------------------------------------
 
-def _superstep_udf(program, P: int, params: dict | None):
-    """The one Python stage of a superstep: a cogroup UDF over CSR block p
-    and partition p's carried rows.  It applies the incoming messages to
-    the state with the program's ``apply`` kernel, scatters the new state
-    through the block with ``scatter``, and returns the new state rows plus
-    the packed messages for the next superstep as one table of the carried
-    schema.  ``params=None`` is the prologue: the carried side is a plain
-    state table, which passes through (stat column zero) and is scattered.
-    Only the kernels and schemas are closed over, never the program (it may
-    hold DataFrames)."""
+def _superstep_udf(program, P: int, params: dict | None, hubs: tuple[int, ...]):
+    """The one Python stage of a superstep: a cogroup UDF over partition p's
+    CSR block rows and carried rows.  It scatters the mirrored hub states
+    through p's hub block, applies those and the incoming messages to the
+    state with the program's ``apply`` kernel, scatters the new state
+    through the residue-class block with ``scatter``, and returns the new
+    state rows, the packed messages and the mirrors of p's own hubs
+    (``hubs``: this side's sorted hub vids) for the next superstep as one
+    table of the carried schema.  ``params=None`` is the prologue: the
+    carried side is a plain state table, which passes through (stat column
+    zero), is scattered and mirrored.  Only the kernels and schemas are
+    closed over, never the program (it may hold DataFrames)."""
     schema = _carried_schema(program)
     n_state = len(_ddl_fields(program.apply_schema))
-    state_fields, msg_fields = list(schema)[:n_state], list(schema)[n_state:]
+    state_fields, msg_fields = list(schema)[:n_state], list(schema)[n_state:-1]
     stat = state_fields[-1]
     kept = [f.name for f in state_fields[:-1] if f.name not in ("vid", "part_id")]
-    no_msgs = {n: np.empty(0, _ARROW[t].to_pandas_dtype()) for n, t in program.msg_types.items()}
+    msg_names = list(program.msg_types)
     scatter = program.scatter
     apply = None if params is None else functools.partial(program.apply, **params)
+    hubs = np.asarray(hubs, dtype=np.int64)
 
     def step(key, blk: pa.Table, carried: pa.Table) -> pa.Table:
         # NOTE: the (key, table...) type hints are load-bearing — PySpark
         # 4.1.2's applyInArrow raises UnboundLocalError if hint inference
         # fails (group_ops.py:936).
         p = key[0].as_py()
+        # block rows: the residue-class block and the hub block (each optional)
+        rows = {hub: blk.slice(i, 1) for i, hub in enumerate(blk["hub"].to_pylist())}
         msgs = None
         if apply is not None:
             is_state = pc.is_valid(carried["vid"])
@@ -577,29 +528,44 @@ def _superstep_udf(program, P: int, params: dict | None):
         nloc = carried.num_rows
         if nloc == 0:
             return schema.empty_table()
-        st = functools.partial(_dense_state, carried, p=p, P=P)
+        st = functools.partial(_dense_state, carried, (_pa_np(carried["vid"]) - p) // P)
         if apply is None:
             out = {n: st(n) for n in kept}
             out[stat.name] = np.zeros(nloc, stat.type.to_pandas_dtype())
         else:
-            loc, m = np.empty(0, np.int64), no_msgs
-            if msgs.num_rows:
-                loc = (_pa_flat(msgs, "dst") - p) // P
-                m = {n: _pa_flat(msgs, _MSG + n) for n in no_msgs}
-            out = apply(st, nloc, loc, m)
+            # the messages (mirror rows have null lists, which flatten
+            # skips), then what p's hub block scatters from the mirrors
+            dst = [_pa_flat(msgs, "dst")]
+            m = {n: [_pa_flat(msgs, _MSG + n)] for n in msg_names}
+            mirrors = msgs.filter(pc.is_valid(msgs[_MIRROR]))
+            if True in rows and mirrors.num_rows:
+                hub_blk = functools.partial(_block_np, rows[True])
+                sent = scatter(hub_blk, _mirrored_state(mirrors, hubs))
+                if sent is not None:
+                    dst.append(sent[0])
+                    for n in m:
+                        m[n].append(sent[1][n])
+            loc = (np.concatenate(dst) - p) // P
+            out = apply(st, nloc, loc, {n: np.concatenate(v) for n, v in m.items()})
         out["vid"] = p + np.arange(nloc, dtype=np.int64) * P
         out["part_id"] = np.full(nloc, p, np.int32)
         no_lists = pa.array(np.zeros(nloc + 1, np.int32))
         tables = [
             pa.Table.from_arrays(
                 [pa.array(out[f.name], f.type) for f in state_fields]
-                + [pa.ListArray.from_arrays(no_lists, pa.array([], f.type.value_type)) for f in msg_fields],
+                + [pa.ListArray.from_arrays(no_lists, pa.array([], f.type.value_type)) for f in msg_fields]
+                + [pa.nulls(nloc, pa.binary())],
                 schema=schema,
             )
         ]
-        sent = scatter(lambda name: _block_np(blk, name), out.__getitem__) if blk.num_rows else None
-        if sent is not None:
-            tables.append(_packed_msgs(schema, P, *sent))
+        if False in rows:
+            sent = scatter(functools.partial(_block_np, rows[False]), out.__getitem__)
+            if sent is not None:
+                tables.append(_packed_msgs(schema, P, *sent))
+        mine = hubs[hubs % P == p]
+        if len(mine):
+            at = (mine - p) // P
+            tables.append(_mirrors(schema, P, mine, {n: out[n][at] for n in kept}))
         return pa.concat_tables(tables)
 
     return step
@@ -609,29 +575,15 @@ class VertexProgram:
     """One vertex-centric superstep shared by every program (see the module
     docstring for the kernel contract).  Subclasses declare ``name``,
     ``state_cols``, ``apply_schema`` (state_cols + one stat column, Spark
-    DDL), ``msg_types`` (payload column -> DDL type), ``uses_undirected``,
-    ``hub_col`` and the ``scatter``/``apply`` staticmethod kernels."""
+    DDL), ``msg_types`` (payload column -> DDL type), ``uses_undirected``
+    and the ``scatter``/``apply`` staticmethod kernels."""
 
     uses_undirected = False
-    hub_col: str | None = None
 
     def step_params(self, ctx: GraphContext, state: DataFrame, carry: dict | None) -> dict:
         """Plain scalars bound into the apply kernel for this superstep;
         ``carry`` is the stats row observed on ``state``."""
         return {}
-
-    def hub_payload(self) -> dict:
-        """Per-edge hub message columns.  Pack mode: evaluated on the static
-        pack (``src``/``coeff``/``w`` arrays, ``_m`` the vid->``hub_col``
-        map).  Frontier mode: evaluated per hub edge row joined with the
-        sender's ``hub_col``."""
-        raise NotImplementedError
-
-    def hub_frontier(self):
-        """None: dense program, hub messages come from the static pack.
-        Otherwise the Column predicate selecting the hub senders that
-        message out (broadcast-join path)."""
-        return None
 
     def stat_exprs(self):
         return [F.sum("_changed").alias("changes")]
@@ -640,64 +592,22 @@ class VertexProgram:
         return stats["changes"] == 0
 
     def _cogroup(self, ctx: GraphContext, carried: DataFrame, params: dict | None) -> DataFrame:
-        blocks = ctx.ublocks if self.uses_undirected else ctx.blocks
+        blocks, hubs = (ctx.ublocks, ctx.uhubs) if self.uses_undirected else (ctx.blocks, ctx.hubs)
         return (
             blocks.groupby("part_id")
             .cogroup(carried.groupby("part_id"))
-            .applyInArrow(_superstep_udf(self, ctx.P, params), _carried_ddl(self))
+            .applyInArrow(_superstep_udf(self, ctx.P, params, hubs), _carried_ddl(self))
         )
 
     def _prologue(self, ctx: GraphContext, state: DataFrame) -> DataFrame:
         """Carried table of a plain state (lazy): its rows with a zero stat
-        column, plus the messages it scatters."""
+        column, plus the messages and hub mirrors it scatters."""
         return self._cogroup(ctx, state.repartition(ctx.P, "part_id"), None)
 
     def _step(self, ctx: GraphContext, carried: DataFrame, carry: dict) -> DataFrame:
         """Carried table of the next superstep (lazy), from the materialized
         carried table of this one and its observed stats."""
-        params = self.step_params(ctx, _states(carried), carry)
-        if self.uses_undirected:
-            hub_edges, hub_vids, hub_pack = ctx.uhub_edges, ctx.uhub_vids, ctx.uhub_pack
-        else:
-            hub_edges, hub_vids, hub_pack = ctx.hub_edges, ctx.hub_vids, ctx.hub_pack
-        if hub_edges is not None:
-            # op 47: hub adjacency lives outside the CSR blocks; its messages
-            # are computed in the JVM from the carried state rows (message
-            # rows have null state columns and drop out of both joins) and
-            # join the carried side in the same packed wire format.
-            payload = [col.alias(_MSG + n) for n, col in self.hub_payload().items()]
-            frontier = self.hub_frontier()
-            if frontier is None:
-                # dense: static pack per destination partition (built once)
-                # + a broadcast vid->state map over the tiny hub set — the hub
-                # edge set never re-shuffles in the loop.
-                m = _hub_state_map(carried, hub_vids, self.hub_col)
-                hub_msgs = hub_pack.crossJoin(F.broadcast(m)).select("part_id", "dst", *payload)
-            else:
-                # frontier-sparse: only active hub senders are broadcast-
-                # joined onto their edges, then packed JVM-side (the P-way
-                # repartition is the pack's grouping shuffle).
-                hub_state = (
-                    carried.where(frontier)
-                    .join(F.broadcast(hub_vids), "vid")
-                    .select(F.col("vid").alias("src"), *filter(None, [self.hub_col]))
-                )
-                hub_rows = hub_edges.join(F.broadcast(hub_state), "src").select(
-                    F.pmod(F.col("dst"), F.lit(ctx.P)).cast("int").alias("part_id"),
-                    "dst",
-                    *payload,
-                )
-                hub_msgs = _pack_hub_jvm(
-                    hub_rows.repartition(ctx.P, "part_id"),
-                    tuple(_MSG + n for n in self.msg_types),
-                )
-            carried = carried.unionByName(
-                hub_msgs.select(*[
-                    n if n in hub_msgs.columns else F.lit(None).cast(t).alias(n)
-                    for n, t in _ddl_fields(_carried_ddl(self))
-                ])
-            )
-        return self._cogroup(ctx, carried, params)
+        return self._cogroup(ctx, carried, self.step_params(ctx, _states(carried), carry))
 
     def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
         """One superstep on a plain state DataFrame: the ``apply_schema``
@@ -708,6 +618,16 @@ class VertexProgram:
         carried, stats = _materialize(self, ctx, self._prologue(ctx, state), "prologue")
         step = self._step(ctx, carried, stats if carry is None else carry)
         return _states(step).select(*[n for n, _ in _ddl_fields(self.apply_schema)])
+
+
+def _seeded(ctx: GraphContext, vids: DataFrame, col: str, hit, miss, typ: str) -> DataFrame:
+    """Init state vid, part_id, ``col``: ``hit`` on the vertices listed in
+    ``vids``, ``miss`` elsewhere (seed sets are vertex-scale, so the
+    membership join is a broadcast)."""
+    seeds = vids.select("vid").distinct().withColumn("_s", F.lit(True))
+    return ctx.vertex_base.join(F.broadcast(seeds), "vid", "left").select(
+        "vid", "part_id", F.when(F.col("_s"), F.lit(hit)).otherwise(F.lit(miss)).cast(typ).alias(col)
+    )
 
 
 def _monotone_apply(col: str, msg: str, ufunc, identity):
@@ -742,20 +662,13 @@ class PageRankProgram(VertexProgram):
     state_cols = ["vid", "part_id", "dangling", "rank"]
     apply_schema = "vid long, part_id int, dangling boolean, rank double, _delta double"
     msg_types = {"msum": "double"}
-    hub_col = "rank"
     scatter = staticmethod(functools.partial(_weighted_sum_scatter, wcol="coeff"))
-    hub_weight = "coeff"  # hub pack column matching the block's coeff
 
     def __init__(self, d: float = 0.85, tol: float = 1e-6):
         self.d, self.tol = d, tol
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
         return ctx.vertex_base.withColumn("rank", F.lit(1.0 / ctx.n_vertices))
-
-    def hub_payload(self) -> dict:
-        return {
-            "msum": F.zip_with("src", self.hub_weight, lambda s, c: F.col("_m")[s] * c)
-        }
 
     @staticmethod
     def _dangling_mass(carry: dict) -> float:
@@ -860,7 +773,6 @@ class ComponentsProgram(VertexProgram):
     apply_schema = "vid long, part_id int, comp long, _changed long"
     msg_types = {"mmin": "long"}
     uses_undirected = True
-    hub_col = "comp"
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
         return ctx.vertex_base.select("vid", "part_id", F.col("vid").alias("comp"))
@@ -873,9 +785,6 @@ class ComponentsProgram(VertexProgram):
         return udst, {"mmin": partial}
 
     apply = staticmethod(_monotone_apply("comp", "mmin", np.minimum, np.iinfo(np.int64).max))
-
-    def hub_payload(self) -> dict:
-        return {"mmin": F.transform("src", lambda s: F.col("_m")[s])}
 
 
 BFS_INF = np.int64(1) << 62  # "unreached"; +1 cannot overflow int64
@@ -895,9 +804,8 @@ class KatzProgram(PageRankProgram):
     double summation-order noise at gate scale)."""
 
     name = "katz"
-    # RAW w, not coeff, on both the blocks and the hub pack
+    # RAW w, not coeff
     scatter = staticmethod(functools.partial(_weighted_sum_scatter, wcol="weights"))
-    hub_weight = "w"
 
     def __init__(self, alpha: float = 0.01, beta: float = 1.0, tol: float = 1e-6):
         self.alpha, self.beta, self.tol = alpha, beta, tol
@@ -955,25 +863,13 @@ class BFSProgram(VertexProgram):
     apply_schema = "vid long, part_id int, dist long, _changed long"
     msg_types = {"mmin": "long"}
     uses_undirected = True
-    hub_col = "dist"
 
     def __init__(self, source_vids: DataFrame):
         """``source_vids``: one-column (vid) DataFrame of BFS sources."""
         self.source_vids = source_vids
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
-        srcs = self.source_vids.select("vid").distinct().withColumn("_s", F.lit(True))
-        return (
-            ctx.vertex_base.join(F.broadcast(srcs), "vid", "left")
-            .select(
-                "vid",
-                "part_id",
-                F.when(F.col("_s"), F.lit(0))
-                .otherwise(F.lit(int(BFS_INF)))
-                .cast("long")
-                .alias("dist"),
-            )
-        )
+        return _seeded(ctx, self.source_vids, "dist", 0, int(BFS_INF), "long")
 
     @staticmethod
     def scatter(blk, st):
@@ -986,13 +882,6 @@ class BFSProgram(VertexProgram):
         return udst[frontier], {"mmin": partial[frontier] + 1}
 
     apply = staticmethod(_monotone_apply("dist", "mmin", np.minimum, BFS_INF))
-
-    def hub_frontier(self):
-        # only reached hub vertices message out
-        return F.col("dist") < F.lit(int(BFS_INF))
-
-    def hub_payload(self) -> dict:
-        return {"mmin": F.col("dist") + 1}
 
     def stat_exprs(self):
         return [
@@ -1023,7 +912,6 @@ class BipartiteProgram(VertexProgram):
     apply_schema = "vid long, part_id int, mask long, _changed long"
     msg_types = {"mor": "long"}
     uses_undirected = True
-    hub_col = "mask"
 
     def __init__(self, root_vids: DataFrame):
         """``root_vids``: one-column (vid) DataFrame of component roots
@@ -1031,18 +919,7 @@ class BipartiteProgram(VertexProgram):
         self.root_vids = root_vids
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
-        roots = self.root_vids.select("vid").distinct().withColumn("_s", F.lit(True))
-        return (
-            ctx.vertex_base.join(F.broadcast(roots), "vid", "left")
-            .select(
-                "vid",
-                "part_id",
-                F.when(F.col("_s"), F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("mask"),
-            )
-        )
+        return _seeded(ctx, self.root_vids, "mask", 1, 0, "long")
 
     @staticmethod
     def scatter(blk, st):
@@ -1057,17 +934,6 @@ class BipartiteProgram(VertexProgram):
         return udst[frontier], {"mor": partial[frontier]}
 
     apply = staticmethod(_monotone_apply("mask", "mor", np.bitwise_or, 0))
-
-    def hub_frontier(self):
-        return F.col("mask") > 0
-
-    def hub_payload(self) -> dict:
-        # a hub vertex's message is its bit-swapped mask; OR-aggregation in
-        # apply absorbs the extra rows
-        swapped = F.shiftleft(F.col("mask").bitwiseAND(F.lit(1)), 1).bitwiseOR(
-            F.shiftright(F.col("mask"), 1).bitwiseAND(F.lit(1))
-        )
-        return {"mor": swapped.cast("long")}
 
     def stat_exprs(self):
         return [
@@ -1094,23 +960,12 @@ class SSSPProgram(VertexProgram):
     state_cols = ["vid", "part_id", "dist"]
     apply_schema = "vid long, part_id int, dist double, _changed long"
     msg_types = {"mmin": "double"}
-    hub_col = "dist"
 
     def __init__(self, source_vids: DataFrame):
         self.source_vids = source_vids
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
-        srcs = self.source_vids.select("vid").distinct().withColumn("_s", F.lit(True))
-        return (
-            ctx.vertex_base.join(F.broadcast(srcs), "vid", "left")
-            .select(
-                "vid",
-                "part_id",
-                F.when(F.col("_s"), F.lit(0.0))
-                .otherwise(F.lit(float("inf")))
-                .alias("dist"),
-            )
-        )
+        return _seeded(ctx, self.source_vids, "dist", 0.0, float("inf"), "double")
 
     @staticmethod
     def scatter(blk, st):
@@ -1124,13 +979,6 @@ class SSSPProgram(VertexProgram):
         return udst[frontier], {"mmin": partial[frontier]}
 
     apply = staticmethod(_monotone_apply("dist", "mmin", np.minimum, np.inf))
-
-    def hub_frontier(self):
-        return F.col("dist") != F.lit(float("inf"))
-
-    def hub_payload(self) -> dict:
-        # relax on the raw w column the hub split carries alongside coeff
-        return {"mmin": F.col("dist") + F.col("w")}
 
     def stat_exprs(self):
         return [
@@ -1157,23 +1005,12 @@ class WidestPathProgram(VertexProgram):
     state_cols = ["vid", "part_id", "cap"]
     apply_schema = "vid long, part_id int, cap double, _changed long"
     msg_types = {"mmax": "double"}
-    hub_col = "cap"
 
     def __init__(self, source_vids: DataFrame):
         self.source_vids = source_vids
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
-        srcs = self.source_vids.select("vid").distinct().withColumn("_s", F.lit(True))
-        return (
-            ctx.vertex_base.join(F.broadcast(srcs), "vid", "left")
-            .select(
-                "vid",
-                "part_id",
-                F.when(F.col("_s"), F.lit(float("inf")))
-                .otherwise(F.lit(float("-inf")))
-                .alias("cap"),
-            )
-        )
+        return _seeded(ctx, self.source_vids, "cap", float("inf"), float("-inf"), "double")
 
     @staticmethod
     def scatter(blk, st):
@@ -1187,13 +1024,6 @@ class WidestPathProgram(VertexProgram):
         return udst[frontier], {"mmax": partial[frontier]}
 
     apply = staticmethod(_monotone_apply("cap", "mmax", np.maximum, -np.inf))
-
-    def hub_frontier(self):
-        return F.col("cap") != F.lit(float("-inf"))
-
-    def hub_payload(self) -> dict:
-        # relax min(cap, w) on the raw w column the hub split carries
-        return {"mmax": F.least(F.col("cap"), F.col("w"))}
 
     def stat_exprs(self):
         return [
@@ -1289,14 +1119,6 @@ class LTCascadeProgram(VertexProgram):
             "step": step_new, "theta": theta, "_changed": newly.astype(np.int64),
         }
 
-    def hub_frontier(self):
-        # freshly-activated hubs only (same at-most-once-per-edge guarantee
-        # as the block path); np.add.at in apply combines duplicates
-        return F.col("rnd") == F.col("step")
-
-    def hub_payload(self) -> dict:
-        return {"msum": F.lit(1).cast("long")}
-
     def stat_exprs(self):
         return [
             F.sum("_changed").alias("changes"),
@@ -1316,7 +1138,6 @@ class LabelPropProgram(VertexProgram):
     apply_schema = "vid long, part_id int, label long, _changed long"
     msg_types = {"label": "long", "cnt": "long"}
     uses_undirected = True
-    hub_col = "label"
 
     def init_state(self, ctx: GraphContext) -> DataFrame:
         return ctx.vertex_base.select("vid", "part_id", F.col("vid").alias("label"))
@@ -1360,15 +1181,6 @@ class LabelPropProgram(VertexProgram):
         first[1:] = gm2[1:] != gm2[:-1]
         label_new[gm2[first]] = gll[order2][first]
         return {"label": label_new, "_changed": (label_new != label_old).astype(np.int64)}
-
-    def hub_payload(self) -> dict:
-        # hub neighbours each contribute (label, cnt=1) off the static pack;
-        # the apply's per-(vertex, label) count-sum folds them with the
-        # block partials, so per-edge entries are exact
-        return {
-            "label": F.transform("src", lambda s: F.col("_m")[s]),
-            "cnt": F.array_repeat(F.lit(1).cast("long"), F.size("src")),
-        }
 
 
 # --------------------------------------------------------------------------

@@ -11,11 +11,13 @@ Two complementary mechanisms:
 2. ``split_hub_edges`` — scatter-side hub splitting for the CSR path.  Mod
    partitioning puts ALL out-edges of a vertex in one block, so a hub source
    (out_deg > theta) would serialize one partition.  Hub adjacency is
-   therefore pulled OUT of the CSR blocks and scattered via a
-   broadcast-join: hub state is tiny by definition (few vertices), so
-   ``broadcast(hub_state) join hub_edges`` spreads the hub's per-edge work
-   uniformly across whatever partitioning the hub edge table has
-   (hash(src, dst)), eliminating the straggler.
+   therefore pulled OUT of the residue-class CSR blocks and packed by
+   DESTINATION partition (``csr.build_hub_blocks``).  Hub state is tiny by
+   definition (few vertices), so each superstep the hub's owner sends it to
+   every partition as a mirror, and each partition scatters its slice of
+   the hub's edges with the program's own kernel (pregel.py): the hub's
+   per-edge work is spread over all P scatter tasks, eliminating the
+   straggler.
 
    Dst-side hub skew needs no extra work in the CSR path: the block-local
    ``np.bincount`` over ``udst`` is structurally a salted pre-aggregation
@@ -62,9 +64,10 @@ def split_hub_edges(
 ) -> tuple[DataFrame, DataFrame]:
     """Partition the edge table into (non_hub, hub) by source out-degree.
 
-    hub edges carry BOTH the PageRank scatter coefficient w/out_w(src)
-    (so the broadcast-join scatter needs no degree lookup at superstep time)
-    and the raw weight w (the min-plus programs — SSSP — relax on it).
+    hub edges carry BOTH the PageRank scatter coefficient w/out_w(src) over
+    the hub's WHOLE row (the hub blocks split that row by destination, so
+    they cannot derive it) and the raw weight w (Katz and the min-plus
+    programs — SSSP — scatter on it).
     ``presummed=True`` skips the multi-edge pre-sum when the input is
     already one row per (src, dst)."""
     hubs = detect_hubs(degrees, theta, side="out")

@@ -7,12 +7,16 @@ import numpy as np
 import pytest
 
 from linkgraph.derive import build_graph
+from pyspark.sql import functions as F
+
 from linkgraph.pregel import (
+    BFSProgram,
     ComponentsProgram,
     EigenvectorProgram,
     GraphContext,
     KatzProgram,
     LabelPropProgram,
+    LTCascadeProgram,
     PageRankProgram,
     PersonalizedPageRankProgram,
     _materialize,
@@ -184,7 +188,7 @@ def test_katz_hub_split_equals_unsplit(spark, make_prog):
     # out-degree, so theta=0 forces every src through the broadcast path
     ctx_split = GraphContext.build(g, 4, hub_theta=0, hub_floor=0)
     try:
-        assert ctx_split.hub_edges is not None  # split actually engaged
+        assert ctx_split.nnz_hub > 0  # split actually engaged
         k1 = _col(
             run_program(ctx_plain, make_prog(spark), fixed_iters=4).state,
             "rank", n,
@@ -216,45 +220,22 @@ def _plan_nodes(df) -> Counter:
     return Counter(name for _depth, name in _plan_tree(df))
 
 
-def _ancestors(df, name: str) -> list[list[str]]:
-    """For each ``name`` node of the executed plan, the operators above it,
-    nearest first."""
-    tree = _plan_tree(df)
-    out = []
-    for i, (depth, op) in enumerate(tree):
-        if op == name:
-            up, want = [], depth - 1
-            for d, o in reversed(tree[:i]):
-                if d == want:
-                    up.append(o)
-                    want -= 1
-            out.append(up)
-    return out
-
-
 def _star_hub_ctx(spark, split: bool):
     g = build_graph(micro_transcripts(spark, "star_hub"))
     kw = {"hub_theta": 0, "hub_floor": 0} if split else {}
     ctx = GraphContext.build(g, 4, **kw)
-    assert (ctx.hub_edges is not None) == split
+    assert (ctx.nnz_hub > 0) == split
     return ctx
 
 
-@pytest.mark.parametrize(
-    "split, expected",
-    [
-        (False, {"Exchange": 1, "BroadcastExchange": 0, "FlatMapCoGroupsInArrow": 1}),
-        # the hub pack adds the vid->rank map's aggregation exchange and the
-        # broadcasts of the hub vid set and of the map
-        (True, {"Exchange": 2, "BroadcastExchange": 2, "FlatMapCoGroupsInArrow": 1}),
-    ],
-    ids=["unsplit", "split"],
-)
-def test_pagerank_superstep_plan_shape(spark, split, expected):
+@pytest.mark.parametrize("split", [False, True], ids=["unsplit", "split"])
+def test_pagerank_superstep_plan_shape(spark, split):
     """One PageRank superstep through the composite ``superstep()`` with
     AQE off, as a caller re-pins it: the caller's repartition is the only
     full exchange (the prologue is materialized inside superstep()), and
-    the fused apply+scatter cogroup the only Python stage."""
+    the fused apply+scatter cogroup the only Python stage.  Split, the hub
+    block rows share the block table and the hub mirrors the carried
+    table, so the plan has the unsplit shape."""
     ctx = _star_hub_ctx(spark, split)
     try:
         prog = PageRankProgram()
@@ -262,6 +243,7 @@ def test_pagerank_superstep_plan_shape(spark, split, expected):
             state = prog.init_state(ctx).repartition(ctx.P, "part_id").localCheckpoint()
             step = prog.superstep(ctx, state).select(*prog.state_cols)
             nodes = _plan_nodes(step.repartition(ctx.P, "part_id"))
+        expected = {"Exchange": 1, "BroadcastExchange": 0, "FlatMapCoGroupsInArrow": 1, "Union": 0}
         assert {k: nodes[k] for k in expected} == expected
     finally:
         ctx.unpersist()
@@ -270,9 +252,8 @@ def test_pagerank_superstep_plan_shape(spark, split, expected):
 @pytest.mark.parametrize("split", [False, True], ids=["unsplit", "split"])
 def test_pagerank_fused_step_plan_shape(spark, split):
     """The in-loop superstep: one cogroup of the static blocks with the
-    materialized carried table, then the one message Exchange.  Split, the
-    hub messages join the carried side through a Union whose children are
-    both partitioned by part_id, so no Exchange sits above it."""
+    materialized carried table, then the one message Exchange — with or
+    without the hub split."""
     ctx = _star_hub_ctx(spark, split)
     try:
         prog = PageRankProgram()
@@ -280,20 +261,59 @@ def test_pagerank_fused_step_plan_shape(spark, split):
             carried, carry = _materialize(prog, ctx, prog._prologue(ctx, prog.init_state(ctx)), 0)
             step = prog._step(ctx, carried, carry).repartition(ctx.P, "part_id")
             nodes = _plan_nodes(step)
-            unions = _ancestors(step, "Union")
-        assert nodes["FlatMapCoGroupsInArrow"] == 1
-        if split:
-            # nothing between the Union and the cogroup re-shuffles
-            assert len(unions) == 1
-            up = unions[0]
-            assert "Exchange" not in up[: up.index("FlatMapCoGroupsInArrow")]
-        else:
-            assert {k: nodes[k] for k in ("Exchange", "BroadcastExchange")} == {
-                "Exchange": 1, "BroadcastExchange": 0,
-            }
-            assert unions == []
+        expected = {"Exchange": 1, "BroadcastExchange": 0, "FlatMapCoGroupsInArrow": 1, "Union": 0}
+        assert {k: nodes[k] for k in expected} == expected
     finally:
         ctx.unpersist()
+
+
+@pytest.fixture(scope="module")
+def star_hub_pair(spark):
+    """star_hub contexts unsplit and with every row forced into the hub
+    blocks, so every partition owns hubs and receives mirrors."""
+    g = build_graph(micro_transcripts(spark, "star_hub"))
+    plain = GraphContext.build(g, 4)
+    split = GraphContext.build(g, 4, hub_theta=0, hub_floor=0)
+    assert plain.nnz_hub == plain.nnz_uhub == 0
+    assert split.nnz_hub > 0 and split.nnz_uhub > 0
+    yield plain, split
+    plain.unpersist()
+    split.unpersist()
+
+
+def _one_vid(spark):
+    return spark.createDataFrame([(0,)], "vid long")
+
+
+@pytest.mark.parametrize(
+    "make_prog, keys, atol",
+    [
+        (lambda spark: ComponentsProgram(), ("changes",), 0),
+        (lambda spark: BFSProgram(_one_vid(spark)), ("changes", "reached"), 0),
+        (
+            lambda spark: LTCascadeProgram(
+                _one_vid(spark), spark.range(1000).select("id", F.lit(1)).toDF("vid", "theta")
+            ),
+            ("changes", "active"),
+            0,
+        ),
+        (lambda spark: PageRankProgram(), ("rank_sum", "dangling_mass"), 1e-12),
+    ],
+    ids=["components", "bfs", "ltcascade", "pagerank"],
+)
+def test_hub_mirrors_never_reach_results(spark, star_hub_pair, make_prog, keys, atol):
+    """Mirror rows travel in the carried table but carry no vid and no
+    state, so the stats observed on it and the returned state are those of
+    the unsplit run: the same per-superstep stats, one row per vertex."""
+    plain, split = star_hub_pair
+    r1 = run_program(plain, make_prog(spark), fixed_iters=4)
+    r2 = run_program(split, make_prog(spark), fixed_iters=4)
+    assert len(r1.stats_history) == len(r2.stats_history) == 4
+    for h1, h2 in zip(r1.stats_history, r2.stats_history):
+        for k in keys:
+            np.testing.assert_allclose(h2[k], h1[k], rtol=0, atol=atol, err_msg=k)
+    assert r2.state.count() == split.n_vertices
+    assert r2.state.select("vid").distinct().count() == split.n_vertices
 
 
 @pytest.mark.parametrize("prior", ["true", "false"])
@@ -424,7 +444,7 @@ def test_context_contract(spark, contract_graph, kw):
     assert ctx.nnz_undirected == want["und_nnz"]
     split = kw.get("hub_floor") == 0
     assert (ctx.nnz_hub > 0 and ctx.nnz_uhub > 0) == split
-    assert (ctx.hub_vids is not None and ctx.uhub_vids is not None) == split
+    assert (len(ctx.hubs) > 0 and len(ctx.uhubs) > 0) == split
 
 
 @pytest.mark.parametrize("kw", [
@@ -519,7 +539,7 @@ def test_bipartite_hub_split_equals_unsplit(spark):
     ctx_plain = GraphContext.build(g, 4)
     ctx_split = GraphContext.build(g, 4, hub_theta=0, hub_floor=0)
     try:
-        assert ctx_split.uhub_edges is not None
+        assert ctx_split.nnz_uhub > 0
         _, m1 = _bipartite_masks(ctx_plain, n)
         _, m2 = _bipartite_masks(ctx_split, n)
         assert (m1 == m2).all()

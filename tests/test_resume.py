@@ -102,7 +102,7 @@ def test_hub_split_kill_and_resume_equals_uninterrupted(tmp_path, spark, make_pr
     ctx = GraphContext.build(g, 4, hub_theta=0, hub_floor=0)
     n = ctx.n_vertices
     try:
-        assert ctx.hub_edges is not None and ctx.uhub_edges is not None
+        assert ctx.nnz_hub > 0 and ctx.nnz_uhub > 0
         full = run_program(ctx, make_prog(spark), fixed_iters=4, ckpt_root=str(tmp_path / "a"))
         root_b = str(tmp_path / "b")
         algo = make_prog(spark).name
