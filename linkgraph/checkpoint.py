@@ -4,17 +4,24 @@ Layout (one chain per algorithm run):
 
     <root>/<algo>/
         step_000001/
-            state/...parquet (+_SUCCESS)
+            state/part-<p:05d>.parquet (+_SUCCESS)
             manifest.json
         step_000002/
         metrics.jsonl            # one JSON line per superstep (op 6)
 
 Manifest: {algo, superstep, parent, input_fingerprint, P, n_vertices,
-           per_partition: [{part_id: -1, rows, checksum}], metrics, schema}
+           per_partition: [{part_id: -1, rows, checksum}], metrics,
+           state_cols, wall_clock}
 (lineage is ONE aggregate entry — row count + order-insensitive checksum
-over the whole state, computed by an Observation riding the parquet-write
-job; the ``per_partition`` key and its single part_id=-1 entry are kept so
-existing chains still resume)
+over the whole state, observed on the superstep's own job through
+``lineage_exprs``; the ``per_partition`` key and its single part_id=-1
+entry are kept so existing chains still resume)
+
+Writes: a checkpointed superstep is one Spark job.  The driver clears and
+creates the step's tmp state dir before it (``begin``); inside it, the task
+of partition p writes p's state rows as one part file (``write_part``); after
+it, the driver seals the step (``commit``).  A partition with no state rows
+writes no file.
 
 Atomicity (SURVEY.md §7 trap 7): state parquet + manifest are written into
 ``step_NNNNNN._tmp`` and the directory is renamed into place; the manifest is
@@ -23,21 +30,24 @@ step.  ``latest_complete`` additionally revalidates the stored row count
 against the parquet it reads back, so a torn write is never resumed from.
 
 This module is the durability surface: ``DataFrame.checkpoint()`` is NOT used
-(JVM-local, not resumable across driver restarts).  The per-superstep
-read-back from parquet doubles as lineage truncation (op 54) — the logical
-plan for superstep t+1 is always exactly one superstep deep.
+(JVM-local, not resumable across driver restarts).  Lineage truncation (op
+54) is the superstep loop's eager ``localCheckpoint``, not this module: the
+logical plan for superstep t+1 is always exactly one superstep deep.  Roots
+are local paths; a URI root is rejected.
 """
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -57,7 +67,38 @@ def format_fingerprint(stats: dict[str, Any]) -> str:
     return f"e{stats['fp_n']}-{stats['fp_h']}"
 
 
-_WRITE_OBS_IDS = itertools.count()
+# aliases of the lineage aggregates in the superstep's observed stats
+LINEAGE = ("ckpt_rows", "ckpt_checksum")
+
+
+def lineage_exprs(state_cols: list[str]) -> list[Column]:
+    """Aggregates of a superstep's lineage entry (``LINEAGE``): the row count
+    and the order-insensitive checksum of its state, observed on the
+    superstep's own job.  Rows with a null vid (a carried table's message
+    and mirror rows) are not state and are skipped."""
+    is_state = F.col("vid").isNotNull()
+    return [
+        F.count("vid").alias(LINEAGE[0]),
+        F.sum(F.when(is_state, F.crc32(F.concat_ws(",", *state_cols)))).alias(LINEAGE[1]),
+    ]
+
+
+def write_part(state_dir: str, p: int, state: pa.Table) -> None:
+    """Write partition p's state rows (``state``, projected to the state
+    columns) into a step's tmp state dir; called by the superstep's task.
+    The file is written under a dot name, which Spark's reader skips, then
+    renamed into place, so a part file is whole or absent, and a retried
+    task rewrites the same name with the same bytes.  It never creates a
+    directory, so a late attempt cannot bring back a tmp dir that has
+    already been renamed."""
+    tmp = os.path.join(state_dir, f".part-{p}.tmp")
+    with open(tmp, "wb") as f:
+        # no dictionary pages: vids are unique and ranks nearly so, and
+        # unlike Spark's writer pyarrow never falls back to plain pages when
+        # a dictionary does not pay (measured on 20k-row partitions: plain
+        # pages ~22% smaller for PageRank state, no larger for components)
+        pq.write_table(state, f, use_dictionary=False)
+    os.replace(tmp, os.path.join(state_dir, f"part-{p:05d}.parquet"))
 
 
 @dataclass
@@ -70,6 +111,12 @@ class CheckpointManager:
     n_vertices: int
     state_cols: list[str] = field(default_factory=list)  # incl. part_id
 
+    def __post_init__(self) -> None:
+        # every path below goes through os.path: a URI would name a
+        # directory relative to the cwd
+        if "://" in self.root:
+            raise ValueError(f"checkpoint root must be a local path, not a URI: {self.root!r}")
+
     @property
     def algo_dir(self) -> str:
         return os.path.join(self.root, self.algo)
@@ -77,35 +124,25 @@ class CheckpointManager:
     def _step_dir(self, t: int) -> str:
         return os.path.join(self.algo_dir, f"step_{t:06d}")
 
-    def write(self, t: int, state: DataFrame, metrics: dict[str, Any]) -> list[dict]:
-        """Durably persist superstep t's state; returns lineage stats.
+    def begin(self, t: int) -> str:
+        """Clear (a killed attempt's leftovers) and create superstep t's tmp
+        state dir; returns its path, where the superstep's tasks write their
+        part files (``write_part``)."""
+        tmp = self._step_dir(t) + "._tmp"
+        if os.path.exists(tmp):
+            shutil.rmtree(tmp)
+        state_dir = os.path.join(tmp, "state")
+        os.makedirs(state_dir)
+        return state_dir
 
-        The row count and order-insensitive checksum ride the parquet-write
-        job itself as an ``Observation`` (one aggregate record,
-        ``part_id=-1``) — the durable write costs exactly ONE Spark action
-        per superstep (every consumer of the manifest only ever reads the
-        row-count SUM)."""
-        os.makedirs(self.algo_dir, exist_ok=True)
+    def commit(self, t: int, rows: int, checksum: int | None, metrics: dict[str, Any]) -> None:
+        """Seal superstep t once its job has written the part files: mark the
+        state complete, write the manifest (fsynced) with the lineage
+        observed on that job, rename the tmp dir into place and append the
+        metrics line."""
         tmp = self._step_dir(t) + "._tmp"
         final = self._step_dir(t)
-        if os.path.exists(tmp):
-            import shutil
-
-            shutil.rmtree(tmp)
-        obs = Observation(f"ckpt-{self.algo}-{t}-{next(_WRITE_OBS_IDS)}")
-        state.select(*self.state_cols).observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.crc32(F.concat_ws(",", *self.state_cols))).alias("checksum"),
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "state"))
-        row = obs.get
-        stats = [
-            {
-                "part_id": -1,
-                "rows": int(row["rows"] or 0),
-                "checksum": int(row["checksum"] or 0),
-            }
-        ]
+        open(os.path.join(tmp, "state", "_SUCCESS"), "w").close()
         manifest = {
             "algo": self.algo,
             "superstep": t,
@@ -113,7 +150,7 @@ class CheckpointManager:
             "input_fingerprint": self.fingerprint,
             "P": self.P,
             "n_vertices": self.n_vertices,
-            "per_partition": stats,
+            "per_partition": [{"part_id": -1, "rows": rows, "checksum": checksum or 0}],
             "metrics": metrics,
             "state_cols": self.state_cols,
             "wall_clock": time.time(),
@@ -123,12 +160,9 @@ class CheckpointManager:
             f.flush()
             os.fsync(f.fileno())
         if os.path.exists(final):
-            import shutil
-
             shutil.rmtree(final)
         os.rename(tmp, final)
         self.append_metrics({"superstep": t, **metrics})
-        return stats
 
     def read_state(self, t: int) -> DataFrame:
         """Read superstep t's state and re-establish P-way co-partitioning
@@ -189,8 +223,6 @@ class CheckpointManager:
         older steps are collected too.  Metrics (metrics.jsonl) are never
         touched — the audit trail outlives the states.  Returns the
         sorted list of deleted step numbers."""
-        import shutil
-
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         if not os.path.isdir(self.algo_dir):

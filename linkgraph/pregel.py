@@ -38,10 +38,13 @@ cost 3.3-4.0 s with null lists, 0.3-0.4 s with empty ones).
                (message and mirror rows are all-null there, so sums/maxima
                skip them)
     persist  : eager localCheckpoint keeps the plan one superstep deep
-               (op 54); the durable checkpoint writes the state rows,
-               overlapped with the next superstep
+               (op 54); with a checkpoint root, each partition's task also
+               writes its state rows as the step's durable part file, and
+               the step's lineage (row count + checksum) rides the same
+               observation as the stats
 
-So a superstep is one Python stage and one Exchange.  The carried table is
+So a superstep is one Spark job: one Python stage and one Exchange,
+checkpointed or not.  The carried table is
 materialized once and read by exactly one consumer, and the blocks are
 static, so nothing is recomputed.  ``RunResult.state`` and the durable
 checkpoints are the state rows of the last carried table, projected to
@@ -91,7 +94,9 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import CheckpointManager, fingerprint_exprs, format_fingerprint
+from .checkpoint import (
+    LINEAGE, CheckpointManager, fingerprint_exprs, format_fingerprint, lineage_exprs, write_part,
+)
 from .csr import build_csr_blocks, build_hub_blocks, symmetrize
 from .derive import GraphTables
 from .skew import split_hub_edges
@@ -492,7 +497,9 @@ def _states(carried: DataFrame) -> DataFrame:
 # the shared superstep
 # --------------------------------------------------------------------------
 
-def _superstep_udf(program, P: int, params: dict | None, hubs: tuple[int, ...]):
+def _superstep_udf(
+    program, P: int, params: dict | None, hubs: tuple[int, ...], state_dir: str | None = None
+):
     """The one Python stage of a superstep: a cogroup UDF over partition p's
     CSR block rows and carried rows.  It scatters the mirrored hub states
     through p's hub block, applies those and the incoming messages to the
@@ -502,14 +509,18 @@ def _superstep_udf(program, P: int, params: dict | None, hubs: tuple[int, ...]):
     (``hubs``: this side's sorted hub vids) for the next superstep as one
     table of the carried schema.  ``params=None`` is the prologue: the
     carried side is a plain state table, which passes through (stat column
-    zero), is scattered and mirrored.  Only the kernels and schemas are
-    closed over, never the program (it may hold DataFrames)."""
+    zero), is scattered and mirrored.  With ``state_dir`` (a checkpointed
+    superstep's tmp state dir), partition p also writes its new state rows
+    there as its durable part file.  Only the kernels, schemas and plain
+    values are closed over, never the program (it may hold DataFrames) or
+    the checkpoint manager (it holds the SparkSession)."""
     schema = _carried_schema(program)
     n_state = len(_ddl_fields(program.apply_schema))
     state_fields, msg_fields = list(schema)[:n_state], list(schema)[n_state:-1]
     stat = state_fields[-1]
     kept = [f.name for f in state_fields[:-1] if f.name not in ("vid", "part_id")]
     msg_names = list(program.msg_types)
+    state_cols = list(program.state_cols)
     scatter = program.scatter
     apply = None if params is None else functools.partial(program.apply, **params)
     hubs = np.asarray(hubs, dtype=np.int64)
@@ -558,6 +569,8 @@ def _superstep_udf(program, P: int, params: dict | None, hubs: tuple[int, ...]):
                 schema=schema,
             )
         ]
+        if state_dir is not None:
+            write_part(state_dir, p, tables[0].select(state_cols))
         if False in rows:
             sent = scatter(functools.partial(_block_np, rows[False]), out.__getitem__)
             if sent is not None:
@@ -591,12 +604,14 @@ class VertexProgram:
     def done(self, stats: dict) -> bool:
         return stats["changes"] == 0
 
-    def _cogroup(self, ctx: GraphContext, carried: DataFrame, params: dict | None) -> DataFrame:
+    def _cogroup(
+        self, ctx: GraphContext, carried: DataFrame, params: dict | None, state_dir: str | None = None
+    ) -> DataFrame:
         blocks, hubs = (ctx.ublocks, ctx.uhubs) if self.uses_undirected else (ctx.blocks, ctx.hubs)
         return (
             blocks.groupby("part_id")
             .cogroup(carried.groupby("part_id"))
-            .applyInArrow(_superstep_udf(self, ctx.P, params, hubs), _carried_ddl(self))
+            .applyInArrow(_superstep_udf(self, ctx.P, params, hubs, state_dir), _carried_ddl(self))
         )
 
     def _prologue(self, ctx: GraphContext, state: DataFrame) -> DataFrame:
@@ -604,10 +619,13 @@ class VertexProgram:
         column, plus the messages and hub mirrors it scatters."""
         return self._cogroup(ctx, state.repartition(ctx.P, "part_id"), None)
 
-    def _step(self, ctx: GraphContext, carried: DataFrame, carry: dict) -> DataFrame:
+    def _step(
+        self, ctx: GraphContext, carried: DataFrame, carry: dict, state_dir: str | None = None
+    ) -> DataFrame:
         """Carried table of the next superstep (lazy), from the materialized
-        carried table of this one and its observed stats."""
-        return self._cogroup(ctx, carried, self.step_params(ctx, _states(carried), carry))
+        carried table of this one and its observed stats; with ``state_dir``
+        its tasks write the new state's part files there."""
+        return self._cogroup(ctx, carried, self.step_params(ctx, _states(carried), carry), state_dir)
 
     def superstep(self, ctx: GraphContext, state: DataFrame, carry: dict | None = None) -> DataFrame:
         """One superstep on a plain state DataFrame: the ``apply_schema``
@@ -1240,7 +1258,7 @@ def _strip_origin_stats(df: DataFrame) -> None:
         fld.set(jplan, none)
 
 
-def _materialize(program, ctx: GraphContext, carried: DataFrame, tag) -> tuple[DataFrame, dict]:
+def _materialize(program, ctx: GraphContext, carried: DataFrame, tag, *lineage) -> tuple[DataFrame, dict]:
     """Run a carried table: observe the program's stats on it, route its
     message rows to their destination partition with ONE Exchange (state
     rows stay put; the repartition also re-pins HashPartitioning(part_id),
@@ -1251,10 +1269,12 @@ def _materialize(program, ctx: GraphContext, carried: DataFrame, tag) -> tuple[D
     ONE Spark job per superstep: the convergence aggregates ride the
     materialization job via CollectMetrics (observe) instead of a separate
     groupBy+collect job.  Message rows are all-null in the state columns,
-    so they contribute nothing to any ``stat_exprs`` sum or max."""
+    so they contribute nothing to any ``stat_exprs`` sum or max.  The
+    ``lineage`` aggregates of a checkpointed superstep ride the same
+    observation."""
     obs = Observation(f"{program.name}-{tag}-{_next_obs_id()}")
     ns = (
-        carried.observe(obs, *program.stat_exprs())
+        carried.observe(obs, *program.stat_exprs(), *lineage)
         .repartition(ctx.P, "part_id")
         .localCheckpoint(eager=True)
     )
@@ -1293,48 +1313,6 @@ def _job_description(sc):
         sc.setLocalProperty(_JOB_DESCRIPTION, prev)
 
 
-class _CkptWriter:
-    """One durable write in flight, overlapped with the next superstep's
-    compute — but never silent: a failed ckpt.write (disk full, parquet
-    error) is captured and re-raised at the next submit()/join(), so a
-    broken durability surface aborts the run instead of reporting
-    success with a hole in the resume chain.  Each write's jobs carry the
-    description given to submit(), set inside the writer thread."""
-
-    def __init__(self, sc) -> None:
-        self._sc = sc
-        self._thread: threading.Thread | None = None
-        self._err: BaseException | None = None
-
-    def submit(self, description: str, fn, *args, **kwargs) -> None:
-        self.join()  # re-raises any previous write failure
-
-        def run():
-            try:
-                with _job_description(self._sc) as describe:
-                    describe(description)
-                    fn(*args, **kwargs)
-            except BaseException as e:  # noqa: BLE001 — re-raised in join
-                self._err = e
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-
-    def wait(self) -> None:
-        """Join without raising (error-path cleanup: the in-flight write
-        finishes or fails before the superstep's own exception propagates;
-        any write error is kept and surfaced by a later join())."""
-        if self._thread is not None:
-            self._thread.join()
-            self._thread = None
-
-    def join(self) -> None:
-        self.wait()
-        if self._err is not None:
-            err, self._err = self._err, None
-            raise err
-
-
 def run_program(
     ctx: GraphContext,
     program,
@@ -1351,16 +1329,20 @@ def run_program(
     CTEs), which is what makes the iterative engine paths hash-checkable
     against the DuckDB oracle (VERDICT r01 item 1).
 
-    With ``ckpt_root``: every superstep is durably checkpointed with lineage
-    + metrics; a killed run re-invoked with the same root resumes from the
-    latest complete superstep (op 53).  Either way the eager localCheckpoint
-    of each carried table truncates the plan.
+    With ``ckpt_root`` (a local path; a URI raises ``ValueError``): every
+    superstep is durably checkpointed with lineage + metrics; a killed run
+    re-invoked with the same root resumes from the latest complete superstep
+    (op 53).  The superstep's own tasks write the state's part files and its
+    observation carries the lineage, so the checkpoint adds no Spark job; the
+    driver prepares the step's tmp dir before the job and seals it (manifest,
+    rename, metrics line) after, synchronously.  Either way the eager
+    localCheckpoint of each carried table truncates the plan.
 
     The run starts with the prologue (see the module docstring) on the init
     state, or on the checkpointed state when resuming; each superstep is
-    then one cogroup + one Exchange + localCheckpoint.  Spark jobs are
-    tagged ``pregel.<name>:t=<n>`` (prologue: the starting step) and
-    ``checkpoint.<name>:t=<n>``; the caller's job description is restored.
+    then one job: one cogroup + one Exchange + localCheckpoint.  Spark jobs
+    are tagged ``pregel.<name>:t=<n>`` (prologue: the starting step); the
+    caller's job description is restored.
 
     AQE is disabled for the duration of the loop: superstep plans are fully
     pinned (explicit P-way partitioning, fixed shapes), so adaptive re-
@@ -1400,50 +1382,25 @@ def run_program(
         history: list[dict[str, Any]] = []
         converged = False
         t = t0
-        writer = _CkptWriter(ctx.spark.sparkContext)
+        lineage = () if ckpt is None else lineage_exprs(ckpt.state_cols)
         last_iter = fixed_iters if fixed_iters is not None else max_iter
-        try:
-            for t in range(t0 + 1, last_iter + 1):
-                tic = time.monotonic()
-                describe(f"pregel.{program.name}:t={t}")
-                carried, stats = _materialize(
-                    program, ctx, program._step(ctx, carried, carry), f"t{t}"
-                )
-                stats.update({"wall_s": None, "edges_scattered": nnz})
-                if ckpt is not None:
-                    # The durable write is needed only for resume (op 53),
-                    # never by the next superstep (which reads the carried
-                    # table) — so it runs on a writer thread OVERLAPPED with
-                    # superstep t+1's compute, reading the state rows of the
-                    # localCheckpoint's in-memory RDD.  The lineage stats
-                    # (rows + checksum) ride the write job itself as an
-                    # Observation, so the durable surface costs ONE overlapped
-                    # Spark action per superstep, not two.  One writer at a
-                    # time keeps step dirs + metrics.jsonl ordered (submit()
-                    # joins the previous write and re-raises its failure); a
-                    # crash mid-write is already handled by the tmp-dir rename
-                    # + manifest revalidation in CheckpointManager (resume
-                    # falls back to the newest complete step).
-                    writer.submit(
-                        f"checkpoint.{program.name}:t={t}",
-                        ckpt.write,
-                        t,
-                        _states(carried),
-                        metrics={k: stats[k] for k in stats if k != "wall_s"},
-                    )
-                stats["wall_s"] = time.monotonic() - tic
-                stats["superstep"] = t
-                history.append(stats)
-                carry = stats
-                if fixed_iters is None and program.done(stats):
-                    converged = True
-                    break
-        except BaseException:
-            # A failing superstep must not leave the write thread dangling
-            # (interpreter exit could kill the daemon mid-write).  Join it —
-            # without masking the propagating superstep error — then unwind.
-            writer.wait()
-            raise
-        writer.join()  # surface any failure of the final durable write
+        for t in range(t0 + 1, last_iter + 1):
+            tic = time.monotonic()
+            describe(f"pregel.{program.name}:t={t}")
+            state_dir = None if ckpt is None else ckpt.begin(t)
+            carried, stats = _materialize(
+                program, ctx, program._step(ctx, carried, carry, state_dir), f"t{t}", *lineage
+            )
+            stats["edges_scattered"] = nnz
+            if ckpt is not None:
+                rows, checksum = (stats.pop(k) for k in LINEAGE)
+                ckpt.commit(t, rows, checksum, dict(stats))
+            stats["wall_s"] = time.monotonic() - tic
+            stats["superstep"] = t
+            history.append(stats)
+            carry = stats
+            if fixed_iters is None and program.done(stats):
+                converged = True
+                break
     state = _states(carried).select(*program.state_cols)
     return RunResult(state, t, converged, history, resumed_from=t0)

@@ -6,8 +6,10 @@ import shutil
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
-from linkgraph.derive import build_graph
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.derive import GraphTables, build_degrees, build_graph
 from linkgraph.pregel import (
     BFSProgram,
     ComponentsProgram,
@@ -55,6 +57,51 @@ def test_checkpoint_chain_and_manifests(tmp_path, spark):
             lines = [json.loads(l) for l in f]
         assert [l["superstep"] for l in lines] == list(range(1, res.supersteps + 1))
         assert lines[-1]["delta"] < 1e-6
+    finally:
+        ctx.unpersist()
+
+
+def test_lineage_values_pinned(tmp_path, spark):
+    """Every step's lineage entry is the row count and the order-insensitive
+    checksum of exactly the state it stored: rows == n_vertices and
+    checksum == sum(crc32(concat_ws(",", state_cols))) over read_state(t)."""
+    g = build_graph(synth_transcripts(spark, n_conversations=30, seed=42))
+    ctx = GraphContext.build(g, P)
+    try:
+        root = str(tmp_path / "ck")
+        for prog in (PageRankProgram(tol=1e-6), ComponentsProgram()):
+            res = run_program(ctx, prog, max_iter=60, ckpt_root=root)
+            cols = list(prog.state_cols)
+            cm = CheckpointManager(
+                spark, root, prog.name, ctx.fingerprint, P, ctx.n_vertices, cols
+            )
+            for t in range(1, res.supersteps + 1):
+                (lineage,) = cm.manifest(t)["per_partition"]
+                expected = (
+                    cm.read_state(t)
+                    .agg(F.sum(F.crc32(F.concat_ws(",", *cols))).alias("c"))
+                    .collect()[0]["c"]
+                )
+                assert lineage == {
+                    "part_id": -1, "rows": ctx.n_vertices, "checksum": expected,
+                }, (prog.name, t)
+    finally:
+        ctx.unpersist()
+
+
+def test_uri_checkpoint_root_rejected(tmp_path, monkeypatch, spark):
+    """The checkpoint writes local paths only: a URI root raises before any
+    job runs and leaves no stray directory under the cwd."""
+    g = build_graph(synth_transcripts(spark, n_conversations=30, seed=42))
+    ctx = GraphContext.build(g, P)
+    try:
+        monkeypatch.chdir(tmp_path)
+        with pytest.raises(ValueError, match="file:///"):
+            run_program(
+                ctx, ComponentsProgram(), fixed_iters=2,
+                ckpt_root=f"file://{tmp_path}/ck",
+            )
+        assert os.listdir(tmp_path) == []
     finally:
         ctx.unpersist()
 
@@ -116,6 +163,75 @@ def test_hub_split_kill_and_resume_equals_uninterrupted(tmp_path, spark, make_pr
         ctx.unpersist()
 
 
+def test_partial_tmp_step_replaced_on_resume(tmp_path, spark):
+    """A killed attempt's step_{k+1}._tmp holding only some partitions' part
+    files (and a half-written one) is never resumed from: the rerun resumes
+    from step k, replaces the tmp dir, and step k+1 then holds exactly
+    n_vertices rows; the result is bit-identical to the uninterrupted run."""
+    g = build_graph(synth_transcripts(spark, n_conversations=30, seed=42))
+    ctx = GraphContext.build(g, P)
+    n = ctx.n_vertices
+    try:
+        full = run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=5, ckpt_root=str(tmp_path / "a"))
+        root = str(tmp_path / "b")
+        run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=5, ckpt_root=root)
+        algo_dir = os.path.join(root, "pagerank")
+        k = 2
+        # the killed attempt at step k+1: half the part files, one torn
+        # dot-named write, no _SUCCESS and no manifest
+        tmp = os.path.join(algo_dir, f"step_{k + 1:06d}._tmp")
+        os.rename(os.path.join(algo_dir, f"step_{k + 1:06d}"), tmp)
+        os.remove(os.path.join(tmp, "manifest.json"))
+        os.remove(os.path.join(tmp, "state", "_SUCCESS"))
+        parts = sorted(f for f in os.listdir(os.path.join(tmp, "state")) if f.startswith("part-"))
+        assert len(parts) == P
+        for f in parts[: P // 2]:
+            os.remove(os.path.join(tmp, "state", f))
+        with open(os.path.join(tmp, "state", ".part-0.tmp"), "wb") as f:
+            f.write(b"PAR1")
+        for s in _steps(root, "pagerank")[k:]:
+            shutil.rmtree(os.path.join(algo_dir, s))
+
+        resumed = run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=5, ckpt_root=root)
+        assert resumed.resumed_from == k and resumed.supersteps == 5
+        assert not os.path.exists(tmp)
+        cm = CheckpointManager(
+            spark, root, "pagerank", ctx.fingerprint, P, n, list(PageRankProgram.state_cols)
+        )
+        assert cm.read_state(k + 1).count() == n
+        assert (_ranks(resumed.state, n) == _ranks(full.state, n)).all()
+    finally:
+        ctx.unpersist()
+
+
+def test_fewer_vertices_than_partitions_resume(tmp_path, spark):
+    """With fewer vertices than P some partitions hold no state rows and
+    write no part file; a checkpointed run still resumes bit-identically."""
+    vertices = spark.createDataFrame(
+        [(f"v{i}", i, "actor") for i in range(5)], "vkey string, vid long, vtype string"
+    )
+    edges = spark.createDataFrame(
+        [(0, 1, "t", 1.0), (1, 2, "t", 2.0), (2, 0, "t", 1.0), (3, 4, "t", 1.0)],
+        "src long, dst long, etype string, w double",
+    )
+    ctx = GraphContext.build(GraphTables(vertices, edges, build_degrees(edges, vertices)), P)
+    n = ctx.n_vertices
+    try:
+        assert n < P
+        full = run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=4, ckpt_root=str(tmp_path / "a"))
+        root = str(tmp_path / "b")
+        run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=4, ckpt_root=root)
+        state_dir = os.path.join(root, "pagerank", "step_000001", "state")
+        assert len([f for f in os.listdir(state_dir) if f.startswith("part-")]) == n
+        for s in _steps(root, "pagerank")[2:]:
+            shutil.rmtree(os.path.join(root, "pagerank", s))
+        resumed = run_program(ctx, PageRankProgram(tol=0.0), fixed_iters=4, ckpt_root=root)
+        assert resumed.resumed_from == 2 and resumed.supersteps == 4
+        assert (_ranks(resumed.state, n) == _ranks(full.state, n)).all()
+    finally:
+        ctx.unpersist()
+
+
 def test_torn_write_not_resumed(tmp_path, spark):
     """A step dir without _SUCCESS / with bad counts is skipped (trap 7)."""
     g = build_graph(synth_transcripts(spark, n_conversations=30, seed=42))
@@ -130,8 +246,6 @@ def test_torn_write_not_resumed(tmp_path, spark):
         src = os.path.join(root, "components", steps[-1])
         shutil.copytree(src, torn)
         os.remove(os.path.join(torn, "state", "_SUCCESS"))
-        from linkgraph.checkpoint import CheckpointManager
-
         cm = CheckpointManager(
             spark, root, "components", ctx.fingerprint, P, ctx.n_vertices,
             ["vid", "part_id", "comp"],
@@ -147,8 +261,6 @@ def test_checkpoint_gc_keeps_resume_point(tmp_path, spark):
     complete steps are deleted, a torn NEWER step is never the survivor,
     resume from the survivor equals the uninterrupted run, and the
     metrics audit trail is untouched."""
-    from linkgraph.checkpoint import CheckpointManager
-
     g = build_graph(synth_transcripts(spark, n_conversations=30, seed=42))
     ctx = GraphContext.build(g, P)
     try:
@@ -198,11 +310,6 @@ def test_dangling_mass_carry_equals_recompute(spark):
     checkpointed state (first-superstep-after-resume path) — both are
     exact decimal(38,25) sums, so task-completion order cannot perturb
     them (the root cause of the load-dependent resume flake)."""
-    from pyspark.sql import functions as F
-
-    from linkgraph.derive import GraphTables, build_degrees
-    from linkgraph.pregel import GraphContext, PageRankProgram, run_program
-
     vertices = spark.createDataFrame(
         [(f"v{i}", i, "actor") for i in range(6)],
         "vkey string, vid long, vtype string",
