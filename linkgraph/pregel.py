@@ -97,9 +97,8 @@ from pyspark.sql import functions as F
 from .checkpoint import (
     LINEAGE, CheckpointManager, fingerprint_exprs, format_fingerprint, lineage_exprs, write_part,
 )
-from .csr import build_csr_blocks, build_hub_blocks, symmetrize
+from .csr import build_csr_blocks, symmetrize
 from .derive import GraphTables
-from .skew import split_hub_edges
 
 
 @contextlib.contextmanager
@@ -146,10 +145,10 @@ class GraphContext:
     nnz_directed: int               # residue-class blocks only
     nnz_undirected: int             # TOTAL undirected nnz (blocks + hub)
     fingerprint: str
-    # op 47 hub split, per side: the sorted vids whose adjacency row moved
-    # out of the residue-class blocks into the destination-keyed hub block
-    # rows (csr.build_hub_blocks), and the number of edges moved.  The
-    # superstep mirrors these vertices' state to every partition.
+    # op 47 hub split, per side: the sorted vids whose adjacency row is
+    # packed into the destination-keyed hub block rows instead of the
+    # residue-class blocks (csr.build_csr_blocks), and the number of those
+    # edges.  The superstep mirrors these vertices' state to every partition.
     hubs: tuple[int, ...] = ()
     nnz_hub: int = 0
     uhubs: tuple[int, ...] = ()
@@ -190,14 +189,16 @@ class GraphContext:
             esum        pre-summed (src, dst) edges; observes the row count
                         (nnz_total) and the fingerprint aggregates
             dirdeg      per-src degrees off esum; observes the hub vids (rows
-                        longer than the threshold) and their degree sum
-                        (hubs, nnz_hub)
+                        longer than the threshold), their row weights and
+                        their degree sum (hubs, nnz_hub)
             sym, udeg   symmetrized view and its degrees (hub_theta only);
-                        observe its row count, then the undirected hub vids
-                        and their degree sum (uhubs, nnz_uhub)
-            blocks      per side, residue-class blocks plus the hub block
-                        rows; observe the residue-class sum(nnz)
-                        (nnz_directed and the undirected block nnz)
+                        observe its row count, then the undirected hub vids,
+                        their row weights and their degree sum (uhubs,
+                        nnz_uhub)
+            blocks      per side, residue-class and hub block rows from one
+                        ``csr.build_csr_blocks`` job; observe the
+                        residue-class sum(nnz) (nnz_directed and the
+                        undirected block nnz)
 
         The phases run on concurrent driver threads (Spark schedules jobs
         from separate threads in parallel, which overlaps their fixed
@@ -257,21 +258,25 @@ class GraphContext:
 
         def _hub_degrees(edges: DataFrame, nnz_side: int) -> tuple:
             """Checkpointed per-src degrees of one side, observing on the
-            same job the vids of the rows longer than theta_eff and their
-            degree sum (exact: edges has one row per (src, dst)): (degree
-            table, theta, sorted hub vids, nnz_hub)."""
+            same job the (vid, out_w) of the rows longer than theta_eff and
+            their degree sum (exact: edges has one row per (src, dst)):
+            (degree table, sorted hub vids, their out_w, nnz_hub)."""
             theta = _theta_eff(nnz_side)
             hub = F.lit(False) if theta is None else F.col("out_deg") > theta
             deg, st = _observed(
                 _degrees(edges),
-                F.collect_list(F.when(hub, F.col("vid"))).alias("hubs"),
+                F.sort_array(F.collect_list(F.when(hub, F.struct("vid", "out_w")))).alias("hubs"),
                 F.sum(F.when(hub, F.col("out_deg"))).alias("nnz_hub"),
             )
-            return deg, theta, tuple(sorted(st["hubs"] or ())), st["nnz_hub"] or 0
+            hubs = st["hubs"] or ()
+            return (
+                deg, tuple(h["vid"] for h in hubs), tuple(h["out_w"] for h in hubs),
+                st["nnz_hub"] or 0,
+            )
 
         def _esum() -> None:
             # ONE pre-summed simple edge scan shared by the directed build,
-            # the hub splits, the symmetrized build and the fingerprint.
+            # the hub degrees, the symmetrized build and the fingerprint.
             esum, st = _observed(
                 graph.edges.groupBy("src", "dst").agg(F.sum("w").alias("w")),
                 *fingerprint_exprs(),
@@ -317,19 +322,13 @@ class GraphContext:
         n = pre["n"]
 
         def _side(edges: DataFrame, deg: tuple | None) -> tuple:
-            """CSR blocks of one side, its hub rows moved to destination-
-            keyed hub blocks: (blocks, residue-class nnz, hubs, nnz_hub).
-            deg is ``_hub_degrees``' result (None: no split)."""
-            table, theta, hubs, nnz_hub = deg or (None, None, (), 0)
-            if hubs:
-                edges, hub_e = split_hub_edges(edges, table, theta, presummed=True)
-            blocks = build_csr_blocks(edges, n, P, presummed=True)
-            if hubs:
-                # both children are hashpartitioning(part_id, P): the union
-                # keeps it, so the superstep cogroup reads them unshuffled
-                blocks = blocks.unionByName(build_hub_blocks(hub_e, hubs, P))
+            """CSR blocks of one side, its hub rows in destination-keyed hub
+            blocks: (blocks, residue-class nnz, hubs, nnz_hub).  deg is
+            ``_hub_degrees``' result (None: no split)."""
+            _, hubs, hub_out_w, nnz_hub = deg or (None, (), (), 0)
             blocks, st = _observed(
-                blocks, F.sum(F.when(~F.col("hub"), F.col("nnz"))).alias("nnz")
+                build_csr_blocks(edges, n, P, True, hubs, hub_out_w),
+                F.sum(F.when(~F.col("hub"), F.col("nnz"))).alias("nnz"),
             )
             return blocks, st["nnz"] or 0, hubs, nnz_hub
 
@@ -526,9 +525,8 @@ def _superstep_udf(
     hubs = np.asarray(hubs, dtype=np.int64)
 
     def step(key, blk: pa.Table, carried: pa.Table) -> pa.Table:
-        # NOTE: the (key, table...) type hints are load-bearing — PySpark
-        # 4.1.2's applyInArrow raises UnboundLocalError if hint inference
-        # fails (group_ops.py:936).
+        # the cogrouped applyInArrow takes its eval type as given and never
+        # reads these hints; they document the arguments only
         p = key[0].as_py()
         # block rows: the residue-class block and the hub block (each optional)
         rows = {hub: blk.slice(i, 1) for i, hub in enumerate(blk["hub"].to_pylist())}
@@ -710,11 +708,16 @@ class PageRankProgram(VertexProgram):
         return {"dangling": st("dangling"), "rank": rank_new, "_delta": np.abs(rank_new - rank_old)}
 
     def stat_exprs(self):
+        unit = float(2**60)
         return [
             F.max("_delta").alias("delta"),
-            F.sum("rank").alias("rank_sum"),
-            # decimal: exact, order-independent — see _dangling_mass(); this
-            # value is consumed as next step's dmass.
+            # Integer sums, exact and order-independent, so identical runs
+            # write identical stats (a double sum merges its partials in
+            # task completion order).  rank_sum, only reported, counts ranks
+            # rounded to units of 2^-60 in a long (they sum to 1): a decimal
+            # sum of every rank slowed each superstep by about a quarter.
+            # dangling_mass feeds the next step (see _dangling_mass()).
+            (F.sum(F.rint(F.col("rank") * unit).cast("long")) / unit).alias("rank_sum"),
             F.sum(
                 F.when(F.col("dangling"), F.col("rank"))
                 .otherwise(F.lit(0.0))

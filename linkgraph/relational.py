@@ -3583,7 +3583,8 @@ def q_skew_profile(spark, sf_dir):
     per-partition row/key counts, the partition's share of the stream in
     micro (1e6 = perfectly balanced × P), and its heaviest key — the
     diagnostic run BEFORE a big join to decide whether to salt, and the
-    relational twin of the engine's hub detector (skew.py).  Routing is
+    relational twin of the engine's hub detector (``_hub_degrees`` in
+    ``GraphContext.build``, pregel.py).  Routing is
     md5-based (pmod of the cross-engine hash), NOT Spark's internal
     hashShuffle, so both engines see the identical placement.
 

@@ -8,14 +8,16 @@ Two complementary mechanisms:
    equal to the unsalted aggregate; no engine path calls it (the CSR
    scatter pre-aggregates per block, see below).
 
-2. ``split_hub_edges`` — scatter-side hub splitting for the CSR path.  Mod
-   partitioning puts ALL out-edges of a vertex in one block, so a hub source
-   (out_deg > theta) would serialize one partition.  Hub adjacency is
-   therefore pulled OUT of the residue-class CSR blocks and packed by
-   DESTINATION partition (``csr.build_hub_blocks``).  Hub state is tiny by
-   definition (few vertices), so each superstep the hub's owner sends it to
-   every partition as a mirror, and each partition scatters its slice of
-   the hub's edges with the program's own kernel (pregel.py): the hub's
+2. Scatter-side hub splitting for the CSR path.  Mod partitioning puts ALL
+   out-edges of a vertex in one block, so a hub source (a row longer than
+   the build's threshold) would serialize one partition.
+   ``GraphContext.build`` (pregel.py) reads the hub vids and their row
+   weights off the degree job it already runs (``_hub_degrees``), and
+   ``csr.build_csr_blocks`` packs the hub adjacency by DESTINATION
+   partition in the same pass as the residue-class blocks.  Hub state is
+   tiny by definition (few vertices), so each superstep the hub's owner
+   sends it to every partition as a mirror, and each partition scatters its
+   slice of the hub's edges with the program's own kernel: the hub's
    per-edge work is spread over all P scatter tasks, eliminating the
    straggler.
 
@@ -52,30 +54,3 @@ def salted_sum(
     )
     return pre.groupBy(key).agg(F.sum(value).alias(value))
 
-
-def detect_hubs(degrees: DataFrame, theta: int, side: str = "out") -> DataFrame:
-    """Vertices whose out/in degree exceeds theta (op 47): vid, deg."""
-    col = "out_deg" if side == "out" else "in_deg"
-    return degrees.where(F.col(col) > theta).select("vid", F.col(col).alias("deg"))
-
-
-def split_hub_edges(
-    edges: DataFrame, degrees: DataFrame, theta: int, presummed: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """Partition the edge table into (non_hub, hub) by source out-degree.
-
-    hub edges carry BOTH the PageRank scatter coefficient w/out_w(src) over
-    the hub's WHOLE row (the hub blocks split that row by destination, so
-    they cannot derive it) and the raw weight w (Katz and the min-plus
-    programs — SSSP — scatter on it).
-    ``presummed=True`` skips the multi-edge pre-sum when the input is
-    already one row per (src, dst)."""
-    hubs = detect_hubs(degrees, theta, side="out")
-    e = edges if presummed else edges.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-    hub_e = (
-        e.join(F.broadcast(hubs), e.src == hubs.vid, "inner")
-        .join(degrees.select(F.col("vid").alias("src2"), "out_w"), e.src == F.col("src2"))
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("coeff"), "w")
-    )
-    non_hub = e.join(F.broadcast(hubs), e.src == hubs.vid, "left_anti")
-    return non_hub, hub_e

@@ -375,8 +375,9 @@ def test_run_program_job_descriptions(spark, synth_ctx, tmp_path):
 
 def test_context_build_job_descriptions(spark):
     """Every job of GraphContext.build (hub split forced, so every build
-    thread runs jobs) names its build phase, and the caller's job
-    description is restored afterwards."""
+    thread runs jobs) names its build phase, the caller's job description
+    is restored afterwards, and each side's blocks, hub rows included, are
+    packed and checkpointed by exactly one job."""
     g = build_graph(synth_transcripts(spark, n_conversations=30, seed=7))
     sc = spark.sparkContext
     before = set(_job_descriptions(sc))
@@ -388,13 +389,15 @@ def test_context_build_job_descriptions(spark):
         sc.setLocalProperty("spark.job.description", None)
     ctx.unpersist()
     assert ctx.nnz_hub > 0 and ctx.nnz_uhub > 0
-    new = {d for j, d in _job_descriptions(sc).items() if j not in before}
-    assert new == {
+    new = [d for j, d in _job_descriptions(sc).items() if j not in before]
+    assert set(new) == {
         f"context.build:{phase}"
         for phase in (
             "count_vertices", "esum", "dirdeg", "sym", "directed", "undirected", "base",
         )
     }
+    assert new.count("context.build:directed") == 1
+    assert new.count("context.build:undirected") == 1
 
 
 def _expected_contract(spark, edges):

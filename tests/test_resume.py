@@ -61,6 +61,35 @@ def test_checkpoint_chain_and_manifests(tmp_path, spark):
         ctx.unpersist()
 
 
+def test_identical_runs_write_identical_rank_sums(tmp_path, spark):
+    """PageRank's summed stats are exact, order-independent sums, so two
+    identical checkpointed runs write equal rank_sum and dangling_mass at
+    every step, in the manifests and in metrics.jsonl (a double sum,
+    merged in task completion order, differed in the last ulp between such
+    runs)."""
+    g = build_graph(synth_transcripts(spark, n_conversations=60, seed=42))
+    ctx = GraphContext.build(g, P)
+    try:
+        written = []
+        for name in ("a", "b"):
+            root = str(tmp_path / name)
+            run_program(ctx, PageRankProgram(tol=1e-6), max_iter=60, ckpt_root=root)
+            with open(os.path.join(root, "pagerank", "metrics.jsonl")) as f:
+                lines = [json.loads(l) for l in f]
+            manifests = []
+            for s in _steps(root, "pagerank"):
+                with open(os.path.join(root, "pagerank", s, "manifest.json")) as f:
+                    manifests.append(json.load(f)["metrics"])
+            written.append([
+                [(m["rank_sum"], m["dangling_mass"]) for m in ms] for ms in (lines, manifests)
+            ])
+        assert len(written[0][0]) > 1
+        assert written[0][0] == written[0][1]
+        assert written[0] == written[1]
+    finally:
+        ctx.unpersist()
+
+
 def test_lineage_values_pinned(tmp_path, spark):
     """Every step's lineage entry is the row count and the order-insensitive
     checksum of exactly the state it stored: rows == n_vertices and

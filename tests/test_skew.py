@@ -13,7 +13,7 @@ from linkgraph.pregel import (
     run_program,
 )
 from linkgraph.ref_single_node import components_ref, lpa_ref, pagerank_ref
-from linkgraph.skew import detect_hubs, salted_sum, split_hub_edges
+from linkgraph.skew import salted_sum
 from linkgraph.synth import micro_transcripts, synth_transcripts
 
 from .conftest import edges_numpy, ranks_numpy
@@ -36,22 +36,6 @@ def test_salted_sum_star_hub(spark):
     plain = {r["dst"]: r["m"] for r in msgs.groupBy("dst").agg(F.sum("m").alias("m")).collect()}
     salted = {r["dst"]: r["m"] for r in salted_sum(msgs, "dst", "m", n_salts=16).collect()}
     assert plain == salted
-
-
-def test_hub_detection_and_split(spark):
-    g = build_graph(synth_transcripts(spark, n_conversations=60, seed=42))
-    hubs = {r["vid"] for r in detect_hubs(g.degrees, theta=5, side="out").collect()}
-    assert hubs  # synthetic zipf cast guarantees hub actors
-    non_hub, hub_e = split_hub_edges(g.edges, g.degrees, theta=5)
-    hub_srcs = {r["src"] for r in hub_e.select("src").distinct().collect()}
-    assert hub_srcs == hubs
-    # partition: non_hub + hub cover the (pre-summed) edge set exactly
-    total = g.edges.groupBy("src", "dst").count().count()
-    assert non_hub.count() + hub_e.count() == total
-    # hub scatter coefficients sum to 1 per hub src
-    sums = hub_e.groupBy("src").agg(F.sum("coeff").alias("s")).collect()
-    for r in sums:
-        assert abs(r["s"] - 1.0) < 1e-9
 
 
 def test_hub_split_pagerank_matches_reference(spark):
