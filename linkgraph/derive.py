@@ -4,8 +4,9 @@ Pipeline:
   transcripts --stable ordering--> ordered turns
              --lead() window-->    consecutive-turn edges (actor -> actor)
              --filter-->           tool-invocation edges  (actor -> tool)
+             --groupBy-->          edge-key counts (src_key, dst_key, etype, w)
              --distinct+dense_ids-> vertex map (dense vids in (vtype, vkey) order)
-             --join+groupBy-->     edge table (src,dst,etype, w=multiplicity)
+             --join (vkey, vtype)-> edge table (src, dst, etype, w), one row per count
              --groupBy-->          degree table
 
 Invariants (BASELINE.json north_rule / input_hint):
@@ -24,15 +25,24 @@ Invariants (BASELINE.json north_rule / input_hint):
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import job_description
+
 TURN = "turn"
 TOOL = "tool"
 ACTOR_T = "actor"
 TOOL_T = "tool"
+
+
+def _dst_vtype() -> Column:
+    """A dst is a tool on tool-edges, else an actor (srcs are actors)."""
+    return F.when(F.col("etype") == TOOL, F.lit(TOOL_T)).otherwise(F.lit(ACTOR_T))
+
 
 # Window for stable turn ordering. (conv_id, turn_idx) is unique in valid
 # input; ts breaks ties if upstream data violates that, and turn_idx is the
@@ -100,6 +110,15 @@ def edge_keys(transcripts: DataFrame) -> DataFrame:
     return turn_edge_keys(ordered).unionByName(tool_edge_keys(ordered))
 
 
+def edge_key_counts(ekeys: DataFrame) -> DataFrame:
+    """One row per (src_key, dst_key, etype) link, w = its multiplicity
+    (double, for weighted PageRank).  The streaming ingest keeps the same
+    table as its running edge counts."""
+    return ekeys.groupBy("src_key", "dst_key", "etype").agg(
+        F.count(F.lit(1)).cast("double").alias("w")
+    )
+
+
 def dense_ids(keys: DataFrame, *order_cols: str) -> DataFrame:
     """``keys`` plus ``vid`` = ``row_number() OVER (ORDER BY order_cols) - 1``.
 
@@ -107,29 +126,28 @@ def dense_ids(keys: DataFrame, *order_cols: str) -> DataFrame:
     range-partition by ``order_cols`` (partition p holds a contiguous key
     range), tag each row with its partition and materialize, collect the
     per-partition row counts (at most ``spark.sql.shuffle.partitions``
-    rows) and add each partition's prefix offset to a partition-local
-    ``row_number``.  ``order_cols`` must be unique over ``keys`` (they are
-    the keys themselves at every call site), or ties make the window
-    nondeterministic too.  Runs eagerly: the range partitioner's sampling
-    job, the checkpoint job and the count collect.
+    rows) and add partition p's prefix offset (a literal array indexed by
+    p) to a partition-local ``row_number``.  ``order_cols`` must be unique
+    over ``keys`` (they are the keys themselves at every call site), or
+    ties make the window nondeterministic too.  Runs eagerly, as jobs
+    tagged ``derive:dense_ids``: the range partitioner's sampling job, the
+    checkpoint job and the count collect.
     """
     spark = keys.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    tagged = (
-        keys.repartitionByRange(n_parts, *order_cols)
-        .withColumn("_p", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = sorted(tuple(r) for r in tagged.groupBy("_p").count().collect())
-    offsets, acc = [], 0
-    for p, c in counts:
-        offsets.append((p, acc))
-        acc += c
-    off = spark.createDataFrame(offsets, "_p int, _off long")
+    with job_description(spark.sparkContext) as describe:
+        describe("derive:dense_ids")
+        tagged = (
+            keys.repartitionByRange(n_parts, *order_cols)
+            .withColumn("_p", F.spark_partition_id())
+            .localCheckpoint()
+        )
+        counts = dict(tagged.groupBy("_p").count().collect())
+    offsets = itertools.accumulate((counts.get(p, 0) for p in range(n_parts - 1)), initial=0)
+    off = F.element_at(F.array(*map(F.lit, offsets)).cast("array<bigint>"), F.col("_p") + 1)
     w = Window.partitionBy("_p").orderBy(*order_cols)
-    return tagged.join(F.broadcast(off), "_p").select(
-        *keys.columns,
-        (F.col("_off") + F.row_number().over(w) - 1).cast("long").alias("vid"),
+    return tagged.select(
+        *keys.columns, (off + F.row_number().over(w) - 1).cast("long").alias("vid")
     )
 
 
@@ -165,48 +183,33 @@ def key_graph(
     return GraphTables(vertices=vertices, edges=edges, degrees=build_degrees(edges, vertices))
 
 
-def build_vertices(ekeys: DataFrame) -> DataFrame:
+def build_vertices(counts: DataFrame) -> DataFrame:
     """Vertex map with dense deterministic vids (op 43).
 
-    Identity = (vkey, vtype): srcs are always actors; dsts are actors for
-    turn-edges and tools for tool-edges.  vids follow (vtype, vkey) order
-    and are assigned by ``dense_ids``, which never funnels the vertex set
-    through one task.
+    Identity = (vkey, vtype) of the ends of ``edge_key_counts``' links
+    (``_dst_vtype``).  vids follow (vtype, vkey) order and are assigned by
+    ``dense_ids``, which never funnels the vertex set through one task.
     """
-    srcs = ekeys.select(F.col("src_key").alias("vkey"), F.lit(ACTOR_T).alias("vtype"))
-    dsts = ekeys.select(
-        F.col("dst_key").alias("vkey"),
-        F.when(F.col("etype") == TOOL, F.lit(TOOL_T)).otherwise(F.lit(ACTOR_T)).alias("vtype"),
-    )
+    srcs = counts.select(F.col("src_key").alias("vkey"), F.lit(ACTOR_T).alias("vtype"))
+    dsts = counts.select(F.col("dst_key").alias("vkey"), _dst_vtype().alias("vtype"))
     keys = srcs.unionByName(dsts).distinct()
     return dense_ids(keys, "vtype", "vkey").select("vkey", "vid", "vtype")
 
 
-def build_edges(ekeys: DataFrame, vertices: DataFrame) -> DataFrame:
-    """Map keys -> vids and dedup to weighted edges (op 44).
+def build_edges(counts: DataFrame, vertices: DataFrame) -> DataFrame:
+    """Map ``edge_key_counts``' links to vids, one edge row per link (op 44).
 
-    w = multiplicity of the (src,dst,etype) link (double, for weighted
-    PageRank).  The vertex map is broadcast — it is small relative to the
-    edge table at every scale tier (hub-list pattern, SURVEY.md op 11).
+    Each side joins the broadcast vertex map once on (vkey, vtype), so an
+    actor and a tool with the same key stay separate vertices.  The vertex
+    map is small relative to the edge table at every scale tier (hub-list
+    pattern, SURVEY.md op 11).
     """
-    v = F.broadcast(vertices)
-    vsrc = v.where(F.col("vtype") == ACTOR_T).select(
-        F.col("vkey").alias("src_key"), F.col("vid").alias("src")
-    )
-    vdst_actor = v.where(F.col("vtype") == ACTOR_T).select(
-        F.col("vkey").alias("dst_key"), F.col("vid").alias("dst")
-    )
-    vdst_tool = v.where(F.col("vtype") == TOOL_T).select(
-        F.col("vkey").alias("dst_key"), F.col("vid").alias("dst")
-    )
-
-    turn = ekeys.where(F.col("etype") == TURN).join(vsrc, "src_key").join(vdst_actor, "dst_key")
-    tool = ekeys.where(F.col("etype") == TOOL).join(vsrc, "src_key").join(vdst_tool, "dst_key")
-
+    v = vertices.select("vkey", "vtype", "vid")
     return (
-        turn.unionByName(tool)
-        .groupBy("src", "dst", "etype")
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
+        counts.withColumns({"src_vtype": F.lit(ACTOR_T), "dst_vtype": _dst_vtype()})
+        .join(F.broadcast(v.toDF("src_key", "src_vtype", "src")), ["src_key", "src_vtype"])
+        .join(F.broadcast(v.toDF("dst_key", "dst_vtype", "dst")), ["dst_key", "dst_vtype"])
+        .select("src", "dst", "etype", "w")
     )
 
 
@@ -236,19 +239,24 @@ def build_degrees(edges: DataFrame, vertices: DataFrame) -> DataFrame:
 def build_graph(transcripts: DataFrame, cache: bool = False) -> GraphTables:
     """Full derivation: transcripts -> (vertices, edges, degrees).
 
-    vids are dense in (vtype, vkey) order (``build_vertices``); the vertex
-    map is materialized while it is built (``dense_ids``), the edge and
-    degree tables stay lazy.
+    The vertex map and the edge table are both built from
+    ``edge_key_counts``' links, not from the raw edge-key stream.  vids are
+    dense in (vtype, vkey) order (``build_vertices``); the vertex map is
+    materialized while it is built (``dense_ids``), the edge and degree
+    tables stay lazy.  Every job this runs is tagged ``derive:<phase>``;
+    the caller's job description is restored.
 
-    ``cache=True`` eagerly materializes the edge-key stream once
+    ``cache=True`` eagerly materializes the link counts once
     (localCheckpoint) so the vertex/edge/degree builds don't each re-run the
-    transcript window pass — use for bench/production builds; tests keep
-    the default."""
-    ekeys = edge_keys(transcripts)
-    if cache:
-        ekeys = ekeys.localCheckpoint()
-    vertices = build_vertices(ekeys)
-    edges = build_edges(ekeys, vertices)
+    transcript window pass and its aggregation — use for bench/production
+    builds; tests keep the default."""
+    with job_description(transcripts.sparkSession.sparkContext) as describe:
+        describe("derive:edge_key_counts")
+        counts = edge_key_counts(edge_keys(transcripts))
+        if cache:
+            counts = counts.localCheckpoint()
+        vertices = build_vertices(counts)
+    edges = build_edges(counts, vertices)
     degrees = build_degrees(edges, vertices)
     return GraphTables(vertices=vertices, edges=edges, degrees=degrees)
 

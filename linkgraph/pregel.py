@@ -99,6 +99,7 @@ from .checkpoint import (
 )
 from .csr import build_csr_blocks, symmetrize
 from .derive import GraphTables
+from .session import job_description
 
 
 @contextlib.contextmanager
@@ -191,10 +192,11 @@ class GraphContext:
             dirdeg      per-src degrees off esum; observes the hub vids (rows
                         longer than the threshold), their row weights and
                         their degree sum (hubs, nnz_hub)
-            sym, udeg   symmetrized view and its degrees (hub_theta only);
-                        observe its row count, then the undirected hub vids,
-                        their row weights and their degree sum (uhubs,
-                        nnz_uhub)
+            sym, udeg   symmetrized view and its degrees (only when an
+                        undirected row can exceed the hub threshold, i.e.
+                        nnz_total > theta_eff's lower bound); observe its
+                        row count, then the undirected hub vids, their row
+                        weights and their degree sum (uhubs, nnz_uhub)
             blocks      per side, residue-class and hub block rows from one
                         ``csr.build_csr_blocks`` job; observe the
                         residue-class sum(nnz) (nnz_directed and the
@@ -291,7 +293,11 @@ class GraphContext:
             pre["dirdeg"] = _hub_degrees(pre["esum"], pre["nnz_total"])
 
         def _sym() -> None:
-            if hub_theta is None:  # nothing to size: ublocks read the view lazily
+            # Nothing to size when no undirected row can exceed the
+            # threshold: a row is at most nnz_total long and theta_eff is at
+            # least _theta_eff(0).  ublocks then read the view lazily.
+            theta_min = _theta_eff(0)
+            if theta_min is None or pre["nnz_total"] <= theta_min:
                 pre["sym"], pre["udeg"] = symmetrize(pre["esum"]), None
                 return
             sym, st = _observed(symmetrize(pre["esum"]), F.count(F.lit(1)).alias("nnz"))
@@ -304,7 +310,7 @@ class GraphContext:
 
             def run(fn):
                 try:
-                    with _job_description(spark.sparkContext) as describe:
+                    with job_description(spark.sparkContext) as describe:
                         describe(f"context.build:{fn.__name__.lstrip('_')}")
                         fn()
                 except BaseException as exc:  # surface thread failures
@@ -1301,21 +1307,6 @@ def _materialize(program, ctx: GraphContext, carried: DataFrame, tag, *lineage) 
     return ns, stats
 
 
-_JOB_DESCRIPTION = "spark.job.description"
-
-
-@contextlib.contextmanager
-def _job_description(sc):
-    """Yield a setter for the calling thread's Spark job description and
-    restore the previous description on exit (it is a thread-local
-    property, so each thread tags its own jobs)."""
-    prev = sc.getLocalProperty(_JOB_DESCRIPTION)
-    try:
-        yield sc.setJobDescription
-    finally:
-        sc.setLocalProperty(_JOB_DESCRIPTION, prev)
-
-
 def run_program(
     ctx: GraphContext,
     program,
@@ -1353,7 +1344,7 @@ def run_program(
     and its partition coalescing can silently undo the co-partitioning
     (SURVEY.md §7 trap 4).  Restored afterwards for the relational glue.
     """
-    with aqe_off(ctx.spark), _job_description(ctx.spark.sparkContext) as describe:
+    with aqe_off(ctx.spark), job_description(ctx.spark.sparkContext) as describe:
         ckpt = None
         if ckpt_root is not None:
             ckpt = CheckpointManager(

@@ -10,9 +10,13 @@ Pins (SURVEY.md §4, §7 trap 4):
 
 from __future__ import annotations
 
+import contextlib
+
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_PARTITIONS = 32
+_JOB_DESCRIPTION = "spark.job.description"
 
 
 def get_spark(
@@ -73,3 +77,15 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def job_description(sc: SparkContext):
+    """Yield a setter for the calling thread's Spark job description and
+    restore the previous description on exit (it is a thread-local
+    property, so each thread tags its own jobs)."""
+    prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+    try:
+        yield sc.setJobDescription
+    finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, prev)

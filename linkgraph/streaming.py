@@ -7,7 +7,7 @@ directory:
     transcripts parquet files --readStream-->
       per-conversation stateful pairing (applyInPandasWithState) -->
         edge-key deltas -->
-      running weighted edge counts (streaming groupBy, update mode) -->
+      running weighted edge counts (derive.edge_key_counts, streamed) -->
         sink (memory for tests; parquet/kafka in production)
 
 The hard part is the consecutive-turn edge: ``lead()`` windows are not
@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .derive import TOOL, TURN
+from .derive import TOOL, TURN, edge_key_counts
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -126,15 +126,6 @@ def streaming_edge_keys(transcripts: DataFrame) -> DataFrame:
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_edge_counts(edge_keys: DataFrame) -> DataFrame:
-    """Running weighted edge table: the streaming twin of
-    ``derive.build_edges``'s groupBy — state-store-backed partial counts,
-    emitted in update mode."""
-    return edge_keys.groupBy("src_key", "dst_key", "etype").agg(
-        F.count(F.lit(1)).cast("double").alias("w")
     )
 
 
@@ -275,10 +266,10 @@ def ingest_to_parquet(
     (exactly-once file sink, the durable twin of the memory-sink tests).
 
     The parquet file sink is append-only, so the running edge WEIGHTS are
-    not maintained here: they are one combinable batch groupBy over the
-    delta log (cheap, and exactly ``derive.build_edges``'s shape), which
-    keeps the streaming side stateless beyond the pairing state and the
-    sink idempotent."""
+    not maintained here: they are ``derive.edge_key_counts`` over the
+    delta log (one combinable batch groupBy, the input of
+    ``derive.build_vertices``/``build_edges``), which keeps the streaming
+    side stateless beyond the pairing state and the sink idempotent."""
     keys = streaming_edge_keys(
         stream_transcripts(spark, in_dir, max_files_per_trigger)
     )
@@ -307,7 +298,7 @@ def ingest_available_now(
     the running edge table (test-friendly); production swaps the sink for
     an update-mode merge into parquet/kafka.  The state-store checkpoint
     (``checkpoint_dir``) makes the stream resumable either way."""
-    counts = streaming_edge_counts(
+    counts = edge_key_counts(
         streaming_edge_keys(
             stream_transcripts(spark, in_dir, max_files_per_trigger)
         )

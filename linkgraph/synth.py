@@ -195,6 +195,9 @@ def micro_transcripts(spark: SparkSession, name: str) -> DataFrame:
         "dup_self": [
             ("c0", i, r, "tool00") for i, r in enumerate(["A", "A", "B", "A", "B"])
         ],
+        # actor "search" calls tool "search": same key, two vertices
+        "shared_name": [("c0", 0, "Search", "search"), ("c0", 1, "search", " SEARCH"),
+                        ("c0", 2, "b", "search")],
     }[name]
     from datetime import datetime, timedelta
 

@@ -35,3 +35,17 @@ def ranks_numpy(ranks_df, n):
     out = np.zeros(n)
     out[rp["vid"].to_numpy(np.int64)] = rp["rank"].to_numpy(np.float64)
     return out
+
+
+def job_descriptions(sc) -> dict[int, str]:
+    """jobId -> description of every job in the status store, after the
+    listener bus has caught up."""
+    import json
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    jvm = sc._jvm  # noqa: SLF001
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala_mod = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala_mod, "MODULE$"))
+    jobs = sc._jsc.sc().statusStore().jobsList(jvm.java.util.ArrayList())  # noqa: SLF001
+    return {j["jobId"]: j.get("description") for j in json.loads(mapper.writeValueAsString(jobs))}

@@ -10,7 +10,7 @@ from linkgraph.derive import build_graph, build_vertices, dense_ids, edge_keys
 from linkgraph.io import TRANSCRIPT_SCHEMA
 from linkgraph.synth import micro_transcripts, synth_transcripts, synth_transcripts_pdf
 
-from .conftest import edges_numpy
+from .conftest import edges_numpy, job_descriptions
 
 
 def _edge_set(graph):
@@ -122,6 +122,43 @@ def test_dense_ids_equals_global_window(spark, n_parts, aqe):
             spark.conf.set(k, v)
 
 
+def test_dense_ids_plan_stays_in_the_jvm(spark):
+    """The prefix offsets are a literal array: no leaf of the id plan is a
+    Python RDD and the plan joins nothing.  AQE is off so the executed plan
+    is the whole physical tree."""
+    keys = spark.range(0, 50).select(F.col("id").cast("string").alias("vkey"))
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        ids = dense_ids(keys, "vkey")
+        plan = ids._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    leaves = plan.collectLeaves()
+    text = plan.toString() + "".join(
+        leaves.apply(i).rdd().toDebugString() for i in range(leaves.size())
+    )
+    for node in ("PythonRDD", "applySchemaToPythonRDD", "BroadcastHashJoin"):
+        assert node not in text, node
+    assert sorted(r["vid"] for r in ids.collect()) == list(range(50))
+
+
+def test_build_graph_job_descriptions(spark):
+    """Every job of a cached build_graph names its derive phase, and the
+    caller's job description is restored afterwards."""
+    t = synth_transcripts(spark, n_conversations=30, seed=7)
+    sc = spark.sparkContext
+    before = set(job_descriptions(sc))
+    sc.setJobDescription("caller")
+    try:
+        build_graph(t, cache=True)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    new = [d for j, d in job_descriptions(sc).items() if j not in before]
+    assert set(new) == {"derive:edge_key_counts", "derive:dense_ids"}
+
+
 def test_text_round_trip(tmp_path, spark):
     """Per-turn text equality must survive an engine round-trip."""
     t = synth_transcripts(spark, n_conversations=20, seed=42)
@@ -134,24 +171,33 @@ def test_text_round_trip(tmp_path, spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_golden_dup_self_edges(spark):
-    """dup_self: (A,A,B,A,B) + tool00 everywhere (FIXTURES.md §3)."""
-    g = build_graph(micro_transcripts(spark, "dup_self"))
-    es = _edge_set(g)
-    a, b, tool = ("a", "actor"), ("b", "actor"), ("tool00", "tool")
-    assert (a, a, "turn", 1.0) in es          # self-loop kept in edge table
-    assert (a, b, "turn", 2.0) in es          # duplicate collapsed to w=2
-    assert (b, a, "turn", 1.0) in es
-    assert (a, tool, "tool", 3.0) in es       # A had 3 turns with tool00
-    assert (b, tool, "tool", 2.0) in es
-    assert len(es) == 5
+_A, _B, _C = ("a", "actor"), ("b", "actor"), ("c", "actor")
+_SEARCH_A, _SEARCH_T, _TOOL00 = ("search", "actor"), ("search", "tool"), ("tool00", "tool")
 
 
-def test_golden_tri3_edges(spark):
-    g = build_graph(micro_transcripts(spark, "tri3"))
-    es = _edge_set(g)
-    a, b, c = ("a", "actor"), ("b", "actor"), ("c", "actor")
-    assert es == {(a, b, "turn", 1.0), (b, c, "turn", 1.0), (c, a, "turn", 1.0)}
+_GOLDEN_EDGES = {
+    # (A,A,B,A,B) + tool00 everywhere (FIXTURES.md §3): the self-loop is
+    # kept, a duplicate link collapses to w=2, A had 3 turns with tool00
+    "dup_self": {
+        (_A, _A, "turn", 1.0), (_A, _B, "turn", 2.0), (_B, _A, "turn", 1.0),
+        (_A, _TOOL00, "tool", 3.0), (_B, _TOOL00, "tool", 2.0),
+    },
+    "tri3": {(_A, _B, "turn", 1.0), (_B, _C, "turn", 1.0), (_C, _A, "turn", 1.0)},
+    # an actor and a tool with the same key are two vertices with their
+    # own links and weights
+    "shared_name": {
+        (_SEARCH_A, _SEARCH_A, "turn", 1.0), (_SEARCH_A, _B, "turn", 1.0),
+        (_SEARCH_A, _SEARCH_T, "tool", 2.0), (_B, _SEARCH_T, "tool", 1.0),
+    },
+}
+
+
+@pytest.mark.parametrize("name", sorted(_GOLDEN_EDGES))
+def test_golden_edges(spark, name):
+    want = _GOLDEN_EDGES[name]
+    g = build_graph(micro_transcripts(spark, name))
+    assert _edge_set(g) == want
+    assert g.vertices.count() == len({v for e in want for v in e[:2]})
 
 
 def test_degrees_and_dangling(spark):

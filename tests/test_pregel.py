@@ -26,7 +26,7 @@ from linkgraph.pregel import (
 from linkgraph.ref_single_node import components_ref, lpa_ref, pagerank_ref
 from linkgraph.synth import micro_transcripts, synth_transcripts
 
-from .conftest import edges_numpy
+from .conftest import edges_numpy, job_descriptions
 
 P = 8
 
@@ -339,20 +339,6 @@ def test_run_program_restores_aqe(spark, synth_ctx, prior):
         spark.conf.set(key, saved)
 
 
-def _job_descriptions(sc) -> dict[int, str]:
-    """jobId -> description of every job in the status store, after the
-    listener bus has caught up."""
-    import json
-
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    jvm = sc._jvm  # noqa: SLF001
-    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
-    scala_mod = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
-    mapper.registerModule(getattr(scala_mod, "MODULE$"))
-    jobs = sc._jsc.sc().statusStore().jobsList(jvm.java.util.ArrayList())  # noqa: SLF001
-    return {j["jobId"]: j.get("description") for j in json.loads(mapper.writeValueAsString(jobs))}
-
-
 def test_run_program_job_descriptions(spark, synth_ctx, tmp_path):
     """A checkpointed run is one job per superstep (the prologue's under the
     starting step; the durable writes run inside them, not as jobs of their
@@ -360,7 +346,7 @@ def test_run_program_job_descriptions(spark, synth_ctx, tmp_path):
     description is restored afterwards."""
     _g, ctx = synth_ctx
     sc = spark.sparkContext
-    before = set(_job_descriptions(sc))
+    before = set(job_descriptions(sc))
     sc.setJobDescription("caller")
     try:
         run_program(
@@ -369,7 +355,7 @@ def test_run_program_job_descriptions(spark, synth_ctx, tmp_path):
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.job.description", None)
-    new = sorted(d for j, d in _job_descriptions(sc).items() if j not in before)
+    new = sorted(d for j, d in job_descriptions(sc).items() if j not in before)
     assert new == ["pregel.components:t=0", "pregel.components:t=1", "pregel.components:t=2"]
 
 
@@ -380,7 +366,7 @@ def test_context_build_job_descriptions(spark):
     packed and checkpointed by exactly one job."""
     g = build_graph(synth_transcripts(spark, n_conversations=30, seed=7))
     sc = spark.sparkContext
-    before = set(_job_descriptions(sc))
+    before = set(job_descriptions(sc))
     sc.setJobDescription("caller")
     try:
         ctx = GraphContext.build(g, P, hub_theta=2, hub_floor=0)
@@ -389,7 +375,7 @@ def test_context_build_job_descriptions(spark):
         sc.setLocalProperty("spark.job.description", None)
     ctx.unpersist()
     assert ctx.nnz_hub > 0 and ctx.nnz_uhub > 0
-    new = [d for j, d in _job_descriptions(sc).items() if j not in before]
+    new = [d for j, d in job_descriptions(sc).items() if j not in before]
     assert set(new) == {
         f"context.build:{phase}"
         for phase in (
@@ -398,6 +384,15 @@ def test_context_build_job_descriptions(spark):
     }
     assert new.count("context.build:directed") == 1
     assert new.count("context.build:undirected") == 1
+
+    # at the default hub floor no undirected row of this graph can exceed
+    # the threshold, so the sym phase runs no job and sizes nothing
+    before = set(job_descriptions(sc))
+    ctx = GraphContext.build(g, P, hub_theta=2)
+    ctx.unpersist()
+    new = [d for j, d in job_descriptions(sc).items() if j not in before]
+    assert "context.build:sym" not in new and "context.build:directed" in new
+    assert ctx.nnz_undirected == _expected_contract(spark, g.edges)["und_nnz"]
 
 
 def _expected_contract(spark, edges):

@@ -605,6 +605,7 @@ def test_streaming_ingest_to_warm_pagerank_end_to_end(spark, landing_dirs):
         build_edges,
         build_graph,
         build_vertices,
+        edge_key_counts,
     )
     from linkgraph.incremental import ranks_by_key, warm_pagerank_init
     from linkgraph.pregel import GraphContext, PageRankProgram, run_program
@@ -639,8 +640,9 @@ def test_streaming_ingest_to_warm_pagerank_end_to_end(spark, landing_dirs):
             ekeys = spark.read.parquet(out_dir).select(
                 "src_key", "dst_key", "etype"
             )
-            vertices = build_vertices(ekeys)
-            edges = build_edges(ekeys, vertices)
+            counts = edge_key_counts(ekeys)
+            vertices = build_vertices(counts)
+            edges = build_edges(counts, vertices)
             return GraphTables(
                 vertices=vertices,
                 edges=edges,
